@@ -26,7 +26,7 @@ def latest_snapshot(
     df: DataFrame,
     keys: Sequence[str],
     order_col: str | Column,
-    tiebreakers: Sequence[str] = (),
+    tiebreakers: Sequence[str | Column] = (),
 ) -> DataFrame:
     """Keep, per key group, the single row with the greatest ``order_col``.
 
@@ -35,8 +35,9 @@ def latest_snapshot(
     testing and for replay-stable production output.
     """
     order = [
-        order_col.desc() if isinstance(order_col, Column) else F.col(order_col).desc()
-    ] + [F.col(c).desc() for c in tiebreakers]
+        (c if isinstance(c, Column) else F.col(c)).desc()
+        for c in (order_col, *tiebreakers)
+    ]
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))

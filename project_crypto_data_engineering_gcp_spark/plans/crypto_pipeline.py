@@ -76,15 +76,55 @@ def bronze_to_silver(raw_df: DataFrame, processed_at: str | None = None) -> Data
     return silver_casts(exploded, processed_at)
 
 
-def latest_assets(silver: DataFrame, *, cache: bool = True) -> DataFrame:
+# The latest-row pick is a TOTAL order, so that any grouping of the same
+# rows (the incremental argmax state merged with new batches, or one pass
+# over all of Silver) keeps the same row per asset: latest
+# ``data_referencia`` first; on a tie (the same snapshot landed twice),
+# the later ``data_processamento``; then the remaining values, so that
+# rows which still tie are identical in every Gold column.
+LATEST_TIEBREAKERS = (
+    "data_processamento",
+    "rank",
+    "price_usd",
+    "market_cap_usd",
+    "volume_usd_24hr",
+    "change_percent_24hr",
+    "vwap_24hr",
+    "supply",
+    "max_supply",
+    "symbol",
+    "name",
+    "explorer",
+)
+
+
+def latest_assets(
+    silver: DataFrame, *, prior: DataFrame | None = None, cache: bool = True
+) -> DataFrame:
     """Latest-snapshot-per-asset view (reference W1 `3:67-74`), with the
     timestamp cast to TimestampType (reference `3:62`). Cached by default:
     all four Gold analyses reuse it (fixes the reference's missing-CSE
-    pessimization, SURVEY §4)."""
+    pessimization, SURVEY §4).
+
+    The pick is an argmax, a mergeable aggregate: ``prior`` — an earlier
+    output of this function — folds in as more candidate rows, and
+    ``latest_assets(new, prior=latest_assets(old))`` equals
+    ``latest_assets(old ∪ new)`` whatever the order the rows arrived in
+    (late, re-landed or missing-asset snapshots included), because the
+    pick is a total order (``LATEST_TIEBREAKERS``)."""
     df = silver.withColumn(
         "data_referencia", F.col("data_referencia").cast("timestamp")
     )
-    out = latest_snapshot(df, ["id"], "data_referencia")
+    if prior is not None:
+        # an incremental merge reads one row per asset plus the batches
+        # landed since: one partition, so the window needs no shuffle
+        df = prior.unionByName(df).coalesce(1)
+    tiebreakers = [c for c in LATEST_TIEBREAKERS if c in df.columns]
+    if "tokens" in df.columns:  # maps are not orderable; their JSON is
+        tiebreakers.append(F.to_json("tokens"))
+    # one row per asset: in one partition, the Gold builders' sorts and
+    # totals over it run without an exchange
+    out = latest_snapshot(df, ["id"], "data_referencia", tiebreakers).coalesce(1)
     return out.cache() if cache else out
 
 

@@ -8,6 +8,7 @@ Sink layout (all local-FS/parquet here; the paths are opaque URIs, so
 s3://... works unchanged):
 
   out/silver/assets/dt=YYYY-MM-DD/...   append, partitioned by snapshot date
+  out/gold/_latest/                     latest-row-per-asset state (overwrite)
   out/gold/history/<table>/...          append (reference Delta mode, Q4)
   out/gold/serving/<table>/...          overwrite (reference BigQuery mode)
   out/_ingest_ledger/                   exactly-once file ledger
@@ -15,6 +16,23 @@ s3://... works unchanged):
 Partitioning Silver by ``dt`` fixes the reference's unpartitioned-table
 gap (readme:88 vs 2:65) and buys dynamic partition pruning for every
 date-bounded downstream query.
+
+An hourly cycle costs the new snapshot, not the history:
+
+- Silver: the landing glob is listed on the driver and the ledgered
+  files subtracted; only the new files are parsed. Nothing new returns
+  before any Spark job starts.
+- Gold: latest-per-asset is an argmax, a mergeable aggregate. The
+  ``_latest`` state holds the argmax rows, and each of its commits
+  records the Silver version it covers (``silver_version`` in the commit
+  metadata). A cycle merges that state with only the Silver rows added
+  since — the manifest file-set difference — so late, out-of-order or
+  re-landed snapshots fold in exactly as a full recompute would. With no
+  usable state or diff (first run, Delta, a compacted or vacuumed Silver,
+  a lost ``_latest`` dir) the same code reads all of Silver with no
+  prior state: the full recompute.
+- Each Gold frame is computed once and persisted; the history append
+  and the serving overwrite both read it.
 """
 
 from __future__ import annotations
@@ -24,11 +42,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.hadoop_fs import glob_files
 from ..sources.json_source import read_raw_json
-from ..sources.ledger import filter_new_files, read_ledger, record_ingested
+from ..sources.ledger import filter_new_files, ingested_files, record_ingested
 from ..sources.sinks import (
     formatted,
+    history_snapshot,
     read_history,
+    read_history_added,
     read_table,
     write_history,
 )
@@ -54,6 +75,10 @@ def silver_path(out_dir: str) -> str:
     return os.path.join(out_dir, "silver", "assets")
 
 
+def latest_state_path(out_dir: str) -> str:
+    return os.path.join(out_dir, "gold", "_latest")
+
+
 def run_silver(
     spark: SparkSession,
     landing_glob: str,
@@ -72,34 +97,26 @@ def run_silver(
     silently writing no Silver rows. With ``require_input=False`` an
     unmatched glob is a graceful no-op (0 rows) — the shape a poller
     wants. Already-ledgered files always count as input — a rerun over
-    fully-processed landings stays a no-op either way."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = read_raw_json(spark, landing_glob)
-        empty = raw.isEmpty()
-    except AnalysisException as e:  # Spark raises PATH_NOT_FOUND on 0-match globs
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        raw, empty = None, True
-    if empty:
+    fully-processed landings stays a no-op either way, and starts no
+    Spark job (listing and ledger are driver-side metadata)."""
+    landed = glob_files(spark, landing_glob)
+    if not landed:
         if require_input:
             raise FileNotFoundError(
                 f"landing glob {landing_glob!r} matched no snapshot files "
                 "(reference S10 validation gate; pass require_input=False "
                 "to allow an empty landing)"
             )
-        if raw is None:
-            return 0
-    ledger = read_ledger(spark, out_dir)
-    fresh = filter_new_files(raw, ledger)
+        return 0
+    new = filter_new_files(landed, ingested_files(spark, out_dir))
+    if not new:
+        return 0
 
-    # quirk Q3: data_referencia is a string; dt partition derives from it
-    silver = bronze_to_silver(fresh, processed_at=processed_at).withColumn(
-        "dt", F.substring("data_referencia", 1, 10)
-    )
-    silver.cache()
-    n = silver.count()
+    raw = read_raw_json(spark, landing_glob, new)
+    rows_per_file: dict[str, int] = {}
+    for f, size in raw.select("_source_file", F.size("data")).collect():
+        rows_per_file[f] = rows_per_file.get(f, 0) + max(size or 0, 0)
+    n = sum(rows_per_file.values())
     if n:
         # ONE atomic commit per ingest batch (Delta transaction when
         # delta-spark is present, txlog manifest otherwise): readers
@@ -113,8 +130,6 @@ def run_silver(
         # documented: if NEW files also land before the rerun, the
         # batch identity changes and the crashed batch's rows duplicate
         # — closing that needs the ledger folded into the same commit.
-        counts = silver.groupBy("_source_file").agg(F.count(F.lit(1)).alias("n_rows"))
-        batch_files = sorted(r[0] for r in counts.select("_source_file").collect())
         # Batch identity lives in the APP ID, not the version: Delta's
         # txnAppId/txnVersion contract skips any write whose version is
         # <= the last recorded one per appId, so hash-derived versions
@@ -123,39 +138,76 @@ def run_silver(
         # appId (like stream_silver's stream-identity appId) makes a
         # replay an exact (appId, 0) repeat — skipped — while every new
         # batch gets a fresh appId with no prior version — applied.
-        digest = hashlib.sha256("\n".join(batch_files).encode()).hexdigest()
+        digest = hashlib.sha256("\n".join(sorted(rows_per_file)).encode()).hexdigest()
+        # quirk Q3: data_referencia is a string; dt partition derives from it
+        silver = bronze_to_silver(raw, processed_at).withColumn(
+            "dt", F.substring("data_referencia", 1, 10)
+        )
         write_history(
             silver.drop("_source_file"),
             silver_path(out_dir),
             partition_by=["dt"],
             txn=(f"run_silver:{digest}", 0),
         )
-        record_ingested(out_dir, counts)
-    silver.unpersist()
+        record_ingested(out_dir, rows_per_file.items())
     return n
+
+
+def _silver_since_state(
+    spark: SparkSession, out_dir: str
+) -> tuple[DataFrame, DataFrame | None, int | None]:
+    """(Silver rows the ``_latest`` state has not seen, that state or
+    None, the Silver version they reach). Both tables are pinned to the
+    versions read here, so a concurrent commit cannot tear the pair."""
+    spath, state_path = silver_path(out_dir), latest_state_path(out_dir)
+    silver_snap = history_snapshot(spath)
+    version = silver_snap.version if silver_snap else None
+    state = history_snapshot(state_path)
+    covered = state.metadata.get("silver_version") if state else None
+    added = None
+    if covered is not None and version is not None:
+        added = read_history_added(spark, spath, covered, version)
+    if added is None:  # no usable state or diff: the full recompute
+        return read_history(spark, spath, version=version), None, version
+    return added, read_history(spark, state_path, version=state.version), version
 
 
 def run_gold(
     spark: SparkSession, out_dir: str, analysis_at: str | None = None
 ) -> dict[str, DataFrame]:
-    """Silver -> Gold: latest-snapshot view (cached once, reused by all
-    four analyses — fixes the reference's recompute pessimization) and the
-    dual history/serving sinks (quirk Q4)."""
-    silver = read_history(spark, silver_path(out_dir)).drop("dt")
-    latest = latest_assets(silver)
-    gold: dict[str, DataFrame] = {}
-    for name, build in GOLD_BUILDERS.items():
-        df = build(latest, analysis_at=analysis_at)
+    """Silver -> Gold: the latest-snapshot view (the ``_latest`` argmax
+    state merged with the Silver rows added since it was written), then
+    the dual history/serving sinks (quirk Q4).
+
+    Commit order: the new state first, then the Gold tables. A crash in
+    between leaves a state that already covers the new Silver rows; the
+    rerun finds nothing added and rebuilds Gold from the state alone."""
+    rows, prior, version = _silver_since_state(spark, out_dir)
+    latest = latest_assets(rows.drop("dt"), prior=prior)
+    frames = [latest]
+    try:
         write_history(
-            df,
-            os.path.join(out_dir, "gold", "history", name),
-            merge_schema=True,
+            latest,
+            latest_state_path(out_dir),
+            mode="overwrite",
+            metadata={"silver_version": version},
         )
-        formatted(df.write.mode("overwrite")).save(
-            os.path.join(out_dir, "gold", "serving", name)
-        )
-        gold[name] = df
-    latest.unpersist()
+        gold: dict[str, DataFrame] = {}
+        for name, build in GOLD_BUILDERS.items():
+            df = build(latest, analysis_at=analysis_at).persist()
+            frames.append(df)
+            write_history(
+                df,
+                os.path.join(out_dir, "gold", "history", name),
+                merge_schema=True,
+            )
+            formatted(df.write.mode("overwrite")).save(
+                os.path.join(out_dir, "gold", "serving", name)
+            )
+            gold[name] = df
+    finally:
+        for df in frames:
+            df.unpersist()
     return gold
 
 

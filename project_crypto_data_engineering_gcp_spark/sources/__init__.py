@@ -7,7 +7,7 @@ from .json_source import (
     write_raw_snapshot,
 )
 from .http_source import default_fetcher, fixture_fetcher, ingest_snapshot
-from .ledger import filter_new_files, read_ledger, record_ingested
+from .ledger import filter_new_files, ingested_files, record_ingested
 from .sinks import (
     formatted,
     history_format,
@@ -29,7 +29,7 @@ __all__ = [
     "fixture_fetcher",
     "ingest_snapshot",
     "filter_new_files",
-    "read_ledger",
+    "ingested_files",
     "record_ingested",
     "formatted",
     "history_format",

@@ -73,10 +73,15 @@ def write_raw_snapshot(payload: dict, landing_dir: str) -> str:
     return path
 
 
-def read_raw_json(spark: SparkSession, glob: str) -> DataFrame:
-    """Multiline-JSON globbed scan with explicit schema (reference S4
-    `2:37-41`, minus the inference pass). One row per snapshot document;
-    ``input_file_name`` is exposed for the ingest ledger.
+def read_raw_json(
+    spark: SparkSession, glob: str, files: list[str] | None = None
+) -> DataFrame:
+    """Multiline-JSON scan with explicit schema (reference S4 `2:37-41`,
+    minus the inference pass). One row per snapshot document;
+    ``input_file_name`` is exposed for the ingest ledger. ``files``
+    (a subset of the glob's matches, as :func:`hadoop_fs.glob_files`
+    lists them) narrows the scan to just those files — the
+    not-yet-ingested ones.
 
     PERMISSIVE parsing: a malformed document becomes one row with only
     ``_corrupt_record`` set — it is dropped here (and quarantined by
@@ -84,15 +89,11 @@ def read_raw_json(spark: SparkSession, glob: str) -> DataFrame:
     one bad upload can never wedge ingestion (the reference would throw)."""
     from pyspark.sql import functions as F
 
-    df = _read_permissive(spark, glob)
+    df = _read_permissive(spark, [glob] if files is None else files)
     return df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
 
 
-def _read_permissive(spark: SparkSession, glob: str) -> DataFrame:
-    # Spark refuses to filter on the corrupt-record column straight off a
-    # JSON scan (SPARK-26243-adjacent restriction); caching the parsed
-    # frame is the documented unlock. Landing batches are small by design
-    # (one ~65 KB doc per snapshot), so the cache cost is negligible.
+def _read_permissive(spark: SparkSession, paths: list[str]) -> DataFrame:
     from pyspark.sql import functions as F
 
     return (
@@ -100,19 +101,27 @@ def _read_permissive(spark: SparkSession, glob: str) -> DataFrame:
         .option("multiline", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(glob)
+        .json(paths)
         .withColumn("_source_file", F.input_file_name())
-        .cache()
     )
 
 
 def read_corrupt_json(spark: SparkSession, glob: str) -> DataFrame:
     """The quarantine view: source file + raw text of every document the
-    PERMISSIVE reader could not parse (for alerting / replay)."""
+    PERMISSIVE reader could not parse (for alerting / replay).
+
+    Spark refuses a query that reads ONLY the corrupt-record column off
+    a JSON scan; caching the parsed frame is the documented unlock. The
+    view is small (bad documents only), so it is collected eagerly and
+    the cache released before returning — nothing stays persisted."""
     from pyspark.sql import functions as F
 
-    return (
-        _read_permissive(spark, glob)
-        .filter(F.col("_corrupt_record").isNotNull())
-        .select("_source_file", "_corrupt_record")
-    )
+    parsed = _read_permissive(spark, [glob]).cache()
+    try:
+        bad = parsed.filter(F.col("_corrupt_record").isNotNull()).select(
+            "_source_file", "_corrupt_record"
+        )
+        schema, rows = bad.schema, bad.collect()
+    finally:
+        parsed.unpersist()
+    return spark.createDataFrame(rows, schema)

@@ -20,6 +20,7 @@ without a code change.
 
 from __future__ import annotations
 
+import json
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
@@ -61,9 +62,14 @@ def write_history(
     partition_by: list[str] | None = None,
     merge_schema: bool = False,
     txn: tuple[str, int] | None = None,
+    mode: str = "append",
+    metadata: dict | None = None,
 ) -> None:
     """Append ``df`` to an ACID history table: one atomic commit per
-    call (Delta transaction or txlog manifest). ``merge_schema`` allows
+    call (Delta transaction or txlog manifest); ``mode="overwrite"``
+    replaces the live rows in that one commit instead. ``metadata`` is
+    stored with the commit (Delta ``userMetadata``, txlog manifest; see
+    :func:`history_snapshot`). ``merge_schema`` allows
     schema evolution across appends (reference S7; under txlog the
     union schema is resolved at read instead of write, same observable
     contract). ``txn=(app_id, version)`` makes the append IDEMPOTENT —
@@ -71,7 +77,9 @@ def write_history(
     (Delta's txnAppId/txnVersion; required for exactly-once foreachBatch
     sinks, whose checkpoint ack can crash after the commit)."""
     if history_format() == "delta":  # pragma: no cover - delta absent here
-        writer = df.write.format("delta").mode("append")
+        writer = df.write.format("delta").mode(mode)
+        if metadata:
+            writer = writer.option("userMetadata", json.dumps(metadata))
         if merge_schema:
             writer = writer.option("mergeSchema", "true")
         if partition_by:
@@ -82,7 +90,34 @@ def write_history(
             )
         writer.save(path)
     else:
-        tx_table.commit(df, path, "append", partition_by=partition_by, txn=txn)
+        tx_table.commit(
+            df, path, mode, partition_by=partition_by, txn=txn, metadata=metadata
+        )
+
+
+def history_snapshot(path: str) -> tx_table.TxSnapshot | None:
+    """The latest committed version of a txlog history table — its
+    version number and commit metadata — or None when the table has no
+    commit yet. Also None under Delta: the runner then takes the
+    version-free path (whole-table reads)."""
+    if history_format() == "delta":  # pragma: no cover - delta absent here
+        return None
+    try:
+        return tx_table.snapshot(path)
+    except FileNotFoundError:
+        return None
+
+
+def read_history_added(
+    spark: SparkSession, path: str, since: int, version: int | None = None
+) -> DataFrame | None:
+    """Rows committed to a history table after version ``since`` (up to
+    ``version``), read as one scan per added commit — or None when no
+    version diff exists (Delta here; a vacuumed, compacted or
+    overwritten txlog base) and the caller must read the whole table."""
+    if history_format() == "delta":  # pragma: no cover - delta absent here
+        return None
+    return tx_table.read_added(spark, path, since, version)
 
 
 def read_history(

@@ -41,9 +41,9 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
@@ -60,6 +60,13 @@ class TxSnapshot:
     mode: str
     files: tuple[str, ...]
     partition_by: tuple[str, ...] = ()
+    # caller-supplied facts about the commit (Delta's commitInfo
+    # userMetadata), e.g. which upstream version a derived table covers
+    metadata: dict = field(default_factory=dict, hash=False)
+    # the committed frame's Spark schema (JSON), as Delta's log keeps it:
+    # reads hand it to the scan instead of inferring it from a footer,
+    # which costs a Spark job per scan
+    schema: str | None = None
 
 
 def _log_path(table: str) -> str:
@@ -101,6 +108,8 @@ def snapshot(table: str, version: int | None = None) -> TxSnapshot:
         mode=m["mode"],
         files=tuple(m["files"]),
         partition_by=tuple(m.get("partition_by") or ()),
+        metadata=m.get("metadata") or {},
+        schema=m.get("schema"),
     )
 
 
@@ -131,7 +140,8 @@ def read(
 
     ``merge_schema=True`` resolves the union schema across commits
     (reference S7 semantics: Delta merges at write, parquet/txlog at
-    read — older rows surface NULL for columns added later).
+    read — older rows surface NULL for columns added later). Otherwise
+    every file is read with the schema the pinned manifest records.
 
     Partitioned tables read as one scan PER staging directory (each
     needs its own ``basePath`` to recover the hive-style partition
@@ -143,24 +153,72 @@ def read(
     pinned in tests/test_tx_table.py)."""
     table = os.path.realpath(table)
     snap = snapshot(table, version)
+    return _read_files(spark, table, snap, snap.files, merge_schema)
+
+
+def read_added(
+    spark: SparkSession, table: str, since: int, version: int | None = None
+) -> DataFrame | None:
+    """The rows committed after version ``since`` up to ``version`` (the
+    latest by default): the manifest file-set difference, read as one
+    scan per added stage — an append's cost, whatever the history.
+
+    Returns None when the difference does not describe the change: the
+    ``since`` manifest is gone (vacuumed, or the table was rebuilt), or
+    a later commit dropped files (an overwrite or :func:`compact`). The
+    caller then reads the whole snapshot instead. Nothing committed
+    since reads as an empty frame of the table's schema."""
+    table = os.path.realpath(table)
+    snap = snapshot(table, version)
+    try:
+        base = set(snapshot(table, since).files)
+    except FileNotFoundError:
+        return None
+    if not base.issubset(snap.files):
+        return None
+    added = [f for f in snap.files if f not in base]
+    if not added:
+        return _read_files(spark, table, snap, snap.files[:1]).limit(0)
+    return _read_files(spark, table, snap, added)
+
+
+def _read_files(
+    spark: SparkSession,
+    table: str,
+    snap: TxSnapshot,
+    files: list[str] | tuple[str, ...],
+    merge_schema: bool = False,
+) -> DataFrame:
+    """Scan ``files`` of ``snap``'s table with its schema and partitioning
+    (the schema is inferred when merging, or for manifests without one)."""
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    elif snap.schema is not None:
+        reader = reader.schema(T.StructType.fromJson(json.loads(snap.schema)))
     if not snap.partition_by:
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*snap.files)
+        return reader.parquet(*files)
     groups: dict[str, list[str]] = {}
-    for f in snap.files:
+    for f in files:
         groups.setdefault(_stage_of(table, f), []).append(f)
     out: DataFrame | None = None
     for stage in sorted(groups):
-        part = spark.read.option("basePath", stage).parquet(*groups[stage])
+        part = reader.option("basePath", stage).parquet(*groups[stage])
         out = (
             part
             if out is None
             else out.unionByName(part, allowMissingColumns=merge_schema)
         )
-    assert out is not None  # snapshot always has >= 1 file
+    assert out is not None  # callers pass >= 1 file
     return out
+
+
+def _read_schema(schema: T.StructType, pby: tuple[str, ...]) -> str:
+    """``schema`` in the column order a scan of the written files yields:
+    data columns first, then the partition columns (JSON)."""
+    by_name = {f.name: f for f in schema.fields}
+    fields = [f for f in schema.fields if f.name not in pby] + [by_name[c] for c in pby]
+    return T.StructType(fields).json()
 
 
 def _parquet_files(directory: str) -> list[str]:
@@ -399,6 +457,7 @@ def commit(
     max_retries: int = 5,
     expected_base_version: int | None = None,
     txn: tuple[str, int] | None = None,
+    metadata: dict | None = None,
 ) -> TxSnapshot:
     """Write ``df`` as a new atomic version of ``table``.
 
@@ -411,6 +470,9 @@ def commit(
     PartitionFilters pruning — same contract as Delta's partitioned
     tables). It must be consistent across every commit to a table; the
     manifest records it and a mismatch raises ValueError.
+
+    ``metadata`` (a JSON-able dict) is stored in the manifest and read
+    back as :attr:`TxSnapshot.metadata` of this version.
 
     Protocol per attempt: stage data under a version-private directory,
     write a temp manifest, ``os.link`` it into the log — the atomic
@@ -504,9 +566,12 @@ def commit(
             "mode": mode,
             "files": [*base, *files],
             "partition_by": list(pby),
+            "schema": _read_schema(df.schema, pby),
         }
         if txn is not None:
             manifest["txn"] = [txn[0], int(txn[1])]
+        if metadata:
+            manifest["metadata"] = metadata
         # writer-unique temp name (pid + per-process seq): two racing
         # writers must never share the pre-commit manifest path either
         tmp = os.path.join(
@@ -631,6 +696,8 @@ def commit(
             mode=mode,
             files=tuple(manifest["files"]),
             partition_by=pby,
+            metadata=dict(metadata or {}),
+            schema=manifest["schema"],
         )
     raise last_err if last_err else RuntimeError("commit failed")
 
@@ -656,6 +723,7 @@ def compact(spark: SparkSession, table: str) -> TxSnapshot:
         "overwrite",
         partition_by=list(snap.partition_by) or None,
         expected_base_version=snap.version,
+        metadata=snap.metadata,
     )
 
 

@@ -42,7 +42,9 @@ def pytest_collection_modifyitems(config, items):
             moved.append(item)
         else:
             keep.append(item)
-    if moved:
+    # a run that targets only the child files (for example
+    # `pytest tests/test_streaming.py`) runs them here, in this JVM
+    if moved and keep:
         items[:] = keep
         config.hook.pytest_deselected(items=moved)
 

@@ -355,3 +355,245 @@ def test_gold_history_schema_evolution(spark, landing, tmp_path):
     assert "risk_score" in merged.columns
     assert merged.filter(F.col("risk_score").isNull()).count() == N_ASSETS
     assert merged.filter(F.col("risk_score").isNotNull()).count() == N_ASSETS
+
+
+# ------------------------------------------------- incremental (O(new)) cycle
+
+
+def _land(landing: str, ts_ms: int, *, drop: str | None = None,
+          bump: float = 0.0, name: str | None = None) -> str:
+    """Land one fixture-shaped snapshot at ``ts_ms``; ``drop`` leaves an
+    asset out, ``bump`` shifts every price, ``name`` overrides the
+    replay-stable file name (a re-landing)."""
+    import json
+
+    from project_crypto_data_engineering_gcp_spark.sources.json_source import (
+        write_raw_snapshot,
+    )
+
+    from .fixtures_crypto import snapshot_payload
+
+    payload = snapshot_payload(0)
+    payload["timestamp"] = ts_ms
+    payload["data"] = [a for a in payload["data"] if a["id"] != drop]
+    for a in payload["data"]:
+        a["priceUsd"] = f"{float(a['priceUsd']) + bump:.8f}"
+    if name is None:
+        return write_raw_snapshot(payload, landing)
+    path = os.path.join(landing, name)
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump(payload, f)
+    return path
+
+
+def _same_rows(got, want, name: str) -> None:
+    # map columns are not comparable in set operations; their JSON is
+    def canon(df):
+        return df.withColumn("tokens", F.to_json("tokens")) if "tokens" in df.columns else df
+
+    got, want = canon(got), canon(want)
+    want = want.select(got.columns)
+    assert got.count() == want.count(), name
+    assert got.exceptAll(want).count() == 0, name
+    assert want.exceptAll(got).count() == 0, name
+
+
+def _assert_incremental_equals_full(spark, out: str) -> None:
+    """The ``_latest`` state and the four serving Gold tables equal a
+    full recompute over all of Silver."""
+    from project_crypto_data_engineering_gcp_spark.plans.runner import (
+        GOLD_BUILDERS,
+        latest_state_path,
+        read_silver,
+    )
+    from project_crypto_data_engineering_gcp_spark.sources.sinks import (
+        read_history,
+        read_table,
+    )
+
+    full = latest_assets(read_silver(spark, out).drop("dt"), cache=False)
+    _same_rows(read_history(spark, latest_state_path(out)), full, "_latest")
+    for name, build in GOLD_BUILDERS.items():
+        serving = read_table(spark, os.path.join(out, "gold", "serving", name))
+        _same_rows(serving, build(full, analysis_at=ANALYSIS_AT), name)
+
+
+def test_incremental_gold_equals_full_recompute(spark, tmp_path, monkeypatch):
+    """Differential gate of the incremental Gold: after every cycle the
+    argmax state and the serving Gold equal a from-scratch recompute —
+    through a first run, a late snapshot, a missing asset, a re-landing
+    at the same timestamp, a Silver compaction, a lost state dir and a
+    crash between the state commit and the Gold commits."""
+    import shutil
+
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    hour = 3_600_000
+    t0 = SNAPSHOT_TS_MS[0]
+    merged_prior = []
+    real_latest = runner.latest_assets
+
+    def spy_latest(rows, **kw):
+        merged_prior.append(kw.get("prior") is not None)
+        return real_latest(rows, **kw)
+
+    monkeypatch.setattr(runner, "latest_assets", spy_latest)
+
+    def cycle(k: int) -> None:
+        run_silver(spark, glob, out, processed_at=f"2026-01-01 00:00:{k:02d}")
+        run_gold(spark, out, analysis_at=ANALYSIS_AT)
+        _assert_incremental_equals_full(spark, out)
+
+    # 1. first run, no state: two snapshots, one hour missing in between
+    _land(landing, t0)
+    _land(landing, t0 + 2 * hour)
+    cycle(1)
+    # 2. the missing hour lands late, older than the state's rows
+    _land(landing, t0 + hour, bump=5.0)
+    cycle(2)
+    # 3. the newest snapshot lacks one asset: its older row stays latest
+    _land(landing, t0 + 3 * hour, drop="asset-007", bump=1.0)
+    cycle(3)
+    # 4. the same timestamp re-landed under a new name, other values
+    _land(landing, t0 + 3 * hour, drop="asset-011", bump=2.0,
+          name="coincap_data_relanded.json")
+    cycle(4)
+    assert merged_prior == [False, True, True, True]
+    # ...and a tie on data_referencia goes to the later ingest (asset-011
+    # is absent from the re-landing, so its first landing stays latest)
+    state = runner.read_history(spark, runner.latest_state_path(out))
+    relanded = state.filter(F.col("data_referencia") == F.lit("2025-05-24 06:08:49"))
+    picked = dict(relanded.select("id", "data_processamento").collect())
+    assert picked.pop("asset-011") == "2026-01-01 00:00:03"
+    assert set(picked.values()) == {"2026-01-01 00:00:04"}
+    # 5. Silver compacted: no file-set diff, so a full recompute
+    tx_table.compact(spark, runner.silver_path(out))
+    _land(landing, t0 + 4 * hour)
+    cycle(5)
+    # 6. the state dir is lost: rebuilt from all of Silver
+    shutil.rmtree(runner.latest_state_path(out))
+    cycle(6)
+    assert merged_prior[4:] == [False, False]
+    # 7. crash after the state commit, before the Gold commits; rerun
+    real_write = runner.write_history
+
+    def crash_on_gold(df, path, **kw):
+        if os.sep + "history" + os.sep in path:
+            raise OSError("simulated crash before the Gold commits")
+        return real_write(df, path, **kw)
+
+    _land(landing, t0 + 5 * hour, bump=3.0)
+    run_silver(spark, glob, out, processed_at="2026-01-01 00:00:07")
+    monkeypatch.setattr(runner, "write_history", crash_on_gold)
+    with pytest.raises(OSError, match="simulated crash"):
+        run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    monkeypatch.setattr(runner, "write_history", real_write)
+    run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    _assert_incremental_equals_full(spark, out)
+    assert merged_prior[6:] == [True, True]
+
+
+def test_cycle_parses_only_the_new_landing(spark, tmp_path, monkeypatch):
+    """O(new) Silver: with history already ingested, the parsed frame of
+    a cycle scans exactly the one new file."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources.hadoop_fs import as_path
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    write_fixture_landing(landing, n_snapshots=2)
+    run_silver(spark, glob, out)
+    new = _land(landing, SNAPSHOT_TS_MS[2])
+
+    parsed = []
+    real = runner.read_raw_json
+
+    def spy(*args, **kwargs):
+        parsed.append(real(*args, **kwargs))
+        return parsed[-1]
+
+    monkeypatch.setattr(runner, "read_raw_json", spy)
+    assert run_silver(spark, glob, out) == N_ASSETS
+    assert [as_path(f) for f in parsed[0].inputFiles()] == [f"file:{new}"]
+
+
+def test_ledgered_rerun_starts_no_spark_job(spark, tmp_path):
+    """Listing and ledger are driver-side: a rerun that finds nothing new
+    returns before any Spark job (the status tracker sees none), while a
+    run with a new file does start jobs under the same check."""
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    write_fixture_landing(landing, n_snapshots=2)
+    sc = spark.sparkContext
+
+    def jobs_of(group: str, fn) -> tuple[int, list[int]]:
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    n, jobs = jobs_of("ingest-new", lambda: run_silver(spark, glob, out))
+    assert n == 2 * N_ASSETS and jobs
+    n, jobs = jobs_of("ingest-rerun", lambda: run_silver(spark, glob, out))
+    assert n == 0 and jobs == []
+
+
+def test_run_gold_reads_only_the_last_silver_commit(spark, tmp_path, monkeypatch):
+    """O(new) Gold: after K cycles, the Silver rows run_gold feeds the
+    argmax come from exactly the files the last Silver commit added."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+    from project_crypto_data_engineering_gcp_spark.sources.hadoop_fs import as_path
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    inputs = []
+    real_latest = runner.latest_assets
+
+    def spy_latest(rows, **kw):
+        inputs.append(rows)
+        return real_latest(rows, **kw)
+
+    monkeypatch.setattr(runner, "latest_assets", spy_latest)
+    for k in range(4):
+        _land(landing, SNAPSHOT_TS_MS[0] + k * 3_600_000)
+        run_silver(spark, glob, out)
+        run_gold(spark, out, analysis_at=ANALYSIS_AT)
+
+    spath = runner.silver_path(out)
+    head = tx_table.snapshot(spath)
+    added = set(head.files) - set(tx_table.snapshot(spath, head.version - 1).files)
+    assert {as_path(f) for f in inputs[-1].inputFiles()} == {f"file:{f}" for f in added}
+
+
+def test_cycles_leave_no_persisted_frames(spark, tmp_path, monkeypatch):
+    """Each cycle releases every frame it persists — the parsed batch,
+    the latest view and the four Gold frames — on the error path too."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    for k in range(3):
+        _land(landing, SNAPSHOT_TS_MS[0] + k * 3_600_000)
+        run_silver(spark, glob, out)
+        run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    assert persisted().size() == before
+
+    def crash(*args, **kwargs):
+        raise OSError("simulated sink failure")
+
+    _land(landing, SNAPSHOT_TS_MS[0] + 3 * 3_600_000)
+    monkeypatch.setattr(runner, "write_history", crash)
+    with pytest.raises(OSError):
+        run_silver(spark, glob, out)
+    with pytest.raises(OSError):
+        run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    assert persisted().size() == before

@@ -831,9 +831,10 @@ def test_bootstrap_ci_shuffle_is_replica_bounded(spark):
     """a23_bootstrap_ci (r13 wide form): NO row fan-out — replica
     membership is computed as conditional aggregates inside ONE
     map-combinable groupBy (partial HashAggregate before the exchange;
-    shuffle = n_groups rows x 64 columns), the tiny wide frame is
-    unpivoted with stack(), and the order-statistic window runs over
-    replica-count-row partitions. No explode, no cartesian anywhere."""
+    shuffle = n_groups rows x 96 columns, 2 x _BOOT_REPLICAS), the
+    tiny wide frame is unpivoted with stack(), and the order-statistic
+    window runs over replica-count-row partitions. No explode, no
+    cartesian anywhere."""
     plan = plan_of(QUERIES["a23_bootstrap_ci"].fn(spark, SF_ORACLE))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
