@@ -8,14 +8,16 @@ designed for 100 TB scale.
 
 Layout:
     session      SparkSession factory with scale-aware defaults
-    sources/     readers/writers (JSON envelope ingest, parquet tables, ledger)
+    sources/     readers/writers (JSON envelope ingest, parquet and txlog
+                 tables, the Silver ingest record)
     operators/   reusable DataFrame-level operators (argmax dedup, top-k,
                  share-of-total, as-of join, minhash/simhash dedup, ANN)
     functions/   column-level expression helpers (cross-engine hashing,
                  exact decimal aggregation, text & vector math)
     plans/       applications: the crypto medallion pipeline and the
                  oracle-checked query corpus over the TPC-H-ish testdata
-    streaming/   Structured Streaming incremental mode
+    streaming/   Structured Streaming operators (windowed rollups,
+                 sessions, stream joins, streaming dedup)
 """
 
 __version__ = "0.1.0"

@@ -8,9 +8,11 @@ Dataproc batch submissions -> BigQuery SQL. Here the same lifecycle is:
     python -m project_crypto_data_engineering_gcp_spark stream  --landing DIR --out DIR
     python -m project_crypto_data_engineering_gcp_spark dashboard --out DIR [-n 20]
 
-`run` = batch medallion (ledger-gated Silver append -> four Gold tables,
-dual history/serving sinks -> dashboard row count). `stream` = the same
-through the checkpointed AvailableNow streaming path. `ingest` fetches
+`run` = batch medallion (Silver append of the files the Silver ingest
+record lacks -> four Gold tables, dual history/serving sinks -> dashboard
+row count); it fails on an empty landing. `stream` = the poller's
+increment: the same Silver append, allowed to find nothing, then the
+Gold rebuild only when rows were appended. `ingest` fetches
 one snapshot (CoinCap by default, deterministic fixture with --fixture)
 into the landing dir.
 """
@@ -78,7 +80,7 @@ def _build_parser() -> argparse.ArgumentParser:
         metavar="H",
         help="with --tx --vacuum-keep: protect staging dirs, tmp manifests,"
         " and committed versions younger than H hours (in-flight commits,"
-        " recent time travel, streaming txn markers). Lower only when no"
+        " recent time travel). Lower only when no"
         " writer can be live.",
     )
     k.add_argument(
@@ -203,9 +205,13 @@ def main(argv: list[str] | None = None) -> int:
             dash = run_pipeline(spark, f"{args.landing}/coincap_data_*.json", args.out)
             print(f"dashboard rows: {dash.count()}")
         elif args.cmd == "stream":
-            from .streaming.incremental import stream_pipeline_available_now
+            from .plans.runner import run_gold, run_silver
 
-            rows = stream_pipeline_available_now(spark, args.landing, args.out)
+            rows = run_silver(
+                spark, f"{args.landing}/coincap_data_*.json", args.out, require_input=False
+            )
+            if rows:
+                run_gold(spark, args.out)
             print(f"silver rows appended: {rows}")
         elif args.cmd == "dashboard":
             from .plans.runner import run_dashboard

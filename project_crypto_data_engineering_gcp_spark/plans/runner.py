@@ -11,7 +11,6 @@ s3://... works unchanged):
   out/gold/_latest/                     latest-row-per-asset state (overwrite)
   out/gold/history/<table>/...          append (reference Delta mode, Q4)
   out/gold/serving/<table>/...          overwrite (reference BigQuery mode)
-  out/_ingest_ledger/                   exactly-once file ledger
 
 Partitioning Silver by ``dt`` fixes the reference's unpartitioned-table
 gap (readme:88 vs 2:65) and buys dynamic partition pruning for every
@@ -19,9 +18,10 @@ date-bounded downstream query.
 
 An hourly cycle costs the new snapshot, not the history:
 
-- Silver: the landing glob is listed on the driver and the ledgered
-  files subtracted; only the new files are parsed. Nothing new returns
-  before any Spark job starts.
+- Silver: the landing glob is listed on the driver and the files the
+  latest Silver commit records (its ingest record, ``sources/ledger.py``)
+  subtracted; only the new files are parsed. Nothing new returns before
+  any Spark job starts.
 - Gold: latest-per-asset is an argmax, a mergeable aggregate. The
   ``_latest`` state holds the argmax rows, and each of its commits
   records the Silver version it covers (``silver_version`` in the commit
@@ -37,14 +37,13 @@ An hourly cycle costs the new snapshot, not the history:
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.hadoop_fs import glob_files
+from ..sources.hadoop_fs import as_path, glob_files
 from ..sources.json_source import read_raw_json
-from ..sources.ledger import filter_new_files, ingested_files, record_ingested
+from ..sources.ledger import filter_new_files, record_ingested, recorded_files
 from ..sources.sinks import (
     formatted,
     history_snapshot,
@@ -87,18 +86,32 @@ def run_silver(
     *,
     require_input: bool = False,
 ) -> int:
-    """Bronze -> Silver increment: ingest files not yet in the ledger,
-    append to the partitioned Silver table, record them. Returns rows
-    appended.
+    """Bronze -> Silver increment: parse the landed files the Silver
+    ingest record lacks and append their rows, together with the grown
+    record, in ONE atomic commit (Delta transaction or txlog manifest;
+    every batch is a time-travelable version, reference S5 `2:65`).
+    Returns rows appended.
+
+    Exactly-once: the commit is pinned to the Silver version the record
+    was read from, and nothing is written after it, so a crash at any
+    point neither loses nor duplicates rows. A concurrent writer that
+    commits first makes this commit fail with nothing visible; the next
+    run ingests whatever is still missing. New files whose document does
+    not parse are recorded as quarantined in the same commit, so they
+    are parsed once (``read_corrupt_json`` still lists them); a batch
+    with no good rows commits an empty append that carries the record.
+
+    A Silver table with commits but no record (an older release wrote
+    it) raises instead of re-ingesting every landed file into it.
 
     ``require_input=True`` replays the reference's landing-validation
     gate (S10, the DAG's poll-for-files sensor `4-dag:53-81`): fail
     loudly when the glob matches NO snapshot files at all, instead of
     silently writing no Silver rows. With ``require_input=False`` an
     unmatched glob is a graceful no-op (0 rows) — the shape a poller
-    wants. Already-ledgered files always count as input — a rerun over
+    wants. Already-recorded files always count as input — a rerun over
     fully-processed landings stays a no-op either way, and starts no
-    Spark job (listing and ledger are driver-side metadata)."""
+    Spark job (listing and record are driver-side metadata)."""
     landed = glob_files(spark, landing_glob)
     if not landed:
         if require_input:
@@ -108,48 +121,39 @@ def run_silver(
                 "to allow an empty landing)"
             )
         return 0
-    new = filter_new_files(landed, ingested_files(spark, out_dir))
+    spath = silver_path(out_dir)
+    snap = history_snapshot(spath)
+    prior = snap.metadata if snap else {}
+    seen = recorded_files(prior) if snap else frozenset()
+    if seen is None:
+        raise ValueError(
+            f"Silver table {spath!r} has commits but no ingest record (written"
+            " by an older release?); refusing to re-ingest every landed file"
+            " into it — migrate it or start a new output directory"
+        )
+    new = filter_new_files(landed, seen)
     if not new:
         return 0
 
     raw = read_raw_json(spark, landing_glob, new)
-    rows_per_file: dict[str, int] = {}
+    parsed: set[str] = set()
+    n = 0
     for f, size in raw.select("_source_file", F.size("data")).collect():
-        rows_per_file[f] = rows_per_file.get(f, 0) + max(size or 0, 0)
-    n = sum(rows_per_file.values())
-    if n:
-        # ONE atomic commit per ingest batch (Delta transaction when
-        # delta-spark is present, txlog manifest otherwise): readers
-        # never observe a half-appended Silver, and every batch is a
-        # time-travelable version (reference S5, `2:65`). The txn
-        # marker makes the append IDEMPOTENT on the batch identity (the
-        # sorted new-source-file list): a crash between the commit and
-        # record_ingested re-runs the same batch on restart, and
-        # without the marker it would append the same rows twice
-        # (ADVICE r8; mirrors stream_silver_available_now). Residual,
-        # documented: if NEW files also land before the rerun, the
-        # batch identity changes and the crashed batch's rows duplicate
-        # — closing that needs the ledger folded into the same commit.
-        # Batch identity lives in the APP ID, not the version: Delta's
-        # txnAppId/txnVersion contract skips any write whose version is
-        # <= the last recorded one per appId, so hash-derived versions
-        # under ONE appId would silently drop ~half of all legitimate
-        # new batches (ADVICE r9 high). Scoping the digest into the
-        # appId (like stream_silver's stream-identity appId) makes a
-        # replay an exact (appId, 0) repeat — skipped — while every new
-        # batch gets a fresh appId with no prior version — applied.
-        digest = hashlib.sha256("\n".join(sorted(rows_per_file)).encode()).hexdigest()
-        # quirk Q3: data_referencia is a string; dt partition derives from it
-        silver = bronze_to_silver(raw, processed_at).withColumn(
-            "dt", F.substring("data_referencia", 1, 10)
-        )
-        write_history(
-            silver.drop("_source_file"),
-            silver_path(out_dir),
-            partition_by=["dt"],
-            txn=(f"run_silver:{digest}", 0),
-        )
-        record_ingested(out_dir, rows_per_file.items())
+        parsed.add(as_path(f))
+        n += max(size or 0, 0)
+    # quirk Q3: data_referencia is a string; dt partition derives from it
+    silver = bronze_to_silver(raw, processed_at).withColumn(
+        "dt", F.substring("data_referencia", 1, 10)
+    )
+    write_history(
+        silver.drop("_source_file"),
+        spath,
+        partition_by=["dt"],
+        metadata=record_ingested(
+            prior, parsed, quarantined=[f for f in new if f not in parsed]
+        ),
+        expected_base_version=snap.version if snap else -1,
+    )
     return n
 
 

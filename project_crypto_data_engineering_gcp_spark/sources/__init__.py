@@ -7,7 +7,7 @@ from .json_source import (
     write_raw_snapshot,
 )
 from .http_source import default_fetcher, fixture_fetcher, ingest_snapshot
-from .ledger import filter_new_files, ingested_files, record_ingested
+from .ledger import filter_new_files, record_ingested, recorded_files
 from .sinks import (
     formatted,
     history_format,
@@ -29,8 +29,8 @@ __all__ = [
     "fixture_fetcher",
     "ingest_snapshot",
     "filter_new_files",
-    "ingested_files",
     "record_ingested",
+    "recorded_files",
     "formatted",
     "history_format",
     "read_history",

@@ -1,10 +1,9 @@
-"""Driver-side file metadata through the Hadoop FileSystem API.
+"""Driver-side landing listing through the Hadoop FileSystem API.
 
-Listing a landing glob and reading or writing the small ingest-ledger
-files are metadata operations: they run on the driver through the same
-Hadoop ``FileSystem`` Spark itself uses, so any URI Spark can read
-(``file:``, ``s3a:``, ``gs:``, ``hdfs:``) works here, and none of them
-starts a Spark job.
+Listing a landing glob is a metadata operation: it runs on the driver
+through the same Hadoop ``FileSystem`` Spark itself uses, so any URI
+Spark can read (``file:``, ``s3a:``, ``gs:``, ``hdfs:``) works here, and
+it starts no Spark job.
 
 Paths come back as Hadoop path strings (``Path.toString()``, e.g.
 ``file:/data/x.json``): the form Spark's readers accept verbatim.
@@ -35,47 +34,6 @@ def glob_files(spark: SparkSession, pattern: str) -> list[str]:
     if statuses is None:  # a glob-free pattern naming nothing
         return []
     return sorted(s.getPath().toString() for s in statuses if s.isFile())
-
-
-def list_files(spark: SparkSession, directory: str, suffix: str) -> list[str]:
-    """Sorted paths of the visible files directly under ``directory``
-    ending in ``suffix`` (names starting with ``.``/``_`` are hidden, as
-    for Spark's readers); empty when the directory does not exist."""
-    fs, p = _jvm_path(spark, directory)
-    if not fs.exists(p):
-        return []
-    names = (s.getPath() for s in fs.listStatus(p) if s.isFile())
-    return sorted(
-        q.toString()
-        for q in names
-        if q.getName().endswith(suffix) and q.getName()[0] not in "._"
-    )
-
-
-def read_bytes(spark: SparkSession, path: str) -> bytes:
-    fs, p = _jvm_path(spark, path)
-    stream = fs.open(p)
-    try:
-        return bytes(spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-
-
-def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
-    """Write ``path`` whole or not at all: the bytes go to a hidden
-    sibling first, which a rename then publishes."""
-    fs, p = _jvm_path(spark, path)
-    tmp = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
-        p.getParent(), f".{p.getName()}.tmp"
-    )
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
-    if not fs.rename(tmp, p):
-        fs.delete(tmp, False)
-        raise OSError(f"could not publish {path!r}")
 
 
 def as_path(uri: str) -> str:

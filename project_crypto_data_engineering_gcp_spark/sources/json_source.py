@@ -78,7 +78,7 @@ def read_raw_json(
 ) -> DataFrame:
     """Multiline-JSON scan with explicit schema (reference S4 `2:37-41`,
     minus the inference pass). One row per snapshot document;
-    ``input_file_name`` is exposed for the ingest ledger. ``files``
+    ``input_file_name`` is exposed for the Silver ingest record. ``files``
     (a subset of the glob's matches, as :func:`hadoop_fs.glob_files`
     lists them) narrows the scan to just those files — the
     not-yet-ingested ones.

@@ -61,9 +61,9 @@ def write_history(
     *,
     partition_by: list[str] | None = None,
     merge_schema: bool = False,
-    txn: tuple[str, int] | None = None,
     mode: str = "append",
     metadata: dict | None = None,
+    expected_base_version: int | None = None,
 ) -> None:
     """Append ``df`` to an ACID history table: one atomic commit per
     call (Delta transaction or txlog manifest); ``mode="overwrite"``
@@ -72,10 +72,10 @@ def write_history(
     :func:`history_snapshot`). ``merge_schema`` allows
     schema evolution across appends (reference S7; under txlog the
     union schema is resolved at read instead of write, same observable
-    contract). ``txn=(app_id, version)`` makes the append IDEMPOTENT —
-    a replay of an already-committed (app_id, version) writes nothing
-    (Delta's txnAppId/txnVersion; required for exactly-once foreachBatch
-    sinks, whose checkpoint ack can crash after the commit)."""
+    contract). ``expected_base_version`` pins the commit to the version
+    the caller read (``-1``: no commit yet; see :func:`history_snapshot`
+    and ``tx_table.commit``): txlog raises ``CommitConflict`` when the
+    table moved; Delta skips the write (:func:`delta_pin`)."""
     if history_format() == "delta":  # pragma: no cover - delta absent here
         writer = df.write.format("delta").mode(mode)
         if metadata:
@@ -84,24 +84,53 @@ def write_history(
             writer = writer.option("mergeSchema", "true")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        if txn is not None:
-            writer = writer.option("txnAppId", txn[0]).option(
-                "txnVersion", str(txn[1])
-            )
+        if expected_base_version is not None:
+            writer = writer.options(**delta_pin(expected_base_version))
         writer.save(path)
     else:
         tx_table.commit(
-            df, path, mode, partition_by=partition_by, txn=txn, metadata=metadata
+            df,
+            path,
+            mode,
+            partition_by=partition_by,
+            metadata=metadata,
+            expected_base_version=expected_base_version,
         )
 
 
+def delta_pin(expected_base_version: int) -> dict[str, str]:
+    """Delta writer options that pin a commit to the version read.
+
+    Delta has no expected-version commit, but it skips a write whose
+    ``txnVersion`` is <= the last one recorded for its ``txnAppId``
+    (idempotent writes). Every pinned writer of a table shares one app
+    id and passes the version it read plus one, so of two writers that
+    read the same version only the first commits; the second is skipped
+    and its files stay unrecorded for the next cycle."""
+    return {"txnAppId": "pinned_commit", "txnVersion": str(expected_base_version + 1)}
+
+
 def history_snapshot(path: str) -> tx_table.TxSnapshot | None:
-    """The latest committed version of a txlog history table — its
-    version number and commit metadata — or None when the table has no
-    commit yet. Also None under Delta: the runner then takes the
-    version-free path (whole-table reads)."""
+    """The latest committed version of a history table — its version
+    number and commit metadata — or None when the table has no commit
+    yet. Under Delta the metadata is the newest ``userMetadata`` in the
+    table's history, so a later commit without any (an OPTIMIZE) does
+    not hide it, and the file list is left empty."""
     if history_format() == "delta":  # pragma: no cover - delta absent here
-        return None
+        from delta.tables import DeltaTable
+
+        spark = SparkSession.active()
+        if not DeltaTable.isDeltaTable(spark, path):
+            return None
+        history = DeltaTable.forPath(spark, path).history()
+        rows = history.select("version", "userMetadata").orderBy(history.version.desc()).collect()
+        meta = next((r.userMetadata for r in rows if r.userMetadata), None)
+        return tx_table.TxSnapshot(
+            version=rows[0].version,
+            mode="delta",
+            files=(),
+            metadata=json.loads(meta) if meta else {},
+        )
     try:
         return tx_table.snapshot(path)
     except FileNotFoundError:

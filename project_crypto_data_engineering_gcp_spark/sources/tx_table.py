@@ -134,9 +134,8 @@ def read(
     *,
     merge_schema: bool = False,
 ) -> DataFrame:
-    """Read the pinned snapshot's files (empty-file-list versions read as
-    an empty frame is not supported — commits always carry >= 1 file;
-    an overwrite with an empty frame still writes parquet metadata).
+    """Read the pinned snapshot's files; a version with no file (an
+    empty first commit) reads as an empty frame of its schema.
 
     ``merge_schema=True`` resolves the union schema across commits
     (reference S7 semantics: Delta merges at write, parquet/txlog at
@@ -191,6 +190,8 @@ def _read_files(
 ) -> DataFrame:
     """Scan ``files`` of ``snap``'s table with its schema and partitioning
     (the schema is inferred when merging, or for manifests without one)."""
+    if not files:  # an empty append stages no data file; its manifest has the schema
+        return spark.createDataFrame([], T.StructType.fromJson(json.loads(snap.schema)))
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
@@ -209,7 +210,6 @@ def _read_files(
             if out is None
             else out.unionByName(part, allowMissingColumns=merge_schema)
         )
-    assert out is not None  # callers pass >= 1 file
     return out
 
 
@@ -249,28 +249,6 @@ def _fsync_tree(directory: str) -> None:
             os.fsync(fd)
         finally:
             os.close(fd)
-
-
-def _manifest_txn(table: str, version: int) -> list | None:
-    with open(_manifest_file(table, version)) as fh:
-        return json.load(fh).get("txn")
-
-
-def _find_txn(table: str, txn: tuple[str, int]) -> TxSnapshot | None:
-    """An already-committed version carrying this (app_id, txn_version)
-    marker — the idempotent-replay check (Delta's txnAppId/txnVersion).
-    Vacuum retains manifests inside its retention window precisely so
-    these markers survive a replay gap (same operational contract as
-    Delta streaming). Scanned NEWEST-first: a replayed epoch is almost
-    always among the most recent commits, so hits are O(1); the no-
-    replay miss still reads the whole log — Delta's setTransactions
-    checkpoint summary is the upgrade if that ever paces a stream."""
-    want = [txn[0], int(txn[1])]
-    for v in reversed(_versions(table)):
-        with contextlib.suppress(FileNotFoundError):
-            if _manifest_txn(table, v) == want:
-                return snapshot(table, v)
-    return None
 
 
 def _walk_legacy(table: str):
@@ -456,7 +434,6 @@ def commit(
     partition_by: list[str] | tuple[str, ...] | None = None,
     max_retries: int = 5,
     expected_base_version: int | None = None,
-    txn: tuple[str, int] | None = None,
     metadata: dict | None = None,
 ) -> TxSnapshot:
     """Write ``df`` as a new atomic version of ``table``.
@@ -473,6 +450,13 @@ def commit(
 
     ``metadata`` (a JSON-able dict) is stored in the manifest and read
     back as :attr:`TxSnapshot.metadata` of this version.
+
+    ``expected_base_version`` pins the commit to the version the caller
+    read (``-1`` for a table with no commit yet): if the table has moved
+    past it, the commit raises :class:`CommitConflict` and nothing
+    becomes visible. Read-modify-write callers (``compact``, the Silver
+    ingest whose record derives from the version it read) pin; blind
+    appends do not.
 
     Protocol per attempt: stage data under a version-private directory,
     write a temp manifest, ``os.link`` it into the log — the atomic
@@ -495,20 +479,13 @@ def commit(
     last_err: Exception | None = None
     corrupt_err: RuntimeError | None = None
     for attempt in range(max_retries):
-        if txn is not None:
-            # idempotent replay (Delta's txnAppId/txnVersion): this
-            # transaction already committed — return it, write nothing
-            done = _find_txn(table, txn)
-            if done is not None:
-                return done
         prior = _versions(table)
         version = (prior[-1] + 1) if prior else 0
-        if expected_base_version is not None and (
-            (prior[-1] if prior else None) != expected_base_version
-        ):
-            # read-modify-write callers (compact) must NOT retry over a
-            # base that moved — blind retry would silently discard the
-            # concurrent commit's rows (lost update)
+        if expected_base_version is not None and version - 1 != expected_base_version:
+            # read-modify-write callers must NOT retry over a base that
+            # moved — blind retry would silently discard the concurrent
+            # commit's rows (lost update) or, for the Silver ingest,
+            # append a batch the concurrent commit already recorded
             raise CommitConflict(
                 f"{table!r} moved past expected base version "
                 f"{expected_base_version} (now at "
@@ -568,8 +545,6 @@ def commit(
             "partition_by": list(pby),
             "schema": _read_schema(df.schema, pby),
         }
-        if txn is not None:
-            manifest["txn"] = [txn[0], int(txn[1])]
         if metadata:
             manifest["metadata"] = metadata
         # writer-unique temp name (pid + per-process seq): two racing
@@ -774,12 +749,10 @@ def vacuum(
       commit that has not linked its manifest yet);
     - COMMITTED manifests younger than the window are RETAINED even
       beyond ``keep_last`` — and their files count as live — so recent
-      time travel keeps working and, critically, recent txn idempotency
-      markers survive: dropping a young manifest would let a replayed
-      streaming epoch commit its rows a second time (code-review r7).
+      time travel keeps working.
 
-    Lower it below any plausible write/replay duration (e.g. 0 in
-    tests) only when no writer can be live.
+    Lower it below any plausible write duration (e.g. 0 in tests) only
+    when no writer can be live.
 
     A dead staging dir is removed wholesale (shutil.rmtree) — Spark
     writes ``_SUCCESS``/``.crc`` sidecars alongside the parquet, so an
@@ -796,7 +769,7 @@ def vacuum(
         return []
     cutoff = time.time() - retention_seconds
     # retained = the keep_last newest, plus EVERY version still inside
-    # the retention window (time travel + txn markers stay intact there)
+    # the retention window (time travel stays intact there)
     keep = set(versions[-keep_last:])
     for v in versions:
         if os.path.getmtime(_manifest_file(table, v)) > cutoff:

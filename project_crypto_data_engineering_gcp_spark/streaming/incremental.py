@@ -1,114 +1,23 @@
-"""Structured Streaming incremental mode — the idiomatic upgrade of the
-reference's "event-driven batch" (SURVEY §2.8).
+"""Structured Streaming operators: the streaming twins of the batch
+corpus queries.
 
-The reference emulates streaming with Pub/Sub triggers + glob reads +
-rename-markers (`2-spark_processed_assats_list.py:37,76-87`). Here the
-landing directory IS the stream: a checkpointed file source discovers new
-snapshot documents, `Trigger.AvailableNow` drains whatever has arrived and
-stops (the reference's per-DAG-run semantics, minus the control plane),
-and `foreachBatch` funnels every micro-batch through the SAME
-``bronze_to_silver`` transform the batch path uses — one codepath, two
-execution modes, bit-identical Silver rows.
+- a watermarked tumbling-window aggregation over an event stream (twin
+  of ``events_hourly_rollup``: same groupBy, late data bounded by the
+  watermark), and its stream-static enrichment;
+- session windows (twin of the lag/cumsum sessionizer);
+- watermark-bounded streaming dedup;
+- a stream-stream interval join (twin of the as-of attribution join).
 
-Exactly-once: the streaming checkpoint replaces both the rename-marker
-protocol (S9) and the batch path's ledger; a re-run after crash reprocesses
-only unacknowledged files. At scale the file source scales to object-store
-listings with ``maxFilesPerTrigger`` backpressure.
-
-Also provided: a watermarked tumbling-window aggregation over an event
-stream — the streaming twin of the batch ``events_hourly_rollup`` corpus
-query (same groupBy, late data bounded by the watermark).
+Silver ingest is not here: ``plans.runner.run_silver`` is the one ingest
+path, exactly-once through the ingest record its Silver commit carries
+(``sources/ledger.py``), and the CLI's ``stream`` verb drives it.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.json_source import RAW_ENVELOPE_SCHEMA
-from ..sources.sinks import write_history
 from ..functions.numeric import dec
-from ..plans.crypto_pipeline import bronze_to_silver
-
-
-def stream_silver_available_now(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    *,
-    processed_at: str | None = None,
-    max_files_per_trigger: int | None = None,
-) -> int:
-    """Drain all unprocessed snapshot files into the partitioned Silver
-    table and stop. Returns the number of micro-batches executed."""
-    reader = (
-        spark.readStream.schema(RAW_ENVELOPE_SCHEMA)
-        .option("multiline", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.json(landing_dir)
-
-    silver_out = os.path.join(out_dir, "silver", "assets")
-    progress = {"rows": 0}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        silver = bronze_to_silver(batch_df, processed_at=processed_at).withColumn(
-            "dt", F.substring("data_referencia", 1, 10)
-        )
-        silver.cache()
-        n = silver.count()
-        if n:
-            # one atomic history commit per micro-batch, made IDEMPOTENT
-            # on (stable stream identity, epoch): foreachBatch alone is
-            # at-least-once — a crash between the commit and the
-            # checkpoint ack replays the epoch — so the sink carries a
-            # txn marker the table dedups on (Delta's txnAppId/
-            # txnVersion pattern). The stream identity is the CANONICAL
-            # Silver path — realpath'd, because a restart may spell
-            # out_dir relative where the first run spelled it absolute,
-            # and Spark canonicalizes the checkpoint (same epochs) while
-            # a raw f-string would not (code-review r7).
-            write_history(
-                silver,
-                silver_out,
-                partition_by=["dt"],
-                txn=(f"stream_silver:{os.path.realpath(silver_out)}", epoch_id),
-            )
-            progress["rows"] += n
-        silver.unpersist()
-
-    q = (
-        raw.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoints", "silver"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return progress["rows"]
-
-
-def stream_pipeline_available_now(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    *,
-    processed_at: str | None = None,
-    analysis_at: str | None = None,
-) -> int:
-    """Full incremental medallion run: drain new snapshot files into
-    Silver, then rebuild Gold from the updated Silver state when (and
-    only when) new rows arrived — the reference's two-job DAG collapsed
-    into one streaming invocation. Returns Silver rows appended."""
-    from ..plans.runner import run_gold
-
-    rows = stream_silver_available_now(
-        spark, landing_dir, out_dir, processed_at=processed_at
-    )
-    if rows:
-        run_gold(spark, out_dir, analysis_at=analysis_at)
-    return rows
 
 
 def stream_hourly_rollup(

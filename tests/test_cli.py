@@ -24,6 +24,37 @@ def test_cli_ingest_run_dashboard(spark, tmp_path, capsys):
     assert spark.range(1).count() == 1  # session survived
 
 
+def test_cli_stream_appends_once_then_leaves_gold_untouched(spark, tmp_path, capsys):
+    """The poller's verb: the first call appends the landed rows and
+    refreshes Gold; the second finds nothing new, appends 0 and does not
+    touch Gold."""
+    from project_crypto_data_engineering_gcp_spark.plans.runner import run_dashboard
+
+    from .fixtures_crypto import N_ASSETS, SNAPSHOT_TS_MS, write_fixture_landing
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    write_fixture_landing(landing)
+    assert main(["stream", "--landing", landing, "--out", out]) == 0
+    rows = N_ASSETS * len(SNAPSHOT_TS_MS)
+    assert f"silver rows appended: {rows}" in capsys.readouterr().out
+    assert run_dashboard(spark, out).count() == N_ASSETS
+
+    gold = os.path.join(out, "gold")
+
+    def gold_files():
+        return {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, names in os.walk(gold)
+            for f in names
+        }
+
+    before = gold_files()
+    assert main(["stream", "--landing", landing, "--out", out]) == 0
+    assert "silver rows appended: 0" in capsys.readouterr().out
+    assert gold_files() == before
+    assert run_dashboard(spark, out).count() == N_ASSETS
+
+
 def test_cli_curate_and_compact(spark, tmp_path, capsys):
     from project_crypto_data_engineering_gcp_spark.__main__ import main
 

@@ -1,6 +1,7 @@
 """Crypto medallion pipeline tests: golden-replay of the fixture payloads
 (FIXTURES.md §A) + DuckDB differential oracles for every Gold table +
-quirk decisions (SURVEY §2.11) + ledger idempotency e2e."""
+quirk decisions (SURVEY §2.11) + exactly-once ingest e2e (the Silver
+ingest record)."""
 
 from __future__ import annotations
 
@@ -245,7 +246,7 @@ def test_pipeline_e2e_and_ledger_idempotency(spark, landing, tmp_path_factory):
     silver_rows = read_silver(spark, out).count()
     assert silver_rows == N_ASSETS * len(SNAPSHOT_TS_MS)
 
-    # re-run: ledger makes silver append a no-op (exactly-once)
+    # re-run: the Silver ingest record makes the append a no-op
     appended = run_silver(spark, f"{landing}/coincap_data_*.json", out)
     assert appended == 0
     assert read_silver(spark, out).count() == silver_rows
@@ -521,9 +522,10 @@ def test_cycle_parses_only_the_new_landing(spark, tmp_path, monkeypatch):
 
 
 def test_ledgered_rerun_starts_no_spark_job(spark, tmp_path):
-    """Listing and ledger are driver-side: a rerun that finds nothing new
-    returns before any Spark job (the status tracker sees none), while a
-    run with a new file does start jobs under the same check."""
+    """Listing and the ingest record are driver-side: a rerun that finds
+    nothing new returns before any Spark job (the status tracker sees
+    none), while a run with a new file does start jobs under the same
+    check."""
     landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
     glob = f"{landing}/coincap_data_*.json"
     write_fixture_landing(landing, n_snapshots=2)
@@ -597,3 +599,128 @@ def test_cycles_leave_no_persisted_frames(spark, tmp_path, monkeypatch):
     with pytest.raises(OSError):
         run_gold(spark, out, analysis_at=ANALYSIS_AT)
     assert persisted().size() == before
+
+
+# ------------------------------------------------- the Silver ingest record
+
+
+def test_corrupt_document_is_parsed_once(spark, tmp_path, monkeypatch):
+    """A document that does not parse is recorded as quarantined in the
+    commit of the cycle that first parsed it, and never parsed again —
+    also when it is a cycle's only new landing (that cycle commits an
+    empty append carrying the record, and Silver reads empty)."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+    from project_crypto_data_engineering_gcp_spark.sources.hadoop_fs import as_path
+    from project_crypto_data_engineering_gcp_spark.sources.json_source import (
+        read_corrupt_json,
+    )
+
+    landing, out = tmp_path / "landing", str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    landing.mkdir()
+    bad = landing / "coincap_data_99990101_000000.json"
+    bad.write_text("{ not json !!!")
+
+    parsed = []
+    real = runner.read_raw_json
+
+    def spy(*args, **kwargs):
+        df = real(*args, **kwargs)
+        parsed.append({as_path(f) for f in df.inputFiles()})
+        return df
+
+    monkeypatch.setattr(runner, "read_raw_json", spy)
+    assert run_silver(spark, glob, out) == 0  # the corrupt file alone
+    assert runner.read_silver(spark, out).count() == 0
+    write_fixture_landing(str(landing), n_snapshots=2)
+    assert run_silver(spark, glob, out) == 2 * N_ASSETS
+    _land(str(landing), SNAPSHOT_TS_MS[2])
+    assert run_silver(spark, glob, out) == N_ASSETS
+
+    assert len(parsed) == 3
+    assert [f"file:{bad}" in files for files in parsed] == [True, False, False]
+    snap = tx_table.snapshot(runner.silver_path(out))
+    assert snap.metadata["quarantined"] == [f"file:{bad}"]
+    assert runner.read_silver(spark, out).count() == 3 * N_ASSETS
+    quarantine = read_corrupt_json(spark, glob).collect()
+    assert [r["_source_file"] for r in quarantine] == [f"file://{bad}"]
+
+
+def test_record_survives_compact_and_vacuum(spark, tmp_path):
+    """``tx_table.compact`` copies the record into its overwrite commit
+    and ``vacuum`` keeps the latest manifest, so after both a rerun
+    still appends nothing — and a new landing only its own rows."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    write_fixture_landing(landing, n_snapshots=1)
+    run_silver(spark, glob, out)
+    write_fixture_landing(landing, n_snapshots=2)
+    run_silver(spark, glob, out)
+    spath = runner.silver_path(out)
+    tx_table.compact(spark, spath)
+    tx_table.vacuum(spath, keep_last=1, retention_seconds=0)
+    assert len(os.listdir(os.path.join(spath, "_txlog"))) == 1
+
+    assert run_silver(spark, glob, out) == 0
+    write_fixture_landing(landing, n_snapshots=3)
+    assert run_silver(spark, glob, out) == N_ASSETS
+    assert runner.read_silver(spark, out).count() == 3 * N_ASSETS
+
+
+def test_concurrent_run_silver_conflicts_and_heals(spark, tmp_path, monkeypatch):
+    """Deterministic race: a second ``run_silver`` (whose glob sees only
+    the first file) commits between the first one's plan and its commit.
+    The first raises CommitConflict with nothing visible, each file's
+    rows are in Silver once, and a rerun appends only what is missing."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    first = write_fixture_landing(landing, n_snapshots=3)[0]
+    real_write = runner.write_history
+
+    def race(df, path, **kw):
+        monkeypatch.setattr(runner, "write_history", real_write)
+        assert run_silver(spark, first, out) == N_ASSETS  # the other writer
+        real_write(df, path, **kw)
+
+    monkeypatch.setattr(runner, "write_history", race)
+    with pytest.raises(tx_table.CommitConflict):
+        run_silver(spark, glob, out)
+    silver = runner.read_silver(spark, out)
+    assert silver.count() == N_ASSETS
+
+    assert run_silver(spark, glob, out) == 2 * N_ASSETS
+    silver = runner.read_silver(spark, out)
+    assert silver.count() == 3 * N_ASSETS
+    assert silver.select("id", "data_referencia").distinct().count() == 3 * N_ASSETS
+
+
+def test_run_silver_refuses_a_table_without_record(spark, tmp_path):
+    """A Silver table with commits but no ingest record (an older
+    release wrote it): ``run_silver`` raises and appends nothing, rather
+    than re-ingesting every landed file into it."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+    from project_crypto_data_engineering_gcp_spark.sources.sinks import write_history
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    write_fixture_landing(landing, n_snapshots=2)
+    old = bronze_to_silver(read_raw_json(spark, glob), processed_at=PROCESSED_AT)
+    spath = runner.silver_path(out)
+    write_history(
+        old.drop("_source_file").withColumn("dt", F.substring("data_referencia", 1, 10)),
+        spath,
+        partition_by=["dt"],
+    )
+
+    with pytest.raises(ValueError, match="no ingest record"):
+        run_silver(spark, glob, out)
+    assert tx_table.snapshot(spath).version == 0
+    assert runner.read_silver(spark, out).count() == 2 * N_ASSETS

@@ -1,22 +1,19 @@
-"""Contract test for the Delta txnAppId/txnVersion branch of
-``write_history`` — WITHOUT delta-spark on the classpath.
+"""Contract test for the Delta branch of the Silver ingest — WITHOUT
+delta-spark on the classpath.
 
-The r9 high-severity ADVICE bug (hash-derived txnVersions under one
-appId silently dropping ~half of all new batches) lived exactly in the
-``history_format()=='delta'`` branch, which this sandbox never
-executes: delta-spark isn't installed, so every pipeline test runs the
-txlog fallback and the (appId, version) pairs the runner hands to
-Delta were never checked against Delta's OWN skip semantics.
-
-This module closes that class at the contract level: a fake history
-store applies Delta's documented idempotent-writes rule — an
-application-transactional write is SKIPPED iff its txnVersion is <=
-the last recorded version for that txnAppId on that table (Delta
-`OptimisticTransaction.txnVersion` semantics, public docs
-"Idempotent writes in foreachBatch") — and the real ``run_silver`` /
-streaming epoch sequences run against it. If the runner's batch-
-identity scheme regresses to anything Delta would mis-skip (or
-mis-apply), these tests go red without needing the package.
+Under Delta, ``run_silver`` reads its ingest record from the newest
+``userMetadata`` in the Silver table's history and pins its commit
+through Delta's idempotent-writes options (``sinks.delta_pin``). This
+sandbox never executes the ``history_format()=='delta'`` branch, so a
+fake history store applies Delta's documented rules instead — a write
+carrying (txnAppId, txnVersion) is SKIPPED iff txnVersion is <= the last
+version recorded for that appId on that table (Delta
+`OptimisticTransaction.txnVersion` semantics, public docs "Idempotent
+writes in foreachBatch"); every other write appends its rows and its
+``userMetadata`` to the history — and the real ``run_silver`` runs
+against it. If the pin mapping or the record handling regresses to
+anything Delta would mis-skip, mis-apply or duplicate, these tests go
+red without needing the package.
 
 Reference parity: the reference appends Silver/Gold history as Delta
 (`2-spark_coincap_raw_to_silver.py:65`, `3-spark_curated_analytics_full.py:86-90`);
@@ -24,8 +21,6 @@ exactly-once across crash/replay is our superset hardening of S5/S9.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -35,27 +30,31 @@ from project_crypto_data_engineering_gcp_spark.fixtures import (
     write_fixture_landing,
 )
 from project_crypto_data_engineering_gcp_spark.plans import runner
+from project_crypto_data_engineering_gcp_spark.sources import tx_table
 from project_crypto_data_engineering_gcp_spark.sources.json_source import (
     write_raw_snapshot,
 )
+from project_crypto_data_engineering_gcp_spark.sources.sinks import delta_pin
 
 PROCESSED_AT = "2024-01-02 03:04:05"
 
 
 class FakeDeltaHistoryStore:
-    """In-memory stand-in for a set of Delta tables that implements the
-    txnAppId/txnVersion skip rule EXACTLY as Delta documents it:
+    """In-memory stand-in for a set of Delta tables:
 
-      for a write carrying (appId, version), if the table has already
-      committed a transaction for that appId with recorded version
-      >= this version, the write is a silent no-op; otherwise the
-      rows append and the (appId -> version) watermark advances.
-
-    Writes without ``txn`` always append (plain Delta append).
+    - a write pinned with ``expected_base_version`` carries the
+      ``sinks.delta_pin`` options, and is a silent no-op when the table
+      already recorded a transaction for that appId with version >= this
+      one; otherwise it commits and the (appId -> version) watermark
+      advances (Delta's idempotent-writes rule);
+    - every applied write is one history entry (version, userMetadata),
+      and :meth:`history_snapshot` reads the newest entry that carries
+      metadata, as ``sinks.history_snapshot`` does under Delta.
     """
 
     def __init__(self) -> None:
         self.rows: dict[str, list[dict]] = {}
+        self.history: dict[str, list[dict | None]] = {}
         self.txns: dict[tuple[str, str], int] = {}
         self.applied: list[tuple[str, str, int]] = []
         self.skipped: list[tuple[str, str, int]] = []
@@ -68,45 +67,60 @@ class FakeDeltaHistoryStore:
         *,
         partition_by=None,
         merge_schema: bool = False,
-        txn: tuple[str, int] | None = None,
+        mode: str = "append",
+        metadata: dict | None = None,
+        expected_base_version: int | None = None,
     ) -> None:
-        if txn is not None:
-            app_id, version = txn
+        if expected_base_version is not None:
+            opts = delta_pin(expected_base_version)
+            app_id, version = opts["txnAppId"], int(opts["txnVersion"])
             last = self.txns.get((path, app_id))
             if last is not None and version <= last:
                 self.skipped.append((path, app_id, version))
                 return
             self.txns[(path, app_id)] = version
             self.applied.append((path, app_id, version))
-        self.rows.setdefault(path, []).extend(
-            r.asDict() for r in df.collect()
+        self.rows.setdefault(path, []).extend(r.asDict() for r in df.collect())
+        self.history.setdefault(path, []).append(metadata)
+
+    # signature mirrors sources.sinks.history_snapshot
+    def history_snapshot(self, path: str) -> tx_table.TxSnapshot | None:
+        commits = self.history.get(path)
+        if not commits:
+            return None
+        meta = next((m for m in reversed(commits) if m), {})
+        return tx_table.TxSnapshot(
+            version=len(commits) - 1, mode="delta", files=(), metadata=meta
         )
+
+    def optimize(self, path: str) -> None:
+        """An OPTIMIZE: a commit with no userMetadata and the same rows."""
+        self.history[path].append(None)
 
     def count(self, path: str) -> int:
         return len(self.rows.get(path, []))
 
 
 def test_fake_store_matches_delta_skip_rule(spark):
-    """The fake itself implements <=, not ==: a LOWER version after a
-    higher one must also skip (that ordering is exactly what the old
-    hash-derived-version scheme produced)."""
+    """The fake itself implements <=, not ==: a pin read at an OLDER
+    version after a newer one committed must also skip."""
     store = FakeDeltaHistoryStore()
     df = spark.range(3)
-    store.write_history(df, "t", txn=("app", 5))
-    store.write_history(df, "t", txn=("app", 5))  # exact replay: skip
-    store.write_history(df, "t", txn=("app", 2))  # lower: skip (<= rule)
-    store.write_history(df, "t", txn=("app", 6))  # higher: apply
-    store.write_history(df, "t", txn=("other", 0))  # fresh appId: apply
-    store.write_history(df, "t")  # no txn: plain append
-    assert store.count("t") == 4 * 3
-    assert [v for (_, a, v) in store.applied if a == "app"] == [5, 6]
-    assert [(a, v) for (_, a, v) in store.skipped] == [("app", 5), ("app", 2)]
+    store.write_history(df, "t", expected_base_version=4)
+    store.write_history(df, "t", expected_base_version=4)  # same base: skip
+    store.write_history(df, "t", expected_base_version=1)  # older: skip
+    store.write_history(df, "t", expected_base_version=5)  # newer: apply
+    store.write_history(df, "t")  # unpinned: plain append
+    assert store.count("t") == 3 * 3
+    assert [v for (_, _, v) in store.applied] == [5, 6]
+    assert [v for (_, _, v) in store.skipped] == [5, 2]
 
 
 @pytest.fixture()
 def fake_store(monkeypatch):
     store = FakeDeltaHistoryStore()
     monkeypatch.setattr(runner, "write_history", store.write_history)
+    monkeypatch.setattr(runner, "history_snapshot", store.history_snapshot)
     return store
 
 
@@ -116,131 +130,90 @@ def _landing(tmp_path_factory, n_snapshots=2) -> str:
     return landing
 
 
+def _crash_after_first_commit(store, monkeypatch):
+    """Make the next ``write_history`` commit, then raise."""
+    real = store.write_history
+
+    def crash(df, path, **kw):
+        monkeypatch.setattr(runner, "write_history", real)
+        real(df, path, **kw)
+        raise OSError("simulated crash right after the Silver commit")
+
+    monkeypatch.setattr(runner, "write_history", crash)
+
+
 def test_run_silver_crash_replay_is_exactly_once(
     spark, tmp_path_factory, fake_store, monkeypatch
 ):
-    """Crash between the history commit and the ledger record, then
-    rerun: the rerun re-reads the SAME unledgered files, producing the
-    identical batch digest — under Delta's rule that is an exact
-    (appId, 0) repeat and must be skipped, leaving each row exactly
-    once. This is the precise sequence the r9 ADVICE bug corrupted."""
+    """Crash right after the Silver commit returns, then rerun: the
+    record travelled in that commit, so the rerun finds nothing new and
+    reaches no sink at all."""
     landing = _landing(tmp_path_factory)
     out = str(tmp_path_factory.mktemp("out"))
     glob = f"{landing}/coincap_data_*.json"
     spath = runner.silver_path(out)
 
-    real_record = runner.record_ingested
-    calls = {"n": 0}
-
-    def crash_once(out_dir, counts):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("simulated crash after commit, before ledger")
-        return real_record(out_dir, counts)
-
-    monkeypatch.setattr(runner, "record_ingested", crash_once)
+    _crash_after_first_commit(fake_store, monkeypatch)
     with pytest.raises(OSError, match="simulated crash"):
         runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT)
-    committed = fake_store.count(spath)
-    assert committed == N_ASSETS * 2  # the commit itself succeeded
+    assert fake_store.count(spath) == N_ASSETS * 2  # the commit itself succeeded
 
-    # restart: same files, same digest -> Delta skips, ledger records
-    n = runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT)
-    assert n == N_ASSETS * 2  # runner reports the batch it processed...
-    assert fake_store.count(spath) == committed  # ...but no row duplicated
-    assert len(fake_store.skipped) == 1
-    (_, app_replay, v_replay) = fake_store.skipped[0]
-    (_, app_first, v_first) = fake_store.applied[0]
-    assert (app_replay, v_replay) == (app_first, v_first)
-
-    # and a THIRD run is a ledger no-op: nothing even reaches the sink
     assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) == 0
-    assert len(fake_store.applied) == 1
+    assert fake_store.count(spath) == N_ASSETS * 2
+    assert len(fake_store.applied) == 1 and not fake_store.skipped
 
 
-def test_run_silver_new_batch_gets_fresh_app_id(
-    spark, tmp_path_factory, fake_store
-):
-    """Every genuinely new batch must carry a DISTINCT appId (version
-    pinned at 0) so Delta never skips it. Under the pre-r9 scheme
-    (one appId, digest-derived versions) the second batch here had a
-    ~50% chance of a lower digest and silent loss."""
-    landing = _landing(tmp_path_factory)
-    out = str(tmp_path_factory.mktemp("out"))
-    glob = f"{landing}/coincap_data_*.json"
-    spath = runner.silver_path(out)
-
-    assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) > 0
-    write_raw_snapshot(snapshot_payload(2), landing)
-    assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) > 0
-
-    assert fake_store.count(spath) == N_ASSETS * 3
-    assert not fake_store.skipped
-    apps = [a for (_, a, _) in fake_store.applied]
-    vers = [v for (_, _, v) in fake_store.applied]
-    assert len(set(apps)) == 2, "each batch needs its own appId"
-    assert vers == [0, 0]
-    assert all(a.startswith("run_silver:") for a in apps)
-
-
-def test_run_silver_residual_duplication_is_the_documented_one(
+def test_run_silver_crash_then_new_landing_is_exactly_once(
     spark, tmp_path_factory, fake_store, monkeypatch
 ):
-    """The runner documents ONE residual hole (runner.py run_silver
-    docstring): if NEW files land between a crashed commit and the
-    rerun, the batch identity changes, Delta sees a fresh appId, and
-    the crashed batch's rows duplicate. Pin that the hole is exactly
-    that — duplication, never loss — so any future change to the
-    identity scheme that silently WIDENS or NARROWS it shows up here."""
+    """A crash right after the Silver commit, and a NEW file landing
+    before the rerun: the rerun ingests only the new file, so every row
+    is in Silver exactly once (under the old separate ledger, the
+    crashed batch was appended a second time here)."""
     landing = _landing(tmp_path_factory)
     out = str(tmp_path_factory.mktemp("out"))
     glob = f"{landing}/coincap_data_*.json"
     spath = runner.silver_path(out)
 
-    real_record = runner.record_ingested
-    calls = {"n": 0}
-
-    def crash_once(out_dir, counts):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("simulated crash")
-        return real_record(out_dir, counts)
-
-    monkeypatch.setattr(runner, "record_ingested", crash_once)
+    _crash_after_first_commit(fake_store, monkeypatch)
     with pytest.raises(OSError):
         runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT)
 
     write_raw_snapshot(snapshot_payload(2), landing)  # new file pre-rerun
-    runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT)
+    assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) == N_ASSETS
 
-    # crashed batch (2 snapshots) committed twice + the new snapshot once
-    assert fake_store.count(spath) == N_ASSETS * 2 + N_ASSETS * 3
-    assert not fake_store.skipped  # identity changed -> Delta can't help
-    # loss never happens: the new file's rows are present exactly once
-    dts = [r["dt"] for r in fake_store.rows[spath]]
-    assert len([d for d in set(dts)]) >= 1 and len(dts) == N_ASSETS * 5
+    rows = fake_store.rows[spath]
+    keys = [(r["id"], r["data_referencia"]) for r in rows]
+    assert len(keys) == N_ASSETS * 3 and len(set(keys)) == len(keys)
+    assert not fake_store.skipped
 
 
-def test_stream_epoch_sequence_contract():
-    """The streaming sink pins appId to the OUTPUT PATH and version to
-    the foreachBatch epoch (streaming/incremental.py:77). Replay of an
-    acked epoch after a checkpoint-ack crash must skip; later epochs
-    (including gaps after recovered failures) must apply."""
-    store = FakeDeltaHistoryStore()
+def test_run_silver_stale_pin_is_skipped_and_healed(
+    spark, tmp_path_factory, fake_store, monkeypatch
+):
+    """Two writers read the same Silver version: Delta skips the second
+    pinned write (its pin maps to the txnVersion the first one used), so
+    no row doubles; the next run ingests the file only the skipped
+    writer had seen. An OPTIMIZE commit without userMetadata in between
+    hides neither the record nor the pin."""
+    landing = _landing(tmp_path_factory, n_snapshots=1)
+    out = str(tmp_path_factory.mktemp("out"))
+    glob = f"{landing}/coincap_data_*.json"
+    spath = runner.silver_path(out)
+    assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) == N_ASSETS
+    fake_store.optimize(spath)
 
-    class _Rows:
-        def __init__(self, n):
-            self._n = n
+    stale = fake_store.history_snapshot(spath)
+    write_raw_snapshot(snapshot_payload(1), landing)
+    monkeypatch.setattr(runner, "history_snapshot", lambda path: stale)
+    assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) == N_ASSETS
+    write_raw_snapshot(snapshot_payload(2), landing)
+    runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT)  # same stale read
+    assert len(fake_store.skipped) == 1
+    assert fake_store.count(spath) == N_ASSETS * 2
 
-        def collect(self):
-            return [type("R", (), {"asDict": lambda self2: {"i": 1}})()
-                    for _ in range(self._n)]
-
-    app = f"stream_silver:{os.path.realpath('/tmp/out/silver')}"
-    store.write_history(_Rows(4), "silver", txn=(app, 0))
-    store.write_history(_Rows(5), "silver", txn=(app, 1))
-    store.write_history(_Rows(5), "silver", txn=(app, 1))  # epoch replay
-    store.write_history(_Rows(2), "silver", txn=(app, 3))  # gap is fine
-    assert store.count("silver") == 4 + 5 + 2
-    assert [v for (_, _, v) in store.applied] == [0, 1, 3]
-    assert [v for (_, _, v) in store.skipped] == [1]
+    monkeypatch.setattr(runner, "history_snapshot", fake_store.history_snapshot)
+    assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) == N_ASSETS
+    assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) == 0
+    keys = [(r["id"], r["data_referencia"]) for r in fake_store.rows[spath]]
+    assert len(keys) == N_ASSETS * 3 and len(set(keys)) == len(keys)

@@ -1,122 +1,109 @@
-"""Crash-between-epoch-commit fuzzing of the txn-idempotent streaming
-sink (r10 verdict task 6) — the one stateful surface tools/stream_fuzz.py
-does not perturb: ``stream_silver_available_now`` commits one txlog
-version per micro-batch with a (stream-identity, epoch) txn marker,
-because foreachBatch is at-least-once — a crash between the table commit
-and the checkpoint ack REPLAYS the epoch on restart, and exactly-once
-then rests entirely on ``tx_table``'s txn dedup (the contract
-tests/test_delta_txn_contract.py pins for the Delta branch).
+"""Crash fuzzing of the Silver ingest's exactly-once record.
 
-Each seed derives a crash SCHEDULE over (epoch, attempt): ``pre`` kills
-the sink before the commit (replay must write the epoch — once),
-``post`` kills it after (replay must write NOTHING — the marker dedups),
-including double-crash epochs (post then pre on the replay, etc.). The
-stream is restarted on the same checkpoint until it drains; the final
-table must be bit-identical to an uninterrupted run AND hold exactly one
-committed version per epoch."""
+``run_silver`` appends a batch's rows and the grown ingest record in ONE
+commit pinned to the Silver version the record was read from, and writes
+nothing after it. Each seed derives a crash SCHEDULE over the hourly
+cycles: ``pre`` kills a cycle before its Silver commit (the restart must
+ingest that batch — once), ``post`` kills it right after the commit
+returns (the restart must not ingest any of it again). Every schedule
+holds at least one of each. A new snapshot lands before every restart,
+so a restart's batch differs from the crashed one — the sequence the
+old separate ledger duplicated rows on. After a final clean drain,
+Silver must be bit-identical to an uninterrupted run, hold every row
+exactly once, and record every landed file."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
-from pyspark.sql.streaming import StreamingQueryException
+from pyspark.sql import functions as F
 
+from project_crypto_data_engineering_gcp_spark.plans import runner
 from project_crypto_data_engineering_gcp_spark.sources import tx_table
-from project_crypto_data_engineering_gcp_spark.sources.sinks import write_history
-from project_crypto_data_engineering_gcp_spark.streaming import incremental
+from project_crypto_data_engineering_gcp_spark.sources.hadoop_fs import glob_files
+from project_crypto_data_engineering_gcp_spark.sources.json_source import (
+    write_raw_snapshot,
+)
+from project_crypto_data_engineering_gcp_spark.sources.ledger import recorded_files
 
-from .fixtures_crypto import write_fixture_landing
+from .fixtures_crypto import N_ASSETS, SNAPSHOT_TS_MS, snapshot_payload
 
 PROCESSED_AT = "2026-01-01 00:00:00"
-N_SNAPSHOTS = 3  # fixture maximum; one file per micro-batch
+N_SNAPSHOTS = 6  # one landing per cycle
 
 # out-of-suite seed extension: SPARK_GRAFT_TXN_FUZZ_SEEDS=5,6,7 runs
 # extra schedules without editing the file (suite default stays 4)
-import os as _os
-
 _EXTRA_SEEDS = [
     int(s)
-    for s in _os.environ.get("SPARK_GRAFT_TXN_FUZZ_SEEDS", "").split(",")
+    for s in os.environ.get("SPARK_GRAFT_TXN_FUZZ_SEEDS", "").split(",")
     if s.strip()
 ]
 
 
+class InjectedCrash(RuntimeError):
+    pass
+
+
+def _land(landing: str, k: int) -> None:
+    payload = snapshot_payload(k % len(SNAPSHOT_TS_MS))
+    payload["timestamp"] = SNAPSHOT_TS_MS[0] + k * 3_600_000
+    write_raw_snapshot(payload, landing)
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3, 4, *_EXTRA_SEEDS])
-def test_stream_silver_crash_replay_exactly_once(spark, tmp_path, monkeypatch, seed):
+def test_run_silver_crash_replay_exactly_once(spark, tmp_path, monkeypatch, seed):
     rng = random.Random(seed)
-    # schedule: for each epoch, a (possibly empty) sequence of injected
-    # crashes consumed one per attempt — 'pre' (before commit) or
-    # 'post' (after commit, before the checkpoint ack); at least one
-    # 'post' overall so the replay-dedup path is always exercised
-    schedule: dict[int, list[str]] = {
-        e: [rng.choice(("pre", "post")) for _ in range(rng.choice((0, 1, 1, 2)))]
-        for e in range(N_SNAPSHOTS)
-    }
-    if not any("post" in s for s in schedule.values()):
-        schedule[rng.randrange(N_SNAPSHOTS)].append("post")
-    n_crashes = sum(len(s) for s in schedule.values())
+    schedule = [rng.choice((None, "pre", "post")) for _ in range(N_SNAPSHOTS)]
+    i, j = rng.sample(range(N_SNAPSHOTS), 2)
+    for mode, pos in (("pre", i), ("post", j)):
+        if mode not in schedule:
+            schedule[pos] = mode
 
-    attempts: dict[int, int] = {}
+    armed: list[str | None] = [None]
+    fired: list[str] = []
+    real_write = runner.write_history
 
-    def chaotic_write_history(df, path, *, partition_by=None,
-                              merge_schema=False, txn=None):
-        epoch = int(txn[1])
-        k = attempts.get(epoch, 0)
-        attempts[epoch] = k + 1
-        mode = schedule[epoch][k] if k < len(schedule[epoch]) else None
+    def chaotic_write_history(df, path, **kw):
+        mode, armed[0] = armed[0], None
         if mode == "pre":
-            raise RuntimeError(f"injected pre-commit crash e{epoch}a{k}")
-        write_history(
-            df, path, partition_by=partition_by,
-            merge_schema=merge_schema, txn=txn,
-        )
+            fired.append(mode)
+            raise InjectedCrash("injected pre-commit crash")
+        real_write(df, path, **kw)
         if mode == "post":
-            raise RuntimeError(f"injected post-commit crash e{epoch}a{k}")
+            fired.append(mode)
+            raise InjectedCrash("injected post-commit crash")
 
-    monkeypatch.setattr(incremental, "write_history", chaotic_write_history)
+    monkeypatch.setattr(runner, "write_history", chaotic_write_history)
 
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    write_fixture_landing(landing, N_SNAPSHOTS)
-
-    drained = False
-    for _ in range(n_crashes + 2):  # each restart consumes >= 1 crash
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    for k in range(N_SNAPSHOTS):
+        _land(landing, k)  # lands before the restart of a crashed cycle too
+        armed[0] = schedule[k]
         try:
-            incremental.stream_silver_available_now(
-                spark, landing, out,
-                processed_at=PROCESSED_AT, max_files_per_trigger=1,
-            )
-            drained = True
-            break
-        except StreamingQueryException:
-            continue
-    assert drained, f"stream never drained under schedule {schedule}"
-    # every scheduled crash actually fired (the schedule was consumed)
-    for e, s in schedule.items():
-        assert attempts.get(e, 0) >= len(s) + 1, (
-            f"epoch {e}: {attempts.get(e, 0)} attempts < {len(s)} crashes + 1"
-        )
+            runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT)
+        except InjectedCrash:
+            pass
+    runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT)  # clean drain
+    assert fired == [m for m in schedule if m], f"schedule {schedule} not consumed"
+    assert runner.run_silver(spark, glob, out, processed_at=PROCESSED_AT) == 0
 
-    # uninterrupted reference run (fresh out dir + checkpoint)
-    monkeypatch.setattr(incremental, "write_history", write_history)
+    # uninterrupted reference run over the same landings
+    monkeypatch.setattr(runner, "write_history", real_write)
     ref_out = str(tmp_path / "ref_out")
-    incremental.stream_silver_available_now(
-        spark, landing, ref_out,
-        processed_at=PROCESSED_AT, max_files_per_trigger=1,
-    )
+    runner.run_silver(spark, glob, ref_out, processed_at=PROCESSED_AT)
 
-    from project_crypto_data_engineering_gcp_spark.plans.runner import read_silver
+    def canon(out_dir):
+        df = runner.read_silver(spark, out_dir)
+        return df.withColumn("tokens", F.to_json("tokens"))
 
-    got, ref = read_silver(spark, out), read_silver(spark, ref_out)
-    cols = [c for c in ref.columns if c != "tokens"]  # map: not except-able
-    assert got.count() == ref.count()
-    assert got.select(cols).exceptAll(ref.select(cols)).count() == 0
-    assert ref.select(cols).exceptAll(got.select(cols)).count() == 0
+    got, ref = canon(out), canon(ref_out)
+    assert got.count() == ref.count() == N_ASSETS * N_SNAPSHOTS
+    assert got.select("id", "data_referencia").distinct().count() == got.count()
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
 
-    # exactly one committed txlog version per epoch — post-commit
-    # replays deduped on the txn marker, never re-appended
-    import os
-
-    table = os.path.join(out, "silver", "assets")
-    assert tx_table.snapshot(table).version == N_SNAPSHOTS - 1
+    snap = tx_table.snapshot(runner.silver_path(out))
+    assert recorded_files(snap.metadata) == set(glob_files(spark, glob))

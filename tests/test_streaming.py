@@ -1,69 +1,17 @@
-"""Streaming-mode tests: the incremental Silver path must be bit-identical
-to the batch path, and the windowed rollup must match its batch twin
+"""Streaming-mode tests: each streaming operator must match its batch
+twin — the windowed rollup, sessions, the interval join, streaming dedup
 (SURVEY §7 hard part (d): streaming == batch)."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
-from project_crypto_data_engineering_gcp_spark.plans.crypto_pipeline import (
-    bronze_to_silver,
-)
-from project_crypto_data_engineering_gcp_spark.sources.json_source import (
-    read_raw_json,
-)
 from project_crypto_data_engineering_gcp_spark.sources.tables import load_table
 from project_crypto_data_engineering_gcp_spark.streaming.incremental import (
     stream_hourly_rollup,
-    stream_silver_available_now,
 )
 
 from .conftest import SF_SMOKE
-from .fixtures_crypto import write_fixture_landing
-
-PROCESSED_AT = "2026-01-01 00:00:00"
-
-
-def test_stream_silver_equals_batch_silver(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    write_fixture_landing(landing)
-
-    n_batches = stream_silver_available_now(
-        spark, landing, out, processed_at=PROCESSED_AT
-    )
-    assert n_batches >= 1
-
-    from project_crypto_data_engineering_gcp_spark.plans.runner import read_silver
-
-    streamed = read_silver(spark, out).drop("dt")
-    batch = bronze_to_silver(
-        read_raw_json(spark, f"{landing}/coincap_data_*.json"),
-        processed_at=PROCESSED_AT,
-    ).drop("_source_file")
-
-    assert streamed.count() == batch.count()
-    # bit-identical rows (subtract in both directions on a canonical projection)
-    cols = [c for c in batch.columns if c != "tokens"]  # map col: not comparable via except
-    assert streamed.select(cols).exceptAll(batch.select(cols)).count() == 0
-    assert batch.select(cols).exceptAll(streamed.select(cols)).count() == 0
-
-
-def test_stream_silver_checkpoint_no_reprocess(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    write_fixture_landing(landing)
-
-    from project_crypto_data_engineering_gcp_spark.plans.runner import read_silver
-
-    stream_silver_available_now(spark, landing, out, processed_at=PROCESSED_AT)
-    first = read_silver(spark, out).count()
-    # drain again with the same checkpoint: nothing new -> no new rows
-    stream_silver_available_now(spark, landing, out, processed_at=PROCESSED_AT)
-    assert read_silver(spark, out).count() == first
 
 
 def test_stream_hourly_rollup_matches_batch(spark, tmp_path):
@@ -93,28 +41,6 @@ def test_stream_hourly_rollup_matches_batch(spark, tmp_path):
         (streamed["n"] != batch["n"]) | (streamed["total_value"] != batch["total_value"])
     )
     assert mismatches.count() == 0
-
-
-def test_stream_pipeline_end_to_end(spark, tmp_path):
-    from project_crypto_data_engineering_gcp_spark.plans.runner import run_dashboard
-    from project_crypto_data_engineering_gcp_spark.streaming.incremental import (
-        stream_pipeline_available_now,
-    )
-
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    write_fixture_landing(landing)
-    rows = stream_pipeline_available_now(
-        spark, landing, out, processed_at=PROCESSED_AT, analysis_at=PROCESSED_AT
-    )
-    from .fixtures_crypto import N_ASSETS, SNAPSHOT_TS_MS
-
-    assert rows == N_ASSETS * len(SNAPSHOT_TS_MS)
-    dash = run_dashboard(spark, out)
-    assert dash.count() == N_ASSETS
-    # second drain: no new files -> no rows, gold untouched
-    assert stream_pipeline_available_now(spark, landing, out) == 0
-    assert run_dashboard(spark, out).count() == N_ASSETS
 
 
 def test_session_window_matches_batch_sessionizer(spark, tmp_path):

@@ -253,7 +253,7 @@ def test_pipeline_e2e_on_txlog_version_as_of(spark, tmp_path):
     # batch 1: two snapshot files -> Silver version 0
     write_fixture_landing(landing, n_snapshots=2)
     assert run_silver(spark, f"{landing}/coincap_data_*.json", out) == 2 * N_ASSETS
-    # batch 2: one NEW file (replay-stable names; ledger skips the rest)
+    # batch 2: one NEW file (replay-stable names; the record skips the rest)
     write_fixture_landing(landing, n_snapshots=3)
     assert run_silver(spark, f"{landing}/coincap_data_*.json", out) == N_ASSETS
 
@@ -335,20 +335,31 @@ def test_vacuum_retention_protects_fresh_staging(spark, tmp_path):
         tx.vacuum(t, keep_last=0)
 
 
-def test_txn_marker_makes_commit_idempotent(spark, tmp_path):
-    """A replayed (app_id, txn_version) commit writes NOTHING and
-    returns the original snapshot — the foreachBatch exactly-once
-    contract (crash between commit and checkpoint ack replays the
-    epoch; code-review r7)."""
+def test_pin_to_an_empty_table(spark, tmp_path):
+    """``expected_base_version=-1`` pins a commit to a table with no
+    commit yet: the first pinned writer wins, a second one pinned to the
+    same empty read raises and leaves nothing visible."""
     t = str(tmp_path / "tbl")
-    s0 = tx.commit(spark.range(0, 3), t, "append", txn=("streamA", 7))
-    s1 = tx.commit(spark.range(0, 3), t, "append", txn=("streamA", 7))
-    assert s1.version == s0.version == 0
-    assert _ids(tx.read(spark, t)) == [0, 1, 2]  # not duplicated
-    # a DIFFERENT epoch commits normally
-    s2 = tx.commit(spark.range(3, 5), t, "append", txn=("streamA", 8))
-    assert s2.version == 1
-    assert _ids(tx.read(spark, t)) == [0, 1, 2, 3, 4]
+    assert tx.commit(spark.range(0, 3), t, expected_base_version=-1).version == 0
+    with pytest.raises(tx.CommitConflict, match="expected base version -1"):
+        tx.commit(spark.range(3, 5), t, expected_base_version=-1)
+    assert tx.snapshot(t).version == 0
+    assert _ids(tx.read(spark, t)) == [0, 1, 2]
+
+
+def test_empty_first_commit_reads_as_empty_frame_of_its_schema(spark, tmp_path):
+    """A partitioned append of zero rows writes no data file; its
+    version still reads — as an empty frame of the manifest's schema —
+    and later appends build on it."""
+    t = str(tmp_path / "tbl")
+    df = spark.createDataFrame([(1, "2025-06-01")], "id int, dt string")
+    snap = tx.commit(df.limit(0), t, partition_by=["dt"], metadata={"k": 1})
+    assert snap.files == () and tx.snapshot(t).metadata == {"k": 1}
+    empty = tx.read(spark, t)
+    assert empty.count() == 0 and empty.schema == df.schema
+    tx.commit(df, t, partition_by=["dt"])
+    assert _ids(tx.read(spark, t)) == [1]
+    assert tx.read_added(spark, t, 0).count() == 1
 
 
 def test_compact_refuses_lost_update(spark, tmp_path):
@@ -411,28 +422,6 @@ def test_read_history_never_surfaces_uncommitted_staging(spark, tmp_path):
     t2 = str(tmp_path / "tbl2")
     spark.range(3).write.parquet(t2)
     assert read_history(spark, t2).count() == 3
-
-
-def test_vacuum_retention_preserves_txn_markers(spark, tmp_path):
-    """Manifests inside the retention window survive vacuum even beyond
-    keep_last, so a replayed streaming epoch still finds its idempotency
-    marker (code-review r7: dropping young manifests reintroduced the
-    duplicate-epoch bug the markers exist to prevent)."""
-    t = str(tmp_path / "tbl")
-    tx.commit(spark.range(0, 2), t, "append", txn=("streamZ", 1))
-    tx.commit(spark.range(2, 4), t, "append")
-    tx.commit(spark.range(4, 6), t, "append")
-
-    tx.vacuum(t, keep_last=1, retention_seconds=3600)
-    # the young v0 manifest (and its marker) survived keep_last=1
-    replay = tx.commit(spark.range(0, 2), t, "append", txn=("streamZ", 1))
-    assert replay.version == 0
-    assert _ids(tx.read(spark, t)) == [0, 1, 2, 3, 4, 5]  # no duplicates
-
-    # outside the retention window the marker is reclaimable — documented
-    tx.vacuum(t, keep_last=1, retention_seconds=0)
-    with pytest.raises(FileNotFoundError):
-        tx.snapshot(t, 0)
 
 
 def test_concurrent_commit_storm(spark, tmp_path):
@@ -608,11 +597,10 @@ def test_maintenance_lifecycle_ingest_compact_vacuum_time_travel(spark, tmp_path
     assert tx.snapshot(t).version == 3
 
 
-def test_run_silver_replay_after_ledger_crash_is_idempotent(spark, tmp_path):
-    """A crash BETWEEN the atomic Silver commit and record_ingested
-    replays the same batch on restart; the txn marker derived from the
-    batch's sorted source-file list must make the replayed append a
-    no-op instead of doubling the rows (ADVICE r8)."""
+def test_run_silver_replay_after_post_commit_crash_is_idempotent(spark, tmp_path, monkeypatch):
+    """A crash right after the atomic Silver commit returns: the ingest
+    record travelled in that commit, so the restart finds nothing new
+    and commits nothing — the rows stay single, one version in all."""
     from project_crypto_data_engineering_gcp_spark.fixtures import (
         N_ASSETS,
         write_fixture_landing,
@@ -628,23 +616,20 @@ def test_run_silver_replay_after_ledger_crash_is_idempotent(spark, tmp_path):
     out = str(tmp_path / "out")
     write_fixture_landing(landing, n_snapshots=2)
 
-    real_record = runner.record_ingested
-    def crash(*a, **k):
-        raise OSError("simulated crash after commit, before ledger")
-    runner.record_ingested = crash
-    try:
-        with pytest.raises(OSError, match="simulated crash"):
-            run_silver(spark, f"{landing}/coincap_data_*.json", out)
-    finally:
-        runner.record_ingested = real_record
+    real_write = runner.write_history
 
-    # restart: the ledger is empty so the SAME batch replays — the txn
-    # marker must swallow the duplicate append
-    assert run_silver(spark, f"{landing}/coincap_data_*.json", out) == 2 * N_ASSETS
+    def crash(df, path, **kw):
+        real_write(df, path, **kw)
+        raise OSError("simulated crash right after the Silver commit")
+
+    monkeypatch.setattr(runner, "write_history", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        run_silver(spark, f"{landing}/coincap_data_*.json", out)
+    monkeypatch.setattr(runner, "write_history", real_write)
+
+    assert run_silver(spark, f"{landing}/coincap_data_*.json", out) == 0
     assert read_silver(spark, out).count() == 2 * N_ASSETS  # not doubled
     assert tx.snapshot(silver_path(out)).version == 0  # one commit total
-    # and the ledger is now recorded: a rerun is a true no-op
-    assert run_silver(spark, f"{landing}/coincap_data_*.json", out) == 0
 
 
 def test_nested_data_dir_stays_invisible_to_legacy_machinery(spark, tmp_path):
@@ -764,43 +749,43 @@ def test_commit_retries_when_pinned_base_was_retracted(spark, tmp_path, monkeypa
     assert snap.version == 1
 
 
-def test_run_silver_txn_identity_lives_in_app_id(spark, tmp_path, monkeypatch):
-    """The idempotency marker scopes the batch digest into the txn
-    APP ID with a constant version — not a hash-derived version under
-    one appId. Delta's txnAppId/txnVersion contract silently skips any
-    write whose version is <= the last recorded one per appId, so
-    unordered hash versions would drop ~half of all legitimate new
-    batches under real delta-spark (ADVICE r9). Distinct batches must
-    carry distinct appIds; a replay repeats (appId, 0) exactly."""
+def test_run_silver_commit_carries_the_cumulative_record(spark, tmp_path, monkeypatch):
+    """Every Silver commit carries the COMPLETE ingest record in its
+    metadata (the files glob_files lists, sorted), and is pinned to the
+    version the record was read from (-1 for the first commit)."""
     from project_crypto_data_engineering_gcp_spark.fixtures import (
         write_fixture_landing,
     )
     from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources.hadoop_fs import (
+        glob_files,
+    )
 
     landing = str(tmp_path / "landing")
     out = str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
     paths = write_fixture_landing(landing, n_snapshots=3)
 
-    seen = []
+    pins = []
     real = runner.write_history
 
     def spy(df, path, **kw):
-        seen.append(kw.get("txn"))
+        pins.append(kw.get("expected_base_version"))
         return real(df, path, **kw)
 
     monkeypatch.setattr(runner, "write_history", spy)
     # batch 1: the first two snapshot files
     os.rename(paths[2], paths[2] + ".held")
-    assert runner.run_silver(spark, f"{landing}/coincap_data_*.json", out) > 0
-    # batch 2: the third file released — a DIFFERENT batch identity
+    assert runner.run_silver(spark, glob, out) > 0
+    first = glob_files(spark, glob)
+    # batch 2: the third file released
     os.rename(paths[2] + ".held", paths[2])
-    assert runner.run_silver(spark, f"{landing}/coincap_data_*.json", out) > 0
+    assert runner.run_silver(spark, glob, out) > 0
 
-    assert len(seen) == 2
-    (app_a, ver_a), (app_b, ver_b) = seen
-    assert ver_a == 0 and ver_b == 0  # constant version: monotonic per appId
-    assert app_a.startswith("run_silver:") and app_b.startswith("run_silver:")
-    assert app_a != app_b  # new batch => fresh appId => never skipped
+    assert pins == [-1, 0]
+    spath = runner.silver_path(out)
+    assert tx.snapshot(spath, 0).metadata["ingested"] == first
+    assert tx.snapshot(spath, 1).metadata["ingested"] == glob_files(spark, glob)
 
 
 def test_adoption_ledger_backfills_for_pre_ledger_tables(spark, tmp_path):

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Amplified-FILE-COUNT rehearsal for the medallion control plane
 (r11 verdict task 5): the per-query scale sweeps amplify ROWS, but
-`run_pipeline`'s own costs — glob listing, ledger anti-join, Silver
-txlog commit, Gold rebuild — scale with the number of landed snapshot
+`run_pipeline`'s own costs — glob listing, the set difference against
+the Silver commit's ingest record, Silver txlog commit, Gold rebuild — scale with the number of landed snapshot
 FILES (the reference's accumulated-unread-files semantics,
 `2-spark_processed_assats_list.py:37,76-87`). This tool measures them
 at x1/x10/x100 file counts directly:
@@ -10,13 +10,13 @@ at x1/x10/x100 file counts directly:
   bulk_ingest_sec  run_silver over ALL files fresh — one batch whose
                    new-file set is the whole landing (the backlog-drain
                    shape; also the worst-case txlog batch).
-  incr_ingest_sec  +1 new file against a fully-ledgered landing — the
+  incr_ingest_sec  +1 new file against a fully-recorded landing — the
                    steady-state per-batch overhead a poller pays: the
-                   glob still lists EVERY file, the ledger anti-join
+                   glob still lists EVERY file, the record difference
                    runs against the full history, the commit appends
-                   one file's rows.
+                   one file's rows and the grown record.
   noop_sec         rerun with nothing new — the pure control-plane
-                   floor (list + ledger + early-out).
+                   floor (list + record + early-out).
   gold_sec         full Gold rebuild reading the whole Silver history.
 
 Snapshots are synthesized 6h apart so the Silver dt-partition count
