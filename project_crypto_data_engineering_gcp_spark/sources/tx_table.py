@@ -67,6 +67,9 @@ class TxSnapshot:
     # reads hand it to the scan instead of inferring it from a footer,
     # which costs a Spark job per scan
     schema: str | None = None
+    # the data files this version staged (set on the snapshot
+    # :func:`commit` returns; empty on a snapshot read from the log)
+    added: tuple[str, ...] = ()
 
 
 def _log_path(table: str) -> str:
@@ -673,6 +676,7 @@ def commit(
             partition_by=pby,
             metadata=dict(metadata or {}),
             schema=manifest["schema"],
+            added=tuple(files),
         )
     raise last_err if last_err else RuntimeError("commit failed")
 

@@ -593,12 +593,160 @@ def test_cycles_leave_no_persisted_frames(spark, tmp_path, monkeypatch):
         raise OSError("simulated sink failure")
 
     _land(landing, SNAPSHOT_TS_MS[0] + 3 * 3_600_000)
+    real_write = runner.write_history
     monkeypatch.setattr(runner, "write_history", crash)
     with pytest.raises(OSError):
         run_silver(spark, glob, out)
     with pytest.raises(OSError):
         run_gold(spark, out, analysis_at=ANALYSIS_AT)
     assert persisted().size() == before
+
+    # one Gold table fails while the other three commit concurrently
+    monkeypatch.setattr(runner, "write_history", real_write)
+    monkeypatch.setitem(runner.GOLD_BUILDERS, "market_dominance", crash)
+    run_silver(spark, glob, out)
+    with pytest.raises(OSError):
+        run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    assert persisted().size() == before
+
+
+# ------------------------------------------------- one write per Gold frame
+
+
+def _gold_paths(out: str, name: str) -> tuple[str, str]:
+    return (
+        os.path.join(out, "gold", "history", name),
+        os.path.join(out, "gold", "serving", name),
+    )
+
+
+def test_serving_is_hard_linked_to_the_history_append(spark, tmp_path):
+    """Under txlog each serving copy is hard links to the files its
+    history commit added plus the frame's schema, swapped in with no
+    leftover temp dir, and it outlives the history's compact + vacuum."""
+    import json
+
+    from project_crypto_data_engineering_gcp_spark.plans.runner import GOLD_BUILDERS
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+    from project_crypto_data_engineering_gcp_spark.sources.sinks import SCHEMA_FILE
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    write_fixture_landing(landing, n_snapshots=1)
+    run_silver(spark, glob, out, processed_at=PROCESSED_AT)
+    run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    write_fixture_landing(landing, n_snapshots=2)
+    run_silver(spark, glob, out, processed_at=PROCESSED_AT)
+    gold = run_gold(spark, out, analysis_at=ANALYSIS_AT)
+
+    served = {}
+    for name in GOLD_BUILDERS:
+        history, serving = _gold_paths(out, name)
+        head = tx_table.snapshot(history)
+        added = set(head.files) - set(tx_table.snapshot(history, head.version - 1).files)
+        added_inodes = {os.stat(f).st_ino for f in added}
+        parquet = [f for f in os.listdir(serving) if f.endswith(".parquet")]
+        assert parquet, name
+        assert {os.stat(os.path.join(serving, f)).st_ino for f in parquet} <= added_inodes, name
+        with open(os.path.join(serving, SCHEMA_FILE)) as fh:
+            assert json.load(fh) == json.loads(head.schema) == json.loads(gold[name].schema.json())
+        rows = spark.read.parquet(serving)
+        _same_rows(rows, gold[name], name)
+        served[name] = (added, rows.collect())
+    siblings = os.listdir(os.path.join(out, "gold", "serving"))
+    assert sorted(siblings) == sorted(GOLD_BUILDERS)
+
+    for name in GOLD_BUILDERS:
+        history, serving = _gold_paths(out, name)
+        tx_table.compact(spark, history)
+        tx_table.vacuum(history, keep_last=1, retention_seconds=0)
+        added, rows = served[name]
+        assert not any(os.path.exists(f) for f in added), name
+        assert sorted(spark.read.parquet(serving).collect()) == sorted(rows), name
+
+
+def test_dashboard_starts_no_job_before_its_action(spark, tmp_path, monkeypatch):
+    """The serving copies carry their schema, so building the dashboard
+    starts no Spark job (a copy without the sidecar starts one, for
+    schema inference); a cycle makes exactly six Spark writes: Silver,
+    the ``_latest`` state and the four Gold history appends."""
+    from pyspark.sql import DataFrameWriter
+
+    from project_crypto_data_engineering_gcp_spark.sources.sinks import SCHEMA_FILE
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    write_fixture_landing(landing, n_snapshots=2)
+    writes = []
+    for method in ("parquet", "save"):
+        real = getattr(DataFrameWriter, method)
+
+        def spy(self, *args, _real=real, _name=method, **kwargs):
+            writes.append(_name)
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, method, spy)
+    run_silver(spark, glob, out, processed_at=PROCESSED_AT)
+    run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    assert len(writes) == 6
+    monkeypatch.undo()
+
+    sc = spark.sparkContext
+
+    def jobs_building_dashboard(group: str) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            dash = run_dashboard(spark, out)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert dash.count() == N_ASSETS
+        return jobs
+
+    assert jobs_building_dashboard("dashboard-pinned") == []
+    os.unlink(os.path.join(out, "gold", "serving", "daily_overview", SCHEMA_FILE))
+    assert len(jobs_building_dashboard("dashboard-inferred")) == 1
+
+
+def test_concurrent_gold_commits_keep_job_group_and_errors(spark, tmp_path, monkeypatch):
+    """The four Gold tables commit on worker threads: their jobs land in
+    the job group the caller of ``run_gold`` set, and a failing table
+    raises only after the other three have committed, leaving no
+    serving temp dir behind."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    write_fixture_landing(landing, n_snapshots=1)
+    run_silver(spark, glob, out, processed_at=PROCESSED_AT)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("gold-cycle", "gold-cycle")
+    try:
+        run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup()) == ungrouped
+    assert len(tracker.getJobIdsForGroup("gold-cycle")) >= 1 + len(runner.GOLD_BUILDERS)
+
+    def broken(latest, **kwargs):
+        raise ValueError("simulated Gold builder failure")
+
+    write_fixture_landing(landing, n_snapshots=2)
+    run_silver(spark, glob, out, processed_at=PROCESSED_AT)
+    versions = {n: tx_table.snapshot(_gold_paths(out, n)[0]).version for n in runner.GOLD_BUILDERS}
+    monkeypatch.setitem(runner.GOLD_BUILDERS, "top_gainers_losers", broken)
+    with pytest.raises(ValueError, match="simulated Gold builder failure"):
+        run_gold(spark, out, analysis_at=ANALYSIS_AT)
+    for name, v in versions.items():
+        want = v if name == "top_gainers_losers" else v + 1
+        assert tx_table.snapshot(_gold_paths(out, name)[0]).version == want, name
+    assert sorted(os.listdir(os.path.join(out, "gold", "serving"))) == sorted(versions)
 
 
 # ------------------------------------------------- the Silver ingest record
