@@ -4,8 +4,10 @@ Airflow DAG + Cloud Run + Dataproc submission, `4-dag_assats-list-full.py`).
 One driver process runs the stages sequentially; each stage is a plain
 function over DataFrames so the same code runs under any scheduler.
 
-Sink layout (all local-FS/parquet here; the paths are opaque URIs, so
-s3://... works unchanged):
+Sink layout (local-FS parquet here). The txlog history tables and the
+hard-linked serving copies need a local POSIX filesystem (``os.link``,
+``os.walk``, ``os.path.realpath``); on an object store (s3://...) both
+need delta-spark on the classpath:
 
   out/silver/assets/dt=YYYY-MM-DD/...   append, partitioned by snapshot date
   out/gold/_latest/                     latest-row-per-asset state (overwrite)

@@ -223,23 +223,11 @@ def read_history(
 ) -> DataFrame:
     """Read a history table written via :func:`write_history`.
     ``version`` pins an older snapshot (Delta ``versionAsOf`` / txlog
-    manifest) — time travel."""
+    manifest) — time travel. A txlog table with no committed version
+    raises ``FileNotFoundError``."""
     if history_format() == "delta":  # pragma: no cover - delta absent here
         reader = spark.read.format("delta")
         if version is not None:
             reader = reader.option("versionAsOf", version)
         return reader.load(path)
-    try:
-        return tx_table.read(spark, path, version, merge_schema=merge_schema)
-    except FileNotFoundError:
-        # fall back ONLY to a genuine pre-txlog layout (parquet outside
-        # the log/staging subtrees). A table with no committed version
-        # but staged data under data/ is an in-flight or crashed FIRST
-        # commit — reading it raw would surface uncommitted rows and
-        # break the atomicity contract (code-review r7).
-        if version is not None or not tx_table.has_legacy_files(path):
-            raise
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(path)
+    return tx_table.read(spark, path, version, merge_schema=merge_schema)

@@ -27,6 +27,10 @@ part:
   removes files unreferenced by the kept manifests (the only
   destructive operation, explicitly invoked).
 
+A txlog table is ``_txlog/`` plus ``data/`` and nothing else: the first
+commit refuses a directory that holds anything more (a plain-parquet
+table written without the log, say), rather than hide its rows.
+
 Local-FS scope, documented: ``os.link`` is atomic on POSIX
 filesystems; object stores need a conditional-put/contended-rename
 primitive instead (the same caveat Delta's LogStore abstracts). This is
@@ -121,8 +125,9 @@ def _stage_of(table: str, path: str) -> str:
     the first path component under ``data/``. Needed as the Spark
     ``basePath`` so hive-style ``key=value`` partition directories
     inside the stage are recovered as columns. Files OUTSIDE ``data/``
-    (a pre-txlog layout adopted as version 0) anchor at the table root,
-    which parses their partition dirs identically."""
+    anchor at the table root, which parses their partition dirs
+    identically: tables an older release adopted in place list them in
+    their manifests until a ``compact`` rewrites the rows into ``data/``."""
     data_root = os.path.join(table, _DATA_DIR)
     rel = os.path.relpath(path, data_root)
     if rel.split(os.sep)[0] == os.pardir:
@@ -254,181 +259,6 @@ def _fsync_tree(directory: str) -> None:
             os.close(fd)
 
 
-def _walk_legacy(table: str):
-    """os.walk over the table EXCLUDING the log/staging subtrees —
-    pruned at the walk level (``dirnames`` edit on a topdown walk), so
-    a vacuum of a table with thousands of staging dirs never stats them
-    here (code-review r8; the old relpath filter still descended into
-    and listed every pruned directory). Pruned at EVERY depth, matching
-    the original any-path-component exclusion exactly: a nested dir
-    literally named ``data`` inside a legacy layout stays invisible to
-    adoption AND to the vacuum legacy sweep — narrowing the exclusion
-    to the table root would let vacuum delete files that were never
-    adopted into any manifest (code-review r8, second pass)."""
-    for dirpath, dirnames, names in os.walk(table, topdown=True):
-        dirnames[:] = [d for d in dirnames if d not in (_LOG_DIR, _DATA_DIR)]
-        yield dirpath, dirnames, names
-
-
-def _adopted_ledger_file(table: str) -> str:
-    return os.path.join(_log_path(table), "adopted.json")
-
-
-def _adopted_files(table: str) -> set[str]:
-    """Files the table actually ADOPTED at migration (version 0) — the
-    only legacy paths vacuum may reclaim. Sources, in order: the durable
-    adoption ledger, else a still-present version-0 ``adopt`` manifest
-    (tables migrated before the ledger existed) — in which case the
-    ledger is BACKFILLED on the spot: vacuum deletes old manifests at
-    the end of its pass, so without the backfill a pre-ledger table
-    would lose its adoption record the first time manifest 0 ages out
-    and leak its adopted files forever (code-review r9). When neither
-    survives, returns empty — leaking an adopted file beats destroying
-    a user one (ADVICE r9)."""
-    with contextlib.suppress(FileNotFoundError, json.JSONDecodeError):
-        with open(_adopted_ledger_file(table)) as fh:
-            return set(json.load(fh))
-    with contextlib.suppress(FileNotFoundError, json.JSONDecodeError, KeyError):
-        with open(_manifest_file(table, 0)) as fh:
-            m = json.load(fh)
-        if m.get("mode") == "adopt":
-            _write_adopted_ledger(table, sorted(m["files"]))
-            return set(m["files"])
-    return set()
-
-
-def _write_adopted_ledger(table: str, files: list[str]) -> None:
-    """Atomically persist the adoption ledger (idempotent: the link
-    loser is a no-op). A concurrent vacuum's ``.tmp-*`` sweep can
-    unlink the tmp between write and link — retried with a fresh tmp,
-    because in the BACKFILL path this may be the same vacuum pass that
-    deletes manifest 0 (the only other record) at its end, so 'the
-    next reader retries' would have nothing left to read
-    (code-review r9 pass 2)."""
-    for _ in range(3):
-        tmp = os.path.join(
-            _log_path(table),
-            f".tmp-adopt-{os.getpid()}-{next(_STAGE_SEQ)}.ledger",
-        )
-        with open(tmp, "w") as fh:
-            json.dump(files, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, _adopted_ledger_file(table))
-        except FileExistsError:
-            pass  # another writer landed identical content
-        except FileNotFoundError:
-            continue  # tmp swept mid-link: retry with a fresh tmp
-        finally:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(tmp)
-        return
-    # exhausting the retries must be LOUD: in the backfill path the
-    # sweeping vacuum may delete manifest 0 — the only other record —
-    # at the end of its own pass, so returning silently here would be
-    # the permanent-leak outcome the retry exists to prevent
-    # (code-review r9 pass 3)
-    raise RuntimeError(
-        f"could not persist the adoption ledger for {table!r}: the tmp"
-        " file was swept by a concurrent vacuum on every attempt"
-    )
-
-
-def _legacy_files(table: str) -> list[str]:
-    """Parquet OUTSIDE the log/staging subtrees — the pre-txlog layout
-    :func:`_adopt_legacy` migrates."""
-    return sorted(
-        os.path.join(dirpath, f)
-        for dirpath, _, names in _walk_legacy(table)
-        for f in names
-        if f.endswith(".parquet")
-    )
-
-
-def has_legacy_files(table: str) -> bool:
-    """True when the pre-txlog layout exists — the ONLY layout
-    ``sinks.read_history`` may fall back to reading raw: staged-but-
-    uncommitted data under ``data/`` must stay invisible."""
-    return bool(_legacy_files(table))
-
-
-def _legacy_partition_keys(table: str, files: list[str]) -> tuple[str, ...]:
-    """The hive-style partition-key sequence a legacy layout actually
-    encodes: the ordered ``key=`` directory components of each file's
-    path relative to the table root. All files must agree — a mixed
-    layout has no single partition spec and cannot be adopted."""
-    keys: set[tuple[str, ...]] = set()
-    for f in files:
-        rel_dirs = os.path.relpath(os.path.dirname(f), table).split(os.sep)
-        keys.add(tuple(d.split("=", 1)[0] for d in rel_dirs if "=" in d))
-    if len(keys) > 1:
-        raise ValueError(
-            f"legacy layout under {table!r} mixes partition specs "
-            f"{sorted(keys)}; cannot adopt it as one txlog version"
-        )
-    return next(iter(keys)) if keys else ()
-
-
-def _adopt_legacy(table: str, pby: tuple[str, ...]) -> None:
-    """Migrate a pre-txlog plain-parquet directory in place: if the
-    table has NO committed version but parquet files exist outside the
-    log/staging subtrees (a layout written by the parquet fallback of
-    earlier releases), commit them as version 0 ('adopt') so the first
-    txlog append COMPOSES with the existing rows instead of silently
-    shadowing them. The files stay where they are — manifests reference
-    absolute paths, and ``read`` anchors their partition parsing at the
-    table root (hive-style ``key=value`` dirs keep working).
-
-    The manifest's ``partition_by`` is INFERRED from the legacy
-    directory structure, not trusted from the caller: stamping a
-    mismatched spec (e.g. ``None`` onto a hive-partitioned layout)
-    would make ``read`` silently drop the partition columns from the
-    adopted rows (ADVICE r8). A caller spec that disagrees with the
-    layout raises instead."""
-    if _versions(table):
-        return
-    legacy = _legacy_files(table)
-    if not legacy:
-        return
-    layout_pby = _legacy_partition_keys(table, legacy)
-    if layout_pby != pby:
-        raise ValueError(
-            f"cannot adopt legacy layout under {table!r}: its directory"
-            f" structure encodes partition_by={list(layout_pby)} but the"
-            f" first txlog commit requested {list(pby)} — migrate the"
-            f" files (or match the spec) before committing"
-        )
-    os.makedirs(_log_path(table), exist_ok=True)
-    manifest = {
-        "version": 0,
-        "mode": "adopt",
-        "files": sorted(legacy),
-        "partition_by": list(pby),
-    }
-    tmp = os.path.join(
-        _log_path(table), f".tmp-adopt-{os.getpid()}-{next(_STAGE_SEQ)}"
-    )
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    with contextlib.suppress(FileExistsError):
-        os.link(tmp, _manifest_file(table, 0))
-    with contextlib.suppress(FileNotFoundError):
-        os.unlink(tmp)
-    # Durable adoption ledger: vacuum's legacy sweep may only reclaim
-    # files that were ACTUALLY adopted into the table. The version-0
-    # manifest records them, but vacuum eventually deletes old
-    # manifests — this ledger (never vacuumed) preserves the record, so
-    # an unadopted parquet landing in the table directory AFTER the
-    # first commit is user data the sweep must never touch (ADVICE r9).
-    # Concurrent adopters write identical content (link loser no-op);
-    # a concurrent vacuum sweeping the tmp is survivable — manifest 0
-    # exists, so _adopted_files backfills on next read (code-review r9).
-    _write_adopted_ledger(table, sorted(legacy))
-
-
 def commit(
     df: DataFrame,
     table: str,
@@ -444,6 +274,10 @@ def commit(
     ``append`` keeps the previous snapshot's files and adds the new
     ones; ``overwrite`` replaces the active set (old files stay on disk
     for time travel until ``vacuum``). Returns the committed snapshot.
+
+    The first commit refuses (``ValueError``, nothing written) a
+    directory holding anything besides ``_txlog/`` and ``data/``: a
+    plain-parquet table there would be hidden, not read.
 
     ``partition_by`` writes hive-style ``key=value`` directories inside
     the staging dir (recovered as partition columns at read, with
@@ -475,14 +309,26 @@ def commit(
     # here with an absolute one there would classify every live file as
     # unreferenced (code-review r7)
     table = os.path.realpath(table)
-    os.makedirs(_log_path(table), exist_ok=True)
     pby = tuple(partition_by or ())
-    _adopt_legacy(table, pby)
 
     last_err: Exception | None = None
     corrupt_err: RuntimeError | None = None
     for attempt in range(max_retries):
         prior = _versions(table)
+        if not prior:
+            # a first commit would shadow whatever the directory already
+            # holds, so only the log and the staging root (all that a
+            # crashed first commit leaves) may be there
+            held = os.listdir(table) if os.path.isdir(table) else []
+            foreign = sorted(set(held) - {_LOG_DIR, _DATA_DIR})
+            if foreign:
+                raise ValueError(
+                    f"{table!r} is not a txlog table: it holds {foreign[:3]}"
+                    f" besides {_LOG_DIR}/ and {_DATA_DIR}/; refusing a first"
+                    " commit that would hide them — move them out or commit"
+                    " to a new directory"
+                )
+            os.makedirs(_log_path(table), exist_ok=True)
         version = (prior[-1] + 1) if prior else 0
         if expected_base_version is not None and version - 1 != expected_base_version:
             # read-modify-write callers must NOT retry over a base that
@@ -706,44 +552,15 @@ def compact(spark: SparkSession, table: str) -> TxSnapshot:
     )
 
 
-_SIDECARS = ("_SUCCESS",)
-
-
-def _prune_empty_legacy_dirs(table: str) -> None:
-    """Remove legacy subdirectories (outside the log/staging subtrees)
-    whose parquet has all been vacuumed: Spark's ``_SUCCESS``/``.crc``
-    sidecars go with them, exactly like the staging-dir rmtree above.
-    The table root itself is never removed (a root-level ``_SUCCESS``
-    from the legacy write is harmless and stays). One pruned topdown
-    walk, processed in reverse (children before parents) so emptied
-    parents cascade — a live re-list per dir, because a child removed
-    earlier in the pass still sits in the recorded walk entries."""
-    dirs = [dp for dp, _, _ in _walk_legacy(table) if dp != table]
-    for dirpath in reversed(dirs):
-        try:
-            names = os.listdir(dirpath)
-        except FileNotFoundError:
-            continue  # removed with an ancestor? (defensive; reversed
-            # order deletes children first, so normally unreachable)
-        if any(os.path.isdir(os.path.join(dirpath, d)) for d in names):
-            continue  # a surviving child dir means live data below
-        if all(
-            f in _SIDECARS or f.endswith(".crc") or f.startswith(".")
-            for f in names
-        ):
-            shutil.rmtree(dirpath)
-
-
 def vacuum(
     table: str, keep_last: int = 2, *, retention_seconds: float = 3600.0
 ) -> list[str]:
     """Delete data files unreferenced by the ``keep_last`` newest
     manifests (and drop the older manifests) — the only destructive
     operation; readers pinned to a vacuumed version lose it, exactly
-    like Delta's VACUUM. Covers staged files under ``data/`` AND
-    adopted legacy files outside it (a migrated table fully reclaims
-    its pre-txlog layout once nothing references it). Returns the
-    deleted parquet paths.
+    like Delta's VACUUM. Deletes only under ``data/`` and ``_txlog/``,
+    never anything else in the table directory. Returns the deleted
+    parquet paths.
 
     ``retention_seconds`` protects everything RECENT (Delta's retention
     check, default 1 h here vs Delta's 7 days), uniformly:
@@ -799,21 +616,6 @@ def vacuum(
             if f not in live:
                 os.unlink(f)
                 deleted.append(f)
-    # adopted legacy files live OUTSIDE data/ — without this sweep they
-    # would leak forever once every manifest referencing them is gone
-    # (overwrite + vacuum), and has_legacy_files would stay true for an
-    # already-migrated table (ADVICE r8). Restricted to files the table
-    # actually ADOPTED (the durable ledger _adopt_legacy writes): a
-    # parquet landing in the table dir after the first commit was never
-    # referenced by any manifest and is user data, not reclaimable
-    # garbage — the doctrine test_nested_data_dir_stays_invisible
-    # already states, now applied to every unadopted path (ADVICE r9).
-    adopted = _adopted_files(table)
-    for f in _legacy_files(table):
-        if f in adopted and f not in live and os.path.getmtime(f) <= cutoff:
-            os.unlink(f)
-            deleted.append(f)
-    _prune_empty_legacy_dirs(table)
     for v in versions:
         if v not in keep:
             os.unlink(_manifest_file(table, v))

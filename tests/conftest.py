@@ -49,6 +49,18 @@ def pytest_collection_modifyitems(config, items):
         config.hook.pytest_deselected(items=moved)
 
 
+def dir_tree(root: str) -> dict[str, bytes | None]:
+    """Every directory (None) and file (its bytes) under ``root``: two
+    equal trees are byte-identical."""
+    out: dict[str, bytes | None] = {}
+    for dirpath, _, names in os.walk(root):
+        out[os.path.relpath(dirpath, root)] = None
+        for f in names:
+            with open(os.path.join(dirpath, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(dirpath, f), root)] = fh.read()
+    return out
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("spark_graft_tests", shuffle_partitions=8)

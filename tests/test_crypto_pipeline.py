@@ -28,6 +28,7 @@ from project_crypto_data_engineering_gcp_spark.plans.runner import (
 )
 from project_crypto_data_engineering_gcp_spark.sources.json_source import read_raw_json
 
+from .conftest import dir_tree
 from .fixtures_crypto import N_ASSETS, SNAPSHOT_TS_MS, write_fixture_landing
 from .oracle_harness import assert_frames_match
 
@@ -872,3 +873,28 @@ def test_run_silver_refuses_a_table_without_record(spark, tmp_path):
         run_silver(spark, glob, out)
     assert tx_table.snapshot(spath).version == 0
     assert runner.read_silver(spark, out).count() == 2 * N_ASSETS
+
+
+def test_run_silver_refuses_a_plain_parquet_silver_dir(spark, tmp_path):
+    """A Silver directory of plain partitioned parquet (no ``_txlog``, as
+    releases before the txlog table wrote it): ``run_silver`` raises on
+    first contact and leaves the directory byte-identical — no version,
+    no ``data/``, no ledger — and a rerun raises the same way."""
+    from project_crypto_data_engineering_gcp_spark.plans import runner
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
+    glob = f"{landing}/coincap_data_*.json"
+    write_fixture_landing(landing, n_snapshots=2)
+    old = bronze_to_silver(read_raw_json(spark, glob), processed_at=PROCESSED_AT)
+    spath = runner.silver_path(out)
+    old.drop("_source_file").withColumn(
+        "dt", F.substring("data_referencia", 1, 10)
+    ).write.partitionBy("dt").parquet(spath)
+
+    before = dir_tree(spath)
+    for _ in range(2):
+        with pytest.raises(ValueError, match="is not a txlog table"):
+            run_silver(spark, glob, out)
+        assert dir_tree(spath) == before
+    assert not {"_txlog", "data"} & set(os.listdir(spath))
+    assert spark.read.parquet(spath).count() == 2 * N_ASSETS

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from project_crypto_data_engineering_gcp_spark.sources import tx_table as tx
 
+from .conftest import dir_tree
+
 
 def _ids(df) -> list[int]:
     return sorted(r[0] for r in df.select("id").collect())
@@ -379,35 +381,76 @@ def test_compact_refuses_lost_update(spark, tmp_path):
     assert _ids(tx.read(spark, t)) == [0, 1, 2, 10, 11]
 
 
-def test_legacy_parquet_dir_adopted_as_version_zero(spark, tmp_path):
-    """A pre-txlog plain-parquet table (partitioned, written by an older
-    release) is adopted in place as version 0 on the first txlog append
-    — prior rows COMPOSE with the new batch instead of being shadowed
-    (code-review r7: the silent-data-loss upgrade path)."""
+def test_first_commit_refuses_a_plain_parquet_dir(spark, tmp_path):
+    """A plain-parquet table (partitioned, written without the log) is
+    not a txlog table: the first commit into its directory raises and
+    writes nothing, instead of committing a version that hides the rows
+    already there."""
     t = str(tmp_path / "tbl")
     spark.createDataFrame(
         [(1, "2025-06-01"), (2, "2025-06-02")], "id int, dt string"
     ).write.partitionBy("dt").parquet(t)
+    before = dir_tree(t)
 
+    with pytest.raises(ValueError, match="is not a txlog table"):
+        tx.commit(
+            spark.createDataFrame([(3, "2025-06-03")], "id int, dt string"),
+            t,
+            "append",
+            partition_by=["dt"],
+        )
+    assert dir_tree(t) == before  # no _txlog/, no data/, no ledger
+    assert tx._versions(t) == []
+    back = spark.read.parquet(t)
+    assert _ids(back) == [1, 2]
+    assert set(back.columns) == {"id", "dt"}
+
+
+def test_table_adopted_by_an_older_release_reads_and_compacts(spark, tmp_path):
+    """An older release adopted plain-parquet tables in place: a
+    version-0 ``adopt`` manifest listing files OUTSIDE data/. Such a
+    table still reads (partition columns recovered at the table root),
+    appends, and ``compact`` moves its live rows into data/; vacuum then
+    leaves the files outside data/ on disk (a leak of files, never of
+    rows)."""
+    t = str(tmp_path / "tbl")
+    spark.createDataFrame(
+        [(1, "2025-06-01"), (2, "2025-06-02")], "id int, dt string"
+    ).write.partitionBy("dt").parquet(t)
+    outside = tx._parquet_files(t)
+    os.makedirs(os.path.join(t, "_txlog"))
+    with open(os.path.join(t, "_txlog", "00000000.json"), "w") as fh:
+        json.dump(
+            {"version": 0, "mode": "adopt", "files": outside, "partition_by": ["dt"]},
+            fh,
+        )
+
+    back = tx.read(spark, t)
+    assert _ids(back) == [1, 2]
+    assert set(back.columns) == {"id", "dt"}
     tx.commit(
         spark.createDataFrame([(3, "2025-06-03")], "id int, dt string"),
         t,
         "append",
         partition_by=["dt"],
     )
-    back = tx.read(spark, t)
-    assert _ids(back) == [1, 2, 3]
-    assert set(back.columns) == {"id", "dt"}
-    # the adopted layout is version 0, the append version 1
-    assert tx.read(spark, t, version=0).count() == 2
-    assert tx.snapshot(t, 0).mode == "adopt"
+    assert _ids(tx.read(spark, t)) == [1, 2, 3]
+
+    snap = tx.compact(spark, t)
+    data_root = os.path.join(t, "data") + os.sep
+    assert snap.files and all(f.startswith(data_root) for f in snap.files)
+    deleted = tx.vacuum(t, keep_last=1, retention_seconds=0)
+    assert all(f.startswith(data_root) for f in deleted)
+    assert all(os.path.exists(f) for f in outside)
+    assert _ids(tx.read(spark, t)) == [1, 2, 3]
+    assert tx._versions(t) == [2]
 
 
 def test_read_history_never_surfaces_uncommitted_staging(spark, tmp_path):
-    """sinks.read_history falls back to raw parquet ONLY for a genuine
-    pre-txlog layout: a table whose first commit crashed after staging
-    (data under data/, empty log) must raise, not serve the uncommitted
-    rows (code-review r7)."""
+    """A table whose first commit crashed after staging (data under
+    data/, empty log) must raise on read, not serve the uncommitted rows
+    — and the next first commit still goes through: the crash left
+    nothing but the log and the staging root."""
     from project_crypto_data_engineering_gcp_spark.sources.sinks import (
         read_history,
     )
@@ -415,13 +458,11 @@ def test_read_history_never_surfaces_uncommitted_staging(spark, tmp_path):
     t = str(tmp_path / "tbl")
     os.makedirs(os.path.join(t, "_txlog"))
     spark.range(5).write.parquet(os.path.join(t, "data", "v00000000-dead"))
-    with pytest.raises(Exception):
+    with pytest.raises(FileNotFoundError):
         read_history(spark, t).count()
 
-    # the genuine legacy layout still reads
-    t2 = str(tmp_path / "tbl2")
-    spark.range(3).write.parquet(t2)
-    assert read_history(spark, t2).count() == 3
+    assert tx.commit(spark.range(10, 12), t, "append").version == 0
+    assert _ids(read_history(spark, t)) == [10, 11]
 
 
 def test_concurrent_commit_storm(spark, tmp_path):
@@ -488,64 +529,6 @@ def test_commit_refuses_corrupt_base(spark, tmp_path):
     # the rolled-back version is not visible: latest is still v0
     assert tx.snapshot(t).version == 0
     assert not os.path.exists(os.path.join(t, "_txlog", "00000001.json"))
-
-
-def test_adopt_legacy_partition_mismatch_raises(spark, tmp_path):
-    """_adopt_legacy infers the partition spec from the legacy layout's
-    key=value directories instead of trusting the caller: a mismatched
-    first commit must raise, not silently drop the partition column
-    from the adopted rows at read time (ADVICE r8)."""
-    # hive-partitioned legacy adopted by an UNPARTITIONED first commit
-    t = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "2025-06-01"), (2, "2025-06-02")], "id int, dt string"
-    ).write.partitionBy("dt").parquet(t)
-    with pytest.raises(ValueError, match="encodes partition_by=\\['dt'\\]"):
-        tx.commit(spark.range(3, 5), t, "append")
-    assert tx._versions(t) == []  # nothing was adopted or committed
-
-    # unpartitioned legacy adopted by a PARTITIONED first commit
-    t2 = str(tmp_path / "tbl2")
-    spark.range(3).write.parquet(t2)
-    with pytest.raises(ValueError, match="encodes partition_by=\\[\\]"):
-        tx.commit(
-            spark.createDataFrame([(9, "2025-06-09")], "id int, dt string"),
-            t2,
-            "append",
-            partition_by=["dt"],
-        )
-
-
-def test_vacuum_reclaims_adopted_legacy_files(spark, tmp_path):
-    """Adopted legacy files live OUTSIDE data/ — once every retained
-    manifest stops referencing them (overwrite + vacuum) they must be
-    reclaimed like any other dead file, their key=value dirs pruned,
-    and has_legacy_files must flip false for the migrated table
-    (ADVICE r8: the indefinite on-disk leak)."""
-    t = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "2025-06-01"), (2, "2025-06-02")], "id int, dt string"
-    ).write.partitionBy("dt").parquet(t)
-
-    tx.commit(
-        spark.createDataFrame([(3, "2025-06-03")], "id int, dt string"),
-        t,
-        "append",
-        partition_by=["dt"],
-    )
-    assert _ids(tx.read(spark, t)) == [1, 2, 3]
-    tx.commit(
-        spark.createDataFrame([(9, "2025-06-09")], "id int, dt string"),
-        t,
-        "overwrite",
-        partition_by=["dt"],
-    )
-    deleted = tx.vacuum(t, keep_last=1, retention_seconds=0)
-    assert any(os.sep + "dt=2025-06-01" + os.sep in f for f in deleted)
-    assert not tx.has_legacy_files(t)
-    assert not os.path.isdir(os.path.join(t, "dt=2025-06-01"))
-    # the live snapshot is untouched
-    assert _ids(tx.read(spark, t)) == [9]
 
 
 def test_maintenance_lifecycle_ingest_compact_vacuum_time_travel(spark, tmp_path):
@@ -632,82 +615,26 @@ def test_run_silver_replay_after_post_commit_crash_is_idempotent(spark, tmp_path
     assert tx.snapshot(silver_path(out)).version == 0  # one commit total
 
 
-def test_nested_data_dir_stays_invisible_to_legacy_machinery(spark, tmp_path):
-    """A legacy layout containing a NESTED directory literally named
-    'data' (table/foo/data/x.parquet) is excluded from adoption by the
-    any-depth component filter — so vacuum's legacy sweep must never
-    delete it either: unadopted-but-invisible files are user data, not
-    reclaimable garbage (code-review r8 second pass: narrowing the
-    exclusion to the table root would have vacuumed them)."""
+def test_vacuum_never_touches_files_outside_data(spark, tmp_path):
+    """vacuum deletes only under data/ and _txlog/: parquet placed in the
+    table directory after the first commit — a top-level dir, or a
+    nested one literally named 'data' — is never referenced by a
+    manifest, never read, and survives an aged vacuum that reclaims
+    everything dead under data/."""
     t = str(tmp_path / "tbl")
-    nested = os.path.join(t, "foo", "data")
-    spark.range(3).write.parquet(os.path.join(t, "legacy_top"))
-    spark.range(100, 103).write.parquet(nested)
-
-    # adoption sees ONLY the top-level legacy parquet
     tx.commit(spark.range(10, 12), t, "append")
-    assert _ids(tx.read(spark, t)) == [0, 1, 2, 10, 11]
-
-    # overwrite + aged vacuum reclaims the ADOPTED legacy files...
-    tx.commit(spark.range(50, 52), t, "overwrite")
-    deleted = tx.vacuum(t, keep_last=1, retention_seconds=0)
-    assert any("legacy_top" in f for f in deleted)
-    # ...but never the invisible nested-'data' files
-    assert not any(os.sep + "foo" + os.sep in f for f in deleted)
-    nested_files = [f for f in os.listdir(nested) if f.endswith(".parquet")]
-    assert nested_files, "nested data/ parquet must survive vacuum"
-    assert _ids(tx.read(spark, t)) == [50, 51]
-
-
-def test_vacuum_never_reclaims_post_adoption_user_files(spark, tmp_path):
-    """Only files actually ADOPTED at migration are reclaimable by the
-    legacy sweep: a parquet landing in the table directory AFTER the
-    first commit was never referenced by any manifest and is user data
-    — an aged vacuum must leave it alone, even while reclaiming the
-    genuinely-adopted legacy files next to it (ADVICE r9: the sweep
-    used to unlink EVERY unreferenced parquet outside log/data)."""
-    t = str(tmp_path / "tbl")
-    spark.range(3).write.parquet(t)  # legacy layout, adopted below
-    tx.commit(spark.range(10, 12), t, "append")  # v0=adopt, v1=append
-    # user data lands post-adoption — no manifest ever references it
     user_dir = os.path.join(t, "user_drop")
+    nested = os.path.join(t, "foo", "data")
     spark.range(100, 103).write.parquet(user_dir)
+    spark.range(200, 203).write.parquet(nested)
+    user_files = tx._parquet_files(user_dir) + tx._parquet_files(nested)
+    assert _ids(tx.read(spark, t)) == [10, 11]
 
     tx.commit(spark.range(50, 52), t, "overwrite")
     deleted = tx.vacuum(t, keep_last=1, retention_seconds=0)
-
-    # adopted legacy reclaimed...
-    assert any(os.path.dirname(f) == t for f in deleted)
-    # ...user files untouched (not deleted, still on disk)
-    assert not any("user_drop" in f for f in deleted)
-    user_files = [f for f in os.listdir(user_dir) if f.endswith(".parquet")]
-    assert user_files, "post-adoption user parquet must survive vacuum"
-    assert _ids(tx.read(spark, t)) == [50, 51]
-
-
-def test_adoption_ledger_survives_manifest_vacuum(spark, tmp_path):
-    """The adopted-file record must outlive the version-0 manifest:
-    vacuum deletes old manifests, and a LATER vacuum still needs to
-    know which legacy files are reclaimable. The durable adoption
-    ledger (never vacuumed) carries that across (ADVICE r9)."""
-    t = str(tmp_path / "tbl")
-    spark.range(3).write.parquet(t)  # legacy, adopted at first commit
-    tx.commit(spark.range(10, 12), t, "append")  # v1
-    tx.commit(spark.range(20, 22), t, "append")  # v2
-
-    # first vacuum: drops manifests 0 and 1; adopted files are still
-    # LIVE (v2 inherits them) so they survive
-    tx.vacuum(t, keep_last=1, retention_seconds=0)
-    assert not os.path.exists(os.path.join(t, "_txlog", "00000000.json"))
-    assert _ids(tx.read(spark, t)) == [0, 1, 2, 10, 11, 20, 21]
-
-    # overwrite, then vacuum again: manifest 0 is long gone, so only
-    # the ledger knows the root-level parquet was adopted — it must
-    # still be reclaimed (not leak as presumed user data)
-    tx.commit(spark.range(50, 52), t, "overwrite")
-    deleted = tx.vacuum(t, keep_last=1, retention_seconds=0)
-    assert any(os.path.dirname(f) == t for f in deleted)
-    assert not tx.has_legacy_files(t)
+    assert deleted  # the overwritten v0 stage was reclaimed
+    assert all(f.startswith(os.path.join(t, "data") + os.sep) for f in deleted)
+    assert all(os.path.exists(f) for f in user_files)
     assert _ids(tx.read(spark, t)) == [50, 51]
 
 
@@ -786,71 +713,3 @@ def test_run_silver_commit_carries_the_cumulative_record(spark, tmp_path, monkey
     spath = runner.silver_path(out)
     assert tx.snapshot(spath, 0).metadata["ingested"] == first
     assert tx.snapshot(spath, 1).metadata["ingested"] == glob_files(spark, glob)
-
-
-def test_adoption_ledger_backfills_for_pre_ledger_tables(spark, tmp_path):
-    """A table migrated BEFORE the adoption ledger existed (version-0
-    adopt manifest, no adopted.json) must have its ledger backfilled on
-    first read — otherwise the first vacuum that ages manifest 0 out
-    destroys the adoption record and the adopted files leak forever
-    (code-review r9, the upgrade-path hole in the ADVICE-r9 fix)."""
-    t = str(tmp_path / "tbl")
-    spark.range(3).write.parquet(t)  # legacy, adopted at first commit
-    tx.commit(spark.range(10, 12), t, "append")
-    # simulate the pre-ledger table: drop the ledger the adoption wrote
-    os.unlink(tx._adopted_ledger_file(t))
-
-    tx.commit(spark.range(20, 22), t, "append")  # v2
-    # vacuum #1: adopted files still live (v2 inherits), manifest 0 ages
-    # out — the sweep's _adopted_files call must backfill the ledger
-    tx.vacuum(t, keep_last=1, retention_seconds=0)
-    assert not os.path.exists(os.path.join(t, "_txlog", "00000000.json"))
-    assert os.path.exists(tx._adopted_ledger_file(t))
-
-    # vacuum #2 after overwrite: only the backfilled ledger knows the
-    # root parquet was adopted — it must be reclaimed, not leak
-    tx.commit(spark.range(50, 52), t, "overwrite")
-    deleted = tx.vacuum(t, keep_last=1, retention_seconds=0)
-    assert any(os.path.dirname(f) == t for f in deleted)
-    assert not tx.has_legacy_files(t)
-    assert _ids(tx.read(spark, t)) == [50, 51]
-
-
-def test_concurrent_adoption_storm(spark, tmp_path):
-    """Adoption race: 4 threads race their FIRST commit onto a legacy
-    parquet layout. Invariants: exactly one version-0 adopt manifest,
-    one adoption ledger holding exactly the legacy files, all four
-    appends land (versions contiguous), and the final frame composes
-    the legacy rows with every writer's — exercising the ledger's
-    link-loser-is-a-no-op path under real concurrency (r9)."""
-    import threading
-
-    t = str(tmp_path / "tbl")
-    spark.range(3).write.parquet(t)  # the legacy layout all four adopt
-    legacy_before = set(tx._legacy_files(t))
-    errors: list[Exception] = []
-
-    def writer(base: int) -> None:
-        try:
-            tx.commit(spark.range(base, base + 2), t, "append")
-        except Exception as e:  # pragma: no cover - failure surface
-            errors.append(e)
-
-    threads = [
-        threading.Thread(target=writer, args=(100 * (i + 1),)) for i in range(4)
-    ]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert not errors, errors
-    # one adopt manifest at version 0, then the four appends
-    assert tx._versions(t) == [0, 1, 2, 3, 4]
-    with open(os.path.join(t, "_txlog", "00000000.json")) as fh:
-        assert json.load(fh)["mode"] == "adopt"
-    assert tx._adopted_files(t) == legacy_before
-    got = _ids(tx.read(spark, t))
-    expect = [0, 1, 2] + sorted(
-        x for b in (100, 200, 300, 400) for x in (b, b + 1)
-    )
-    assert got == expect
