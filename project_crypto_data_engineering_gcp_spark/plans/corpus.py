@@ -40,64 +40,16 @@ class CorpusQuery:
 
 _REGISTRY: dict[str, CorpusQuery] = {}
 
-# r13 WINDOW (this round; the rotation the r12 window comment and the
-# r12 VERDICT (task 5) declared): the five r12 additions lead (policy
-# (a): never driver-checked in ANY of CORRECTNESS_r01..r12 — each has
-# local parity at sf0.001/0.01/0.1, a fuzz seat, and a scale-sweep
-# row), then the three queries REWRITTEN this round join per policy
-# (b) (o9: value-grain single scan; a23: wide conditional aggregate;
-# graph_pagerank: broadcast-state rounds — results bit-identical in
-# every case, but a rewritten query re-earns its driver row), then
-# the 48-entry r8-latest rollover from the r12 comment (policy (c)),
-# in its declared order. 5 + 3 + 42 = 50; the last 6 r8-latest
-# entries (pivot_status_by_priority, set_ops_orderkeys,
-# sim_cosine_pairs, sim_embedding_norms, text_fingerprint,
-# text_lang_id) overflow and LEAD the r14 window,
-# followed by the r9-latest set oldest-first (compute it at r14 start
-# from CORRECTNESS_r01..r13). After this round's check the staleness
-# ledger reads r13x50, r12x50, r11x50, r10x50, r9x44(+6 r8-latest
-# stragglers) — max staleness 5 rounds for exactly those 4 entries,
-# one round above the documented ~4-round floor, self-correcting at
-# r14 (README "Driver-window rotation policy").
-#
-# STALENESS TRIAGE (standing, r4 verdict task 5) — with ~250 queries
-# and a ~50-slot window, the "newest row <= 2 rounds old" invariant is
-# arithmetically unkeepable (a full rotation takes ~4.5 rounds); policy:
-#   (a) never-checked queries ALWAYS lead the next window,
-#   (b) queries rewritten/refactored since their last row join them,
-#   (c) remaining slots refresh oldest-first,
-# so every query's newest row stays at most ~4-5 rounds old.
-#
-# History: r1 covered entries 1-50 of the original order, r2 the
-# crypto/TPC-H/curation priority set, r3 the never-checked 26 + r3
-# additions, r4 the 38 r1-only refreshers + r4 additions, r5 the
-# 37-entry late-r4 queue + 5 r5 additions + the 8 r2-stale
-# crypto/pandas entries, r6 the 12-entry r5 rollover queue + all 37
-# r2-stale refreshers (TPC-H q1-q22 incl.) + sim_ivf_cell_stats, r7
-# the 18-entry r6 rollover + 32 r3-stale refreshers, r8 the 22-entry
-# r7 rollover + 28 r4-stale refreshers, r9 the 8 r8 additions + the
-# 22-entry r8 rollover + 20 r5-stale refreshers, r10 the 7 r9
-# additions + the 30-entry r5-stale rollover + the first 13 r6-latest,
-# r11 the 6 r10 additions + the 36-entry r6-latest rollover + the
-# first 8 r7-latest, r12 the 6 r11 additions + the 42-entry r7-latest
-# rollover + the first 2 r8-latest (50/50 green every round; zero red
-# rows ever).
+# Leads all_queries() in this order: __spark_entry__.queries() exposes it.
 CHECK_WINDOW_PRIORITY: tuple[str, ...] = (
-    # ---- r12 additions (5), policy (a): never driver-checked ----
     "o10_weighted_p90_prices",
     "a40_bitmap_distinct_users",
     "dedup_within_watermark_batch",
     "w9_session_window_native",
     "p15_variant_extract",
-    # ---- policy (b): rewritten this round (r13 wmedian value-grain;
-    # o10 above is ALSO rewritten — (1e5,1e3) -> (1e5,) — and already
-    # leads via policy (a)) ----
     "o9_weighted_median_skewed",
     "a23_bootstrap_ci",
     "graph_pagerank",
-    # ---- the 48-entry r8-latest rollover from the r12 window comment,
-    # policy (c), in its declared order; the first 42 complete the
-    # 50-slot window, the last 6 overflow into r14 ----
     "a29_welch_ttest",
     "dq_histogram_drift",
     "feat_hashing_trick",
@@ -140,8 +92,6 @@ CHECK_WINDOW_PRIORITY: tuple[str, ...] = (
     "p1_event_json_projection",
     "p9_round_family",
     "percentiles_acctbal_by_nation",
-    # ---- r14 OVERFLOW QUEUE (positions 51+): these 6 lead the r14
-    # window, then the r9-latest set oldest-first ----
     "pivot_status_by_priority",
     "set_ops_orderkeys",
     "sim_cosine_pairs",

@@ -4,17 +4,17 @@ Airflow DAG + Cloud Run + Dataproc submission, `4-dag_assats-list-full.py`).
 One driver process runs the stages sequentially; each stage is a plain
 function over DataFrames so the same code runs under any scheduler.
 
-Sink layout (local-FS parquet here). The txlog history tables and the
-hard-linked serving copies need a local POSIX filesystem (``os.link``,
-``os.walk``, ``os.path.realpath``); on an object store (s3://...) both
-need delta-spark on the classpath:
+Sink layout. The txlog history tables and the hard-linked serving
+copies need a local POSIX filesystem (``os.link``, ``os.walk``); an out
+dir with a URI scheme (``s3a://...``) is refused before anything is
+written:
 
   out/silver/assets/dt=YYYY-MM-DD/...   append, partitioned by snapshot date
   out/gold/_latest/                     latest-row-per-asset state (overwrite)
   out/gold/history/<table>/...          append (reference Delta mode, Q4)
   out/gold/serving/<table>/...          overwrite (reference BigQuery mode):
-                                        under txlog, hard links to the files
-                                        of the history append + _schema.json
+                                        hard links to the files of the
+                                        history append + _schema.json
 
 Partitioning Silver by ``dt`` fixes the reference's unpartitioned-table
 gap (readme:88 vs 2:65) and buys dynamic partition pruning for every
@@ -32,9 +32,9 @@ An hourly cycle costs the new snapshot, not the history:
   metadata). A cycle merges that state with only the Silver rows added
   since — the manifest file-set difference — so late, out-of-order or
   re-landed snapshots fold in exactly as a full recompute would. With no
-  usable state or diff (first run, Delta, a compacted or vacuumed Silver,
-  a lost ``_latest`` dir) the same code reads all of Silver with no
-  prior state: the full recompute.
+  usable state or diff (first run, a compacted or vacuumed Silver, a
+  lost ``_latest`` dir) the same code reads all of Silver with no prior
+  state: the full recompute.
 - Each Gold frame is computed and written once, by its history append;
   the serving copy links the files that append wrote (``sinks.write_serving``),
   so the dashboard reads it with a pinned schema and no inference job.
@@ -53,10 +53,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..sources.hadoop_fs import as_path, glob_files
 from ..sources.json_source import read_raw_json
 from ..sources.ledger import filter_new_files, record_ingested, recorded_files
+from ..sources import tx_table
 from ..sources.sinks import (
     history_snapshot,
     read_history,
-    read_history_added,
     read_table,
     write_history,
     write_serving,
@@ -97,8 +97,8 @@ def run_silver(
 ) -> int:
     """Bronze -> Silver increment: parse the landed files the Silver
     ingest record lacks and append their rows, together with the grown
-    record, in ONE atomic commit (Delta transaction or txlog manifest;
-    every batch is a time-travelable version, reference S5 `2:65`).
+    record, in ONE atomic txlog commit (every batch is a time-travelable
+    version, reference S5 `2:65`).
     Returns rows appended.
 
     Exactly-once: the commit is pinned to the Silver version the record
@@ -179,7 +179,7 @@ def _silver_since_state(
     covered = state.metadata.get("silver_version") if state else None
     added = None
     if covered is not None and version is not None:
-        added = read_history_added(spark, spath, covered, version)
+        added = tx_table.read_added(spark, spath, covered, version)
     if added is None:  # no usable state or diff: the full recompute
         return read_history(spark, spath, version=version), None, version
     return added, read_history(spark, state_path, version=state.version), version
@@ -207,9 +207,7 @@ def run_gold(
 
     def commit_table(name: str, build) -> DataFrame:
         df = build(latest, analysis_at=analysis_at)
-        added = write_history(
-            df, os.path.join(out_dir, "gold", "history", name), merge_schema=True
-        )
+        added = write_history(df, os.path.join(out_dir, "gold", "history", name))
         write_serving(df, os.path.join(out_dir, "gold", "serving", name), added)
         return df
 
@@ -240,7 +238,7 @@ def read_silver(
     spark: SparkSession, out_dir: str, version: int | None = None
 ) -> DataFrame:
     """Read the Silver table; ``version`` time-travels to an older
-    ingest batch (Delta ``VERSION AS OF`` / txlog manifest pin)."""
+    ingest batch (the txlog manifest pin)."""
     return read_history(spark, silver_path(out_dir), version=version)
 
 
@@ -248,8 +246,8 @@ def read_gold_history(
     spark: SparkSession, out_dir: str, name: str, version: int | None = None
 ) -> DataFrame:
     """Read a gold HISTORY table with schema merging across appends
-    (reference S7 `3:86-90`: Delta merges schema at write; under txlog
-    the union schema is resolved at READ — older rows surface NULL for
+    (reference S7 `3:86-90`: Delta merges schema at write; the txlog
+    resolves the union schema at READ — older rows surface NULL for
     columns added later). ``version`` time-travels to an older append."""
     return read_history(
         spark,

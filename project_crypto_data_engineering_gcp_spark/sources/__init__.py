@@ -8,14 +8,7 @@ from .json_source import (
 )
 from .http_source import default_fetcher, fixture_fetcher, ingest_snapshot
 from .ledger import filter_new_files, record_ingested, recorded_files
-from .sinks import (
-    formatted,
-    history_format,
-    read_history,
-    read_table,
-    table_format,
-    write_history,
-)
+from .sinks import read_history, read_table, write_history
 
 __all__ = [
     "load_table",
@@ -31,10 +24,7 @@ __all__ = [
     "filter_new_files",
     "record_ingested",
     "recorded_files",
-    "formatted",
-    "history_format",
     "read_history",
     "read_table",
-    "table_format",
     "write_history",
 ]

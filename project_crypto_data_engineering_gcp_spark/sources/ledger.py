@@ -4,8 +4,8 @@ The reference marks raw files processed by RENAMING them
 (`2-spark_processed_assats_list.py:69-87` — `X.json` -> `read_X.json`), a
 protocol that mutates the landing zone and races concurrent readers. The
 engine leaves the landing zone alone. Every Silver commit carries, in its
-commit metadata (txlog manifest ``metadata``, Delta ``userMetadata``),
-the cumulative set of source files Silver holds — the Hadoop path strings
+commit metadata (the txlog manifest's ``metadata``), the cumulative set
+of source files Silver holds — the Hadoop path strings
 :func:`hadoop_fs.glob_files` lists, sorted — and the files quarantined as
 unparseable. Like the manifest's file list, the record is complete at
 every version, so the one atomic commit that appends a batch's rows also

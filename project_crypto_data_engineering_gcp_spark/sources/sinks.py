@@ -1,28 +1,23 @@
-"""Table sink format selection: Delta when available, txlog/parquet otherwise.
+"""Table sinks: txlog history tables and hard-linked serving copies.
 
 The reference writes Delta (ACID log + parquet) for Silver/Gold history
-and BigQuery for serving (S5-S8). This environment ships no delta-spark
-jars, so the engine gates the Delta path behind an import probe:
+and BigQuery for serving (S5-S8). This engine targets open Spark on a
+local filesystem:
 
 - HISTORY tables (Silver appends, Gold history — the tables whose value
-  is the append log itself) fall back to the local manifest-log
-  transactional table (``sources/tx_table.py``): same ACID commit /
-  snapshot-isolation / time-travel semantics Delta provides, so
-  ``run_pipeline`` exercises the reference's S5/S7 contract even
-  without delta-spark (r6 verdict task 2).
+  is the append log itself) are local manifest-log transactional tables
+  (``sources/tx_table.py``): the ACID commit / snapshot-isolation /
+  time-travel semantics the reference gets from Delta.
 - SERVING tables (overwrite-mode dashboards — the reference's BigQuery
   copies) are plain parquet directories; an atomic log adds nothing to
-  a full overwrite that downstreams read once. Under txlog the serving
-  copy is not written by Spark at all: :func:`write_serving` hard-links
-  the files the history commit just added into a fresh directory, next
-  to a ``_schema.json`` sidecar (the frame's Spark schema; the leading
-  ``_`` hides it from Spark's file listing), and swaps that directory
-  into place. :func:`read_table` hands the sidecar to the scan, so
-  reading a serving table starts no schema-inference job. Hard links
-  share the history's bytes, and outlive its ``compact``/``vacuum``.
-
-Deployments with delta-spark on the classpath get Delta for both paths
-without a code change.
+  a full overwrite that downstreams read once. The serving copy is not
+  written by Spark at all: :func:`write_serving` hard-links the files
+  the history commit just added into a fresh directory, next to a
+  ``_schema.json`` sidecar (the frame's Spark schema; the leading ``_``
+  hides it from Spark's file listing), and swaps that directory into
+  place. :func:`read_table` hands the sidecar to the scan, so reading a
+  serving table starts no schema-inference job. Hard links share the
+  history's bytes, and outlive its ``compact``/``vacuum``.
 """
 
 from __future__ import annotations
@@ -30,52 +25,33 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from functools import lru_cache
 
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from . import tx_table
-
-
-@lru_cache(maxsize=1)
-def table_format() -> str:
-    """'delta' when delta-spark is importable, else 'parquet'."""
-    try:  # pragma: no cover - delta not present in the test image
-        import delta  # noqa: F401
-
-        return "delta"
-    except ImportError:
-        return "parquet"
-
-
-def formatted(writer: DataFrameWriter) -> DataFrameWriter:
-    """Apply the selected table format to a writer."""
-    return writer.format(table_format())
-
 
 SCHEMA_FILE = "_schema.json"
 
 
 def read_table(spark, path: str):
-    """Read a table written via :func:`formatted` or :func:`write_serving`
-    (delta or parquet). A parquet table's ``_schema.json`` sidecar, when
-    present, pins the scan's schema; without it (Delta, a directory
-    written by Spark) the schema is inferred, which costs a Spark job."""
-    reader = spark.read.format(table_format())
+    """Read a parquet table, such as one :func:`write_serving` published.
+    Its ``_schema.json`` sidecar, when present, pins the scan's schema;
+    without it (a directory written by Spark) the schema is inferred,
+    which costs a Spark job."""
+    reader = spark.read
     sidecar = os.path.join(path, SCHEMA_FILE)
-    if table_format() == "parquet" and os.path.isfile(sidecar):
+    if os.path.isfile(sidecar):
         with open(sidecar) as fh:
             reader = reader.schema(T.StructType.fromJson(json.load(fh)))
-    return reader.load(path)
+    return reader.parquet(path)
 
 
-def write_serving(df: DataFrame, path: str, files: tuple[str, ...] | None) -> None:
+def write_serving(df: DataFrame, path: str, files: tuple[str, ...]) -> None:
     """Replace the serving table at ``path`` with ``df``, whose rows the
     history commit that returned ``files`` (:func:`write_history`, to an
     unpartitioned table: the files are linked side by side) has just
-    written. Under txlog the new copy is those files, hard-linked, plus
-    the ``_schema.json`` sidecar — no Spark write. Under Delta (``files``
-    is None: no file list) Spark overwrites the table.
+    written. The new copy is those files, hard-linked, plus the
+    ``_schema.json`` sidecar — no Spark write.
 
     The swap is two renames (``path`` -> ``<path>.old``, ``<path>.tmp``
     -> ``path``): a reader that resolves ``path`` gets the old or the new
@@ -83,9 +59,6 @@ def write_serving(df: DataFrame, path: str, files: tuple[str, ...] | None) -> No
     copy when it is deleted fails, as under a Spark overwrite. One
     writer publishes a table at a time; a ``.tmp``/``.old`` sibling left
     by a crash is swept by the next publish."""
-    if files is None:
-        formatted(df.write.mode("overwrite")).save(path)
-        return
     path = os.path.normpath(path)
     tmp, old = path + ".tmp", path + ".old"
     for stale in (tmp, old):
@@ -113,46 +86,25 @@ def _fsync(path: str) -> None:
         os.close(fd)
 
 
-def history_format() -> str:
-    """'delta' when delta-spark is importable, else 'txlog' (the local
-    manifest-log ACID table, ``sources/tx_table.py``)."""
-    return "delta" if table_format() == "delta" else "txlog"
-
-
 def write_history(
     df: DataFrame,
     path: str,
     *,
     partition_by: list[str] | None = None,
-    merge_schema: bool = False,
     mode: str = "append",
     metadata: dict | None = None,
     expected_base_version: int | None = None,
-) -> tuple[str, ...] | None:
-    """Append ``df`` to an ACID history table: one atomic commit per
-    call (Delta transaction or txlog manifest); ``mode="overwrite"``
-    replaces the live rows in that one commit instead. Returns the data
-    files the commit added (txlog), or None (Delta). ``metadata`` is
-    stored with the commit (Delta ``userMetadata``, txlog manifest; see
-    :func:`history_snapshot`). ``merge_schema`` allows
-    schema evolution across appends (reference S7; under txlog the
-    union schema is resolved at read instead of write, same observable
-    contract). ``expected_base_version`` pins the commit to the version
-    the caller read (``-1``: no commit yet; see :func:`history_snapshot`
-    and ``tx_table.commit``): txlog raises ``CommitConflict`` when the
-    table moved; Delta skips the write (:func:`delta_pin`)."""
-    if history_format() == "delta":  # pragma: no cover - delta absent here
-        writer = df.write.format("delta").mode(mode)
-        if metadata:
-            writer = writer.option("userMetadata", json.dumps(metadata))
-        if merge_schema:
-            writer = writer.option("mergeSchema", "true")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        if expected_base_version is not None:
-            writer = writer.options(**delta_pin(expected_base_version))
-        writer.save(path)
-        return None
+) -> tuple[str, ...]:
+    """Append ``df`` to a txlog history table: one atomic commit per
+    call; ``mode="overwrite"`` replaces the live rows in that one commit
+    instead. Returns the data files the commit added. ``metadata`` is
+    stored with the commit (see :func:`history_snapshot`). Appends may
+    evolve the schema: the union schema is resolved at read
+    (``read_history(merge_schema=True)``, reference S7).
+    ``expected_base_version`` pins the commit to the version the caller
+    read (``-1``: no commit yet; see :func:`history_snapshot` and
+    ``tx_table.commit``): ``CommitConflict`` is raised when the table
+    moved."""
     return tx_table.commit(
         df,
         path,
@@ -163,55 +115,14 @@ def write_history(
     ).added
 
 
-def delta_pin(expected_base_version: int) -> dict[str, str]:
-    """Delta writer options that pin a commit to the version read.
-
-    Delta has no expected-version commit, but it skips a write whose
-    ``txnVersion`` is <= the last one recorded for its ``txnAppId``
-    (idempotent writes). Every pinned writer of a table shares one app
-    id and passes the version it read plus one, so of two writers that
-    read the same version only the first commits; the second is skipped
-    and its files stay unrecorded for the next cycle."""
-    return {"txnAppId": "pinned_commit", "txnVersion": str(expected_base_version + 1)}
-
-
 def history_snapshot(path: str) -> tx_table.TxSnapshot | None:
     """The latest committed version of a history table — its version
-    number and commit metadata — or None when the table has no commit
-    yet. Under Delta the metadata is the newest ``userMetadata`` in the
-    table's history, so a later commit without any (an OPTIMIZE) does
-    not hide it, and the file list is left empty."""
-    if history_format() == "delta":  # pragma: no cover - delta absent here
-        from delta.tables import DeltaTable
-
-        spark = SparkSession.active()
-        if not DeltaTable.isDeltaTable(spark, path):
-            return None
-        history = DeltaTable.forPath(spark, path).history()
-        rows = history.select("version", "userMetadata").orderBy(history.version.desc()).collect()
-        meta = next((r.userMetadata for r in rows if r.userMetadata), None)
-        return tx_table.TxSnapshot(
-            version=rows[0].version,
-            mode="delta",
-            files=(),
-            metadata=json.loads(meta) if meta else {},
-        )
+    number, files and commit metadata — or None when the table has no
+    commit yet."""
     try:
         return tx_table.snapshot(path)
     except FileNotFoundError:
         return None
-
-
-def read_history_added(
-    spark: SparkSession, path: str, since: int, version: int | None = None
-) -> DataFrame | None:
-    """Rows committed to a history table after version ``since`` (up to
-    ``version``), read as one scan per added commit — or None when no
-    version diff exists (Delta here; a vacuumed, compacted or
-    overwritten txlog base) and the caller must read the whole table."""
-    if history_format() == "delta":  # pragma: no cover - delta absent here
-        return None
-    return tx_table.read_added(spark, path, since, version)
 
 
 def read_history(
@@ -222,12 +133,7 @@ def read_history(
     merge_schema: bool = False,
 ) -> DataFrame:
     """Read a history table written via :func:`write_history`.
-    ``version`` pins an older snapshot (Delta ``versionAsOf`` / txlog
-    manifest) — time travel. A txlog table with no committed version
-    raises ``FileNotFoundError``."""
-    if history_format() == "delta":  # pragma: no cover - delta absent here
-        reader = spark.read.format("delta")
-        if version is not None:
-            reader = reader.option("versionAsOf", version)
-        return reader.load(path)
+    ``version`` pins an older snapshot — time travel. ``merge_schema``
+    reads the union schema across commits. A table with no committed
+    version raises ``FileNotFoundError``."""
     return tx_table.read(spark, path, version, merge_schema=merge_schema)

@@ -2,13 +2,11 @@
 
 The reference persists Silver/Gold history as Delta tables (ACID commit
 log over parquet; reference `2-spark_processed_assats_list.py:65`,
-`3-spark_curated_analytics_full.py:86-90`). This environment ships no delta-spark
-jars (`sinks.table_format` gates on the import and falls back to plain
-parquet), which leaves the ACID/time-travel CAPABILITY untested. This
-module supplies it with the same public design Delta/Iceberg use — an
-append-only log of versioned manifests over immutable parquet data
-files — small enough to audit, with the commit protocol the interesting
-part:
+`3-spark_curated_analytics_full.py:86-90`). This engine runs on open
+Spark over a local filesystem, and this module is its one history-table
+format: the same public design Delta/Iceberg use — an append-only log of
+versioned manifests over immutable parquet data files — small enough to
+audit, with the commit protocol the interesting part:
 
 - Data files are written to a fresh, version-private staging directory
   (``data/v{N}-{attempt}``) — never into a shared path, so a failed or
@@ -31,11 +29,11 @@ A txlog table is ``_txlog/`` plus ``data/`` and nothing else: the first
 commit refuses a directory that holds anything more (a plain-parquet
 table written without the log, say), rather than hide its rows.
 
-Local-FS scope, documented: ``os.link`` is atomic on POSIX
-filesystems; object stores need a conditional-put/contended-rename
-primitive instead (the same caveat Delta's LogStore abstracts). This is
-the single-box stand-in for the Delta path, not a replacement — when
-delta-spark is on the classpath, ``sinks.formatted`` already prefers it.
+Local-FS scope: ``os.link`` is atomic on POSIX filesystems; object
+stores need a conditional-put/contended-rename primitive instead (the
+same caveat Delta's LogStore abstracts). A table path with a URI scheme
+(``s3a://``, ``gs://``, ``file:``...) is refused with ``ValueError``
+before anything is read or written.
 """
 
 from __future__ import annotations
@@ -43,6 +41,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass, field
@@ -52,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, types as T
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
 _STAGE_SEQ = __import__("itertools").count()  # per-process staging uniqueness
+_URI_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
 
 
 class CommitConflict(RuntimeError):
@@ -74,6 +74,20 @@ class TxSnapshot:
     # the data files this version staged (set on the snapshot
     # :func:`commit` returns; empty on a snapshot read from the log)
     added: tuple[str, ...] = ()
+
+
+def _table_path(table: str) -> str:
+    """The canonical form of a local table path. Manifests store absolute
+    file paths derived from it, and vacuum compares them verbatim, so
+    every entry point canonicalises here. A path with a URI scheme is
+    refused: ``realpath`` would turn ``s3a://b/t`` into a directory
+    ``s3a:/b/t`` under the cwd and write the table there."""
+    if _URI_SCHEME.match(table):
+        raise ValueError(
+            f"txlog tables need a local filesystem path, got {table!r}:"
+            " object stores and URI schemes are not supported"
+        )
+    return os.path.realpath(table)
 
 
 def _log_path(table: str) -> str:
@@ -99,7 +113,7 @@ def snapshot(table: str, version: int | None = None) -> TxSnapshot:
     """Pin a manifest: the latest by default, or ``version`` for time
     travel. The returned file list is immutable — later commits cannot
     change what this snapshot reads (snapshot isolation)."""
-    table = os.path.realpath(table)
+    table = _table_path(table)
     versions = _versions(table)
     if not versions:
         raise FileNotFoundError(f"no committed version in {table!r}")
@@ -158,7 +172,7 @@ def read(
     snapshot into a single stage (Delta's OPTIMIZE), and partition
     pruning still reaches every per-stage scan (PartitionFilters,
     pinned in tests/test_tx_table.py)."""
-    table = os.path.realpath(table)
+    table = _table_path(table)
     snap = snapshot(table, version)
     return _read_files(spark, table, snap, snap.files, merge_schema)
 
@@ -175,7 +189,7 @@ def read_added(
     a later commit dropped files (an overwrite or :func:`compact`). The
     caller then reads the whole snapshot instead. Nothing committed
     since reads as an empty frame of the table's schema."""
-    table = os.path.realpath(table)
+    table = _table_path(table)
     snap = snapshot(table, version)
     try:
         base = set(snapshot(table, since).files)
@@ -304,11 +318,7 @@ def commit(
     reclaimed by ``vacuum``."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    # canonicalize: manifests store absolute file paths derived from the
-    # table path, and vacuum compares them VERBATIM — a relative spelling
-    # here with an absolute one there would classify every live file as
-    # unreferenced (code-review r7)
-    table = os.path.realpath(table)
+    table = _table_path(table)
     pby = tuple(partition_by or ())
 
     last_err: Exception | None = None
@@ -584,7 +594,7 @@ def vacuum(
             f"vacuum: keep_last must be >= 1 (the live version can never"
             f" be reclaimed), got {keep_last}"
         )
-    table = os.path.realpath(table)  # same canonical form as commit()
+    table = _table_path(table)
     versions = _versions(table)
     if not versions:
         return []

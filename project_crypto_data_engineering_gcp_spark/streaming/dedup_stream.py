@@ -29,9 +29,8 @@ retried epoch replaces its own partial output instead of appending a
 duplicate copy (duplicated doc rows would otherwise inflate shingle
 counts in _verify_pairs and corrupt jaccard for later batches). The
 computation per epoch is deterministic, so replay converges to the
-same bytes. A transactional table format (the Delta path this
-environment can't exercise; see README §Delta Lake status) would give
-the same guarantee without the directory convention. Readers see the
+same bytes. A transactional table format would give the same
+guarantee without the directory convention. Readers see the
 state as ordinary partitioned parquet (the ``epoch`` partition column
 is dropped on read). Direct (non-stream) callers write the same layout
 under synthetic negative epochs, so one state_dir never mixes flat and
@@ -130,8 +129,8 @@ def dedup_batch_against_state(
     concurrent direct callers would race to the same negative epoch and
     overwrite each other's state. The foreachBatch path has neither
     limitation (epochs come from the streaming engine); production
-    deployments should use it — or the Delta MERGE path this module's
-    header documents — and reserve direct calls for single-process batch
+    deployments should use it — or a transactional table format (see
+    the module header) — and reserve direct calls for single-process batch
     backfills on local state."""
     import re
 

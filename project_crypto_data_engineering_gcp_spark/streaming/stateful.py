@@ -104,8 +104,7 @@ def user_topn_values(events_stream: DataFrame) -> DataFrame:
     the RocksDB state store
     (``spark.sql.streaming.stateStore.providerClass`` =
     ``...state.RocksDBStateStoreProvider``) — the provider the API is
-    designed against. The test is import-gated on protobuf, mirroring
-    the Delta sink's env gating."""
+    designed against. The test is import-gated on protobuf."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,

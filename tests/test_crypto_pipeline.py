@@ -6,6 +6,8 @@ ingest record)."""
 from __future__ import annotations
 
 import os
+import sys
+import types
 
 import duckdb
 import pytest
@@ -231,13 +233,35 @@ def test_dashboard(spark, silver, silver_duck):
 # ---------------------------------------------------------------- runner e2e
 
 
-def test_pipeline_e2e_and_ledger_idempotency(spark, landing, tmp_path_factory):
+def _stub_delta_spark(monkeypatch) -> None:
+    """Make a ``delta`` package importable, as installing delta-spark's
+    Python package does: its ``DeltaTable.isDeltaTable`` calls into the
+    Delta JVM classes, which a session without Delta's jars lacks."""
+    delta, tables = types.ModuleType("delta"), types.ModuleType("delta.tables")
+
+    class DeltaTable:
+        @classmethod
+        def isDeltaTable(cls, spark, identifier):
+            jvm = spark._sc._jvm
+            return jvm.io.delta.tables.DeltaTable.isDeltaTable(
+                spark._jsparkSession, identifier
+            )
+
+    tables.DeltaTable = DeltaTable
+    delta.tables = tables
+    monkeypatch.setitem(sys.modules, "delta", delta)
+    monkeypatch.setitem(sys.modules, "delta.tables", tables)
+
+
+def test_pipeline_e2e_and_ledger_idempotency(
+    spark, landing, tmp_path_factory, monkeypatch
+):
     out = str(tmp_path_factory.mktemp("out"))
     dash1 = run_pipeline(
         spark, f"{landing}/coincap_data_*.json", out,
         processed_at=PROCESSED_AT, analysis_at=ANALYSIS_AT,
-    )
-    assert dash1.count() == N_ASSETS
+    ).toPandas()
+    assert len(dash1) == N_ASSETS
 
     from project_crypto_data_engineering_gcp_spark.plans.runner import (
         read_gold_history,
@@ -275,6 +299,38 @@ def test_pipeline_e2e_and_ledger_idempotency(spark, landing, tmp_path_factory):
     )
     assert hist.count() == 2 * serv.count()
     assert run_dashboard(spark, out).count() == N_ASSETS
+
+    # an importable ``delta`` package (delta-spark's Python half, without
+    # its jars or session extension) changes nothing: the cycle still
+    # commits txlog versions and serves the same dashboard
+    from project_crypto_data_engineering_gcp_spark.plans.runner import (
+        GOLD_BUILDERS,
+        silver_path,
+    )
+    from project_crypto_data_engineering_gcp_spark.sources import tx_table
+
+    _stub_delta_spark(monkeypatch)
+    out2 = str(tmp_path_factory.mktemp("out_delta"))
+    dash2 = run_pipeline(
+        spark, f"{landing}/coincap_data_*.json", out2,
+        processed_at=PROCESSED_AT, analysis_at=ANALYSIS_AT,
+    )
+    assert tx_table.snapshot(silver_path(out2)).version == 0
+    for name in GOLD_BUILDERS:
+        table = os.path.join(out2, "gold", "history", name)
+        assert tx_table.snapshot(table).version == 0
+    assert_frames_match(dash2, dash1, "dashboard")
+
+
+@pytest.mark.parametrize("out", ["s3a://bucket/out", "gs://bucket/out", "file:/tmp/out"])
+def test_run_silver_refuses_a_uri_out_dir(spark, landing, tmp_path, monkeypatch, out):
+    """History tables need a local filesystem: an out dir with a URI
+    scheme raises before anything is written, instead of landing as a
+    ``./s3a:/...`` tree under the working directory."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local filesystem path"):
+        run_silver(spark, f"{landing}/coincap_data_*.json", out)
+    assert os.listdir(tmp_path) == []
 
 
 def test_http_ingest_with_fixture_fetcher(spark, tmp_path):
@@ -348,9 +404,7 @@ def test_gold_history_schema_evolution(spark, landing, tmp_path):
         .withColumn("risk_score", F.round(F.col("rank") * 0.1, 4))
     )
     write_history(
-        evolved,
-        str(tmp_path / "out_evo" / "gold" / "history" / "daily_overview"),
-        merge_schema=True,
+        evolved, str(tmp_path / "out_evo" / "gold" / "history" / "daily_overview")
     )
 
     merged = read_gold_history(spark, out, "daily_overview")

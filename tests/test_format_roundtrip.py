@@ -33,35 +33,6 @@ def test_csv_roundtrip_with_explicit_schema(spark, tmp_path):
     assert back.exceptAll(df).count() == 0 and df.exceptAll(back).count() == 0
 
 
-def test_delta_append_merge_schema(spark, tmp_path):
-    """Exercise the Delta ACID append + mergeSchema-on-write branch
-    (reference S5/S7, `2:65`, `3:86-90`) when delta-spark is installed;
-    skipped (not silently passed) where it isn't — so the branch runs in
-    any delta-equipped deployment's CI instead of staying dead code."""
-    import pytest
-
-    pytest.importorskip("delta")
-    from project_crypto_data_engineering_gcp_spark.sources.sinks import (
-        formatted,
-        read_table,
-        table_format,
-    )
-
-    assert table_format() == "delta"
-    path = str(tmp_path / "delta_tbl")
-    df1 = spark.range(3).select(F.col("id").alias("a"))
-    formatted(df1.write.mode("append")).save(path)
-    df2 = spark.range(2).select(F.col("id").alias("a"), F.lit("x").alias("b"))
-    formatted(
-        df2.write.mode("append").option("mergeSchema", "true")
-    ).save(path)
-    back = read_table(spark, path)
-    assert set(back.columns) == {"a", "b"}
-    assert back.count() == 5
-    # older rows surface NULL for the later-added column (S7 semantics)
-    assert back.filter(F.col("b").isNull()).count() == 3
-
-
 def test_pipeline_empty_landing_gate(spark, tmp_path):
     """Reference S10: a full pipeline run over an empty landing must fail
     loudly, not silently write nothing; run_silver without the gate is a
