@@ -70,9 +70,9 @@ def _pin_loop_invariant(
     # happens inside the caller's ONE action instead of a dedicated
     # driver-blocking job here — same lineage cut, same single
     # evaluation (persist dedups the two per-round consumers), ~12%
-    # faster pagerank at sf0.1 (A/B in OPTIMIZATION_r12.md), and on a
-    # cluster the scheduler can overlap the materialization with
-    # downstream stages instead of fencing on it.
+    # faster pagerank at sf0.1, and on a cluster the scheduler can
+    # overlap the materialization with downstream stages instead of
+    # fencing on it.
     return df.localCheckpoint(eager=False), False
 
 
@@ -172,7 +172,7 @@ def pagerank_fixed_point(
     # aggregate — still evaluate it once), but the whole loop now runs
     # inside the caller's single action instead of one driver-blocking
     # job per round. Bit-identical output (integer arithmetic is
-    # partitioning-invariant); A/B in OPTIMIZATION_r12.md.
+    # partitioning-invariant).
     nodes_flag = (
         nodes.join(deg, nodes["node"] == deg["src"], "left")
         .select("node", F.col("deg").isNull().alias("dangling"))
@@ -246,11 +246,10 @@ def kcore_peel(
     count + edge filter), so an uncut plan re-evaluates the base
     2^rounds times. Known residual (measured: SCALE.md k-core tables'
     pass-2 degradation): superseded rounds' checkpoint BLOCKS stay
-    resident until the ContextCleaner GCs the dropped RDDs —
-    ``unpersist()`` does not reclaim localCheckpoint storage (the
-    documented limitation tools/r8_scale.py works around for its
-    inputs), so repeated same-session invocations accumulate pressure;
-    the ``edges_pre_bucketed`` mode halves the volume by skipping the
+    resident until the ContextCleaner GCs the dropped RDDs
+    (``unpersist()`` does not reclaim localCheckpoint storage), so
+    repeated same-session invocations accumulate pressure; the
+    ``edges_pre_bucketed`` mode halves the volume by skipping the
     initial full-frame cut.
 
     ``broadcast_survivors``: the survivor list is a support-filtered

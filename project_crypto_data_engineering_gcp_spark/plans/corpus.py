@@ -30,9 +30,6 @@ class CorpusQuery:
     fn: QueryFn
     oracle: str | None
     doc: str = ""
-    bench: bool = False  # informational tag from early rounds; the
-    # authoritative headline set is bench.py::HEADLINE (curated +
-    # commented there, grown per round without reordering)
 
     def __post_init__(self) -> None:
         object.__setattr__(self, "doc", self.doc or (self.fn.__doc__ or ""))
@@ -102,14 +99,14 @@ CHECK_WINDOW_PRIORITY: tuple[str, ...] = (
 
 
 def corpus_query(
-    name: str, oracle: str | None = None, *, bench: bool = False
+    name: str, oracle: str | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator registering a corpus query with its DuckDB oracle."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate corpus query {name!r}")
-        _REGISTRY[name] = CorpusQuery(name=name, fn=fn, oracle=oracle, bench=bench)
+        _REGISTRY[name] = CorpusQuery(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

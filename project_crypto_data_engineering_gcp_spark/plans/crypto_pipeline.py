@@ -8,7 +8,7 @@ deliberate and documented per SURVEY §2.11 quirks:
 
   Q1  top_gainers_losers computes BOTH halves from the latest snapshot
       (the reference computes losers over full history — a bug we do not
-      reproduce; flag ``losers_over_history=True`` restores it).
+      reproduce).
   Q3  Silver ``data_referencia`` stays a STRING (from_unixtime default
       format) and is cast to timestamp only in Gold — preserved exactly.
   Q4  Gold is dual-written: append history + overwrite serving — preserved
@@ -158,46 +158,22 @@ def daily_overview(latest: DataFrame, analysis_at: str | None = None) -> DataFra
 
 
 def top_gainers_losers(
-    latest: DataFrame,
-    full_history: DataFrame | None = None,
-    analysis_at: str | None = None,
-    *,
-    k: int = 10,
-    losers_over_history: bool = False,
+    latest: DataFrame, analysis_at: str | None = None, *, k: int = 10
 ) -> DataFrame:
     """Gold table 2 (reference `3:158-186`): top-k gainers / losers by
-    24h change, labeled and unioned. Default computes BOTH from the latest
-    snapshot (documented divergence from reference quirk Q1);
-    ``losers_over_history=True`` reproduces the reference bug exactly
-    (losers drawn from the full append-only history)."""
+    24h change, labeled and unioned. BOTH are computed from the latest
+    snapshot (documented divergence from reference quirk Q1)."""
     base = latest.filter(F.col("change_percent_24hr").isNotNull())
     sel = ["name", "symbol", "change_percent_24hr", "price_usd", "data_referencia"]
-    if losers_over_history:
-        assert full_history is not None, "history frame required for Q1 mode"
-        hist = full_history.withColumn(
-            "data_referencia", F.col("data_referencia").cast("timestamp")
-        ).filter(F.col("change_percent_24hr").isNotNull())
-        from ..operators.topk import top_k
-
-        gainers = top_k(
-            base, [F.col("change_percent_24hr").desc(), F.col("id").asc()], k
-        ).withColumn("tipo_movimento", F.lit("Ganhador"))
-        losers = top_k(
-            hist, [F.col("change_percent_24hr").asc(), F.col("id").asc()], k
-        ).withColumn("tipo_movimento", F.lit("Perdedor"))
-        unioned = gainers.select(*sel, "tipo_movimento").unionAll(
-            losers.select(*sel, "tipo_movimento")
-        )
-    else:
-        unioned = top_bottom_union(
-            base.select(*sel, "id"),
-            "change_percent_24hr",
-            k,
-            "tipo_movimento",
-            "Ganhador",
-            "Perdedor",
-            tiebreakers=["id"],
-        ).select(*sel, "tipo_movimento")
+    unioned = top_bottom_union(
+        base.select(*sel, "id"),
+        "change_percent_24hr",
+        k,
+        "tipo_movimento",
+        "Ganhador",
+        "Perdedor",
+        tiebreakers=["id"],
+    ).select(*sel, "tipo_movimento")
     out = unioned.select(
         "name",
         "symbol",

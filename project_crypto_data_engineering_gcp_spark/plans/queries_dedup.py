@@ -276,7 +276,7 @@ def _minhash_oracle(
     """
 
 
-@corpus_query("dedup_minhash_lsh", oracle=_minhash_oracle(), bench=True)
+@corpus_query("dedup_minhash_lsh", oracle=_minhash_oracle())
 def dedup_minhash_lsh(
     spark: SparkSession, sf_dir: str, *, hot_band_cap: int | None = None
 ) -> DataFrame:
@@ -574,7 +574,6 @@ HOT_BAND_CAP = 2
 @corpus_query(
     "dedup_minhash_lsh_capped",
     oracle=_minhash_oracle(hot_band_cap=HOT_BAND_CAP),
-    bench=True,
 )
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production shape of minhash+LSH: ``hot_band_cap`` ON, so
@@ -590,7 +589,6 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 @corpus_query(
     "dedup_ngram_jaccard_capped",
     oracle=_ngram_oracle(stop_shingle_df_cap=STOP_SHINGLE_DF_CAP),
-    bench=True,
 )
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production shape of exact n-gram jaccard: ``stop_shingle_df_cap``

@@ -105,7 +105,7 @@ def _pagerank_oracle() -> str:
     return "".join(parts)
 
 
-@corpus_query("graph_pagerank", oracle=_pagerank_oracle(), bench=True)
+@corpus_query("graph_pagerank", oracle=_pagerank_oracle())
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer->supplier trade graph (edges = distinct
     (o_custkey, l_suppkey) pairs; customer nodes 2k, supplier nodes 2k+1
@@ -526,8 +526,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor frame is referenced twice per round (degree count + edge
     filter), so an uncut plan re-evaluates the base 2^rounds times.
     The loop lives in operators/graph.py::kcore_peel (reusable on any
-    edge frame; edge-amplified scale evidence via
-    tools/graph_iter_scale.py)."""
+    edge frame; edge-amplified scale evidence in SCALE.md)."""
     from ..operators.graph import kcore_peel
 
     edges = _basket_edges(spark, sf_dir).select("u", "v")
@@ -598,8 +597,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as in the k-core peel. The oracle's ROW_NUMBER mirror of
     max_by is windowed per node (n_nodes partitions — parallel, not a
     funnel). The loop lives in operators/graph.py::label_propagation
-    (reusable on any edge frame; edge-amplified scale evidence via
-    tools/graph_iter_scale.py)."""
+    (reusable on any edge frame; edge-amplified scale evidence in
+    SCALE.md)."""
     from ..operators.graph import label_propagation
 
     edges = _basket_edges(spark, sf_dir).select("u", "v")

@@ -35,7 +35,6 @@ _REVENUE_DEC = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS
     ORDER BY revenue DESC, o_orderdate, l_orderkey
     LIMIT 10
     """,
-    bench=True,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q3 shape: selective dim filter -> 3-way join -> grouped
@@ -79,7 +78,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND r_name = 'ASIA'
     GROUP BY n_name
     """,
-    bench=True,
 )
 def q5_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q5 shape: 5-way star join pruned by a region filter, grouped

@@ -44,7 +44,6 @@ from .corpus import corpus_query
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship TPC-H-Q1-style pricing summary: filter -> groupBy -> 8 aggs.
@@ -112,7 +111,6 @@ def a1_global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(revenue / total * 100, 4) AS percent_revenue
     FROM by_cust, tot
     """,
-    bench=True,
 )
 def a4_customer_market_dominance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-dominance analog (reference A1/A4, `3:204-218`): per-customer
@@ -168,7 +166,6 @@ def a5_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY ROW_NUMBER() OVER (
         PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
     """,
-    bench=True,
 )
 def w1_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-snapshot-per-key argmax (reference W1, `3:67-74`) on the
@@ -409,7 +406,7 @@ _J1_SQL = """
 """
 
 
-@corpus_query("j1_customer_dashboard", oracle=_J1_SQL, bench=True)
+@corpus_query("j1_customer_dashboard", oracle=_J1_SQL)
 def j1_customer_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dashboard denormalization (reference J1+J2,
     `5-sql_exportacao_de_dados_dashboard.sql:2-50`): multi-way LEFT join

@@ -71,7 +71,6 @@ def sim_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e a JOIN e b ON a.vec_id < b.vec_id
     WHERE {dot_double_sql("a.nv", "b.nv")} >= {COSINE_PAIR_THRESHOLD}
     """,
-    bench=True,
 )
 def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine similarity join: all pairs above
@@ -629,8 +628,8 @@ def _semantic_blocked_oracle(
 # its measured 10x-data ratio is ~26x (SCALE.md), and the corpus policy is
 # that no graded query ships a known-superlinear plan. The function stays:
 # the capped/scaled-k graded twins call it, tests/test_operator_properties
-# pins cap-monotonicity through it, and tools/scale_spotcheck.py still
-# measures it so SCALE.md keeps the honest contrast row.
+# pins cap-monotonicity through it, and SCALE.md keeps it as the honest
+# contrast row.
 def dedup_semantic_blocked(
     spark: SparkSession,
     sf_dir: str,

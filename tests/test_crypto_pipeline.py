@@ -196,20 +196,6 @@ def test_supply_round_keeps_double(silver):
     assert dict(got.dtypes)["supply"] == "double"
 
 
-def test_gainers_losers_q1_history_mode(silver):
-    # quirk Q1 reproduction: losers drawn from FULL history can repeat ids
-    latest = latest_assets(silver, cache=False)
-    got = top_gainers_losers(
-        latest, full_history=silver, analysis_at=ANALYSIS_AT,
-        losers_over_history=True,
-    )
-    losers = got.filter(F.col("tipo_movimento") == "Perdedor")
-    assert losers.count() == 10
-    # with 3 snapshots the worst asset appears once per snapshot in history
-    top_loser_names = [r["name"] for r in losers.collect()]
-    assert len(set(top_loser_names)) < 10
-
-
 # ---------------------------------------------------------------- dashboard
 
 
@@ -636,13 +622,19 @@ def test_cycles_leave_no_persisted_frames(spark, tmp_path, monkeypatch):
 
     landing, out = str(tmp_path / "landing"), str(tmp_path / "out")
     glob = f"{landing}/coincap_data_*.json"
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = persisted().size()
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    # Compared by RDD id, not by count: the ContextCleaner may release
+    # earlier tests' RDDs at any moment, which a count reads as a change.
+    before = persisted()
     for k in range(3):
         _land(landing, SNAPSHOT_TS_MS[0] + k * 3_600_000)
         run_silver(spark, glob, out)
         run_gold(spark, out, analysis_at=ANALYSIS_AT)
-    assert persisted().size() == before
+    assert not persisted() - before
 
     def crash(*args, **kwargs):
         raise OSError("simulated sink failure")
@@ -654,7 +646,7 @@ def test_cycles_leave_no_persisted_frames(spark, tmp_path, monkeypatch):
         run_silver(spark, glob, out)
     with pytest.raises(OSError):
         run_gold(spark, out, analysis_at=ANALYSIS_AT)
-    assert persisted().size() == before
+    assert not persisted() - before
 
     # one Gold table fails while the other three commit concurrently
     monkeypatch.setattr(runner, "write_history", real_write)
@@ -662,7 +654,7 @@ def test_cycles_leave_no_persisted_frames(spark, tmp_path, monkeypatch):
     run_silver(spark, glob, out)
     with pytest.raises(OSError):
         run_gold(spark, out, analysis_at=ANALYSIS_AT)
-    assert persisted().size() == before
+    assert not persisted() - before
 
 
 # ------------------------------------------------- one write per Gold frame

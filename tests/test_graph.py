@@ -379,8 +379,8 @@ def test_pagerank_broadcast_state_matches_shuffle_path(spark, monkeypatch):
     dangling nodes. The returned frame's plan is truncated at the final
     lineage cut, so the dispatch itself is pinned at the decision
     helper (env gate + mode exclusions), and the physical switch is
-    auditable in plans/r13/graph_pagerank_loopbody_{bcast,shuffle}.txt
-    (tools/r13_pagerank_ab.py dumps the UNcut loop body)."""
+    auditable by running tools/r13_pagerank_ab.py, which dumps the UNcut
+    loop body of both placements (regenerated, not kept in the tree)."""
     from project_crypto_data_engineering_gcp_spark.operators.graph import (
         _broadcast_node_state,
         pagerank_fixed_point,

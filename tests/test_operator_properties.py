@@ -617,8 +617,9 @@ def test_pq_refined_subset_and_recall_repair(spark):
 
 
 def test_pools_rebuild_identically_after_external_clear(spark):
-    """A session-wide clearCache() (what bench.py does between queries,
-    and what executor-memory pressure does in production) must leave
+    """A session-wide clearCache() (what a harness that isolates queries
+    does between them, and what executor-memory pressure does in
+    production) must leave
     every pooled family serving BIT-IDENTICAL results from rebuilt
     pools: stale handles are detected via storageLevel and rebuilt, and
     the memoized plans pick the new InMemoryRelations up at planning

@@ -1,11 +1,11 @@
 """Shared scaffold for the bucketed-storage experiments
-(tools/pagerank_bucketed.py, tools/lpa_bucketed.py): one canonical copy
-of the prepare step (plain + bucketed writes, both timed) and the
-two-pass per-variant runner — code-review r9 pass 3 flagged the two
-tools as a drifting near-copy; protocol fixes now land once here.
+(tools/lpa_bucketed.py, tools/semantic_bucketed.py): the key-offset
+amplifiers, the prepare step (plain + bucketed writes, both timed) and
+the two-pass per-variant runner, kept in one copy so a protocol fix
+lands once.
 
-ISOLATED protocol contract (the r8 methodology): callers run ONE
-variant per process on an idle box; inputs are read cold from disk.
+ISOLATED protocol contract: callers run ONE variant per process on an
+idle box; inputs are read cold from disk.
 """
 
 from __future__ import annotations
@@ -16,6 +16,38 @@ import shutil
 import time
 
 from pyspark.sql import functions as F
+
+
+def amplify(spark, edges, n: int, cols: tuple[str, str]):
+    """n disjoint key-offset copies of an edge frame via ONE broadcast
+    crossJoin (a single narrow stage — per-copy structure preserved
+    exactly, so scale ratios isolate runtime scaling of the shape)."""
+    if n == 1:
+        return edges
+    a, b = cols
+    offset = edges.agg(F.greatest(F.max(a), F.max(b))).collect()[0][0] + 1
+    copies = F.broadcast(spark.range(n).select(F.col("id").alias("_copy")))
+    return edges.crossJoin(copies).select(
+        (F.col(a) + F.col("_copy") * offset).alias(a),
+        (F.col(b) + F.col("_copy") * offset).alias(b),
+    )
+
+
+def amplify_cols(spark, df, n: int, offset_cols: dict[str, int]):
+    """Dict-spec variant of :func:`amplify` for non-edge frames: n
+    disjoint copies; each column is shifted by copy * its stride
+    (stride 0 keeps the column shared across copies). One broadcast
+    crossJoin, per-copy structure preserved exactly."""
+    if n == 1:
+        return df
+    copies = F.broadcast(spark.range(n).select(F.col("id").alias("_copy")))
+    out = df.crossJoin(copies)
+    return out.select(
+        *[
+            ((F.col(c) + F.col("_copy") * stride).alias(c) if stride else F.col(c))
+            for c, stride in offset_cols.items()
+        ]
+    )
 
 
 def prepare(

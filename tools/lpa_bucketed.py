@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""LPA/BFS over bucketed storage: the pagerank_bucketed.py protocol
+"""LPA/BFS over bucketed storage: the bucketed-storage protocol
 applied to label_propagation, bfs_distances, and kcore_peel (r9
 follow-on — SCALE.md's bucketed-storage claim covers the whole
 iterative family; all three share the symmetrized bucketed table).
@@ -32,7 +32,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 import bucketed_common
-from bench_common import amplify
 
 LEVEL = int(os.environ.get("SPARK_GRAFT_SCALE_LEVEL", "16"))
 BUCKETS = int(os.environ.get("SPARK_GRAFT_BUCKETS", "64"))
@@ -69,7 +68,7 @@ def _base_edges(spark):
         )
         .localCheckpoint(eager=True)
     )
-    return amplify(spark, base, LEVEL, ("u", "v"))
+    return bucketed_common.amplify(spark, base, LEVEL, ("u", "v"))
 
 
 def _run_op(edges, **kwargs):

@@ -49,7 +49,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import pandas as pd
 from pyspark.sql import Window, functions as F
 
-from bench_common import amplify_cols
+from bucketed_common import amplify_cols
 
 LEVEL = int(os.environ.get("SPARK_GRAFT_SCALE_LEVEL", "100"))
 BUCKETS = int(os.environ.get("SPARK_GRAFT_BUCKETS", "64"))
