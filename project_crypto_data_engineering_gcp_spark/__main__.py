@@ -15,12 +15,17 @@ increment: the same Silver append, allowed to find nothing, then the
 Gold rebuild only when rows were appended. `ingest` fetches
 one snapshot (CoinCap by default, deterministic fixture with --fixture)
 into the landing dir.
+
+Maintenance and corpus verbs ride alongside: `curate` (training-data
+shards from a testdata dir), `compact` (plain-parquet small-file
+compaction, or `--tx` single-commit rewrite + vacuum of a txlog table),
+`build-lsh-index` and `dedup-stream` (the persisted-index incremental
+near-dedup).
 """
 
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 
 
@@ -83,31 +88,6 @@ def _build_parser() -> argparse.ArgumentParser:
         " recent time travel). Lower only when no"
         " writer can be live.",
     )
-    k.add_argument(
-        "--bucket-by",
-        default=None,
-        metavar="KEY",
-        help="convert the table to a BUCKETED layout hash-clustered on"
-        " KEY (requires --out; the one-time pre-shuffle that makes every"
-        " later join/agg on KEY exchange-free — SCALE.md 'PageRank over"
-        " bucketed storage': x100 iterative reads drop 84->15 s with no"
-        " resident cache). Readers come back through"
-        " sources.bucketing.register_bucketed / spark.table.",
-    )
-    k.add_argument(
-        "--buckets", type=int, default=64,
-        help="bucket count with --bucket-by (fixed for the table's"
-        " lifetime — size it like shuffle parallelism at full scale)",
-    )
-    k.add_argument(
-        "--out", default=None,
-        help="with --bucket-by: output directory for the bucketed table"
-        " (the source is never touched)",
-    )
-    k.add_argument(
-        "--table", default=None,
-        help="with --bucket-by: catalog name (default: derived from --out)",
-    )
 
     bi = sub.add_parser(
         "build-lsh-index",
@@ -134,43 +114,6 @@ def _build_parser() -> argparse.ArgumentParser:
     ds.add_argument("--state", required=True, help="band-index state dir")
     ds.add_argument("--max-files-per-trigger", type=int, default=1)
 
-    g = sub.add_parser(
-        "graph",
-        help="run an iterative graph query with the at-scale switches"
-        " exposed (config.py; SCALE.md has the measurements)",
-    )
-    g.add_argument(
-        "--query",
-        required=True,
-        choices=[
-            "graph_pagerank",
-            "graph_kcore",
-            "graph_label_propagation",
-            "graph_bfs_distances",
-        ],
-    )
-    g.add_argument("--sf-dir", required=True, help="testdata dir (parquet tables)")
-    g.add_argument(
-        "--edge-partitions",
-        type=int,
-        default=None,
-        help="co-partitioned iterative mode (pagerank/LPA/BFS): cache the"
-        " loop-invariant edge frame pre-partitioned+pre-sorted so each"
-        " round exchanges only the node-sized frame. Bit-identical output."
-        " SCALE.md switch point: WINS in the data-bound regime (pagerank"
-        " 0.37x at 60M edges, LPA 0.62x at x16) and LOSES at"
-        " round-latency-floor scale (1.15x at sf0.1) — set to the"
-        " cluster's shuffle parallelism at ~10M+ edges, omit below",
-    )
-    g.add_argument(
-        "--no-broadcast-survivors",
-        action="store_true",
-        help="k-core: per-round survivor filters become shuffle SEMI-joins"
-        " instead of broadcasts — identical results; the honest path when"
-        " a billion-node survivor domain cannot fit in executor memory"
-        " (SCALE.md 'kcore shuffle-semi-join survivor path')",
-    )
-    g.add_argument("-n", type=int, default=10, help="rows to print")
     return p
 
 
@@ -224,46 +167,7 @@ def main(argv: list[str] | None = None) -> int:
             for k, v in manifest.items():
                 print(f"{k}: {v}")
         elif args.cmd == "compact":
-            if args.bucket_by:
-                if args.tx:
-                    raise SystemExit(
-                        "compact --bucket-by converts a plain parquet"
-                        " table; it does not compose with --tx (compact"
-                        " the txlog snapshot first, then bucketize its"
-                        " read)"
-                    )
-                if args.sort_by is not None or args.target_mb is not None:
-                    raise SystemExit(
-                        "compact --bucket-by clusters by the bucket key"
-                        " and sizes files by bucket count; --sort-by/"
-                        "--target-mb apply only to plain-parquet"
-                        " compaction (same refusal policy as --tx:"
-                        " never silently drop a clustering request)"
-                    )
-                if not args.out:
-                    raise SystemExit("compact --bucket-by requires --out")
-                if args.buckets <= 0:
-                    raise SystemExit("compact --bucket-by: --buckets must be positive")
-                import re as _re
-
-                from .sources.bucketing import bucketize_table
-
-                name = args.table or _re.sub(
-                    r"\W+", "_", os.path.basename(args.out.rstrip("/"))
-                )
-                n = bucketize_table(
-                    spark,
-                    args.path,
-                    args.out,
-                    name,
-                    buckets=args.buckets,
-                    key=args.bucket_by,
-                )
-                print(
-                    f"bucketized {n} rows into {args.buckets} buckets"
-                    f" on {args.bucket_by} as table {name}"
-                )
-            elif args.tx:
+            if args.tx:
                 if args.sort_by is not None or args.target_mb is not None:
                     raise SystemExit(
                         "compact --tx rewrites the txlog snapshot whole;"
@@ -316,31 +220,6 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
             )
             print(f"duplicate pairs emitted: {n}")
-        elif args.cmd == "graph":
-            from .config import (
-                _BROADCAST_SURVIVORS_VAR,
-                _EDGE_PARTITIONS_VAR,
-            )
-
-            # the queries read the switches from config.py's env vars —
-            # the CLI flags are just a front end, so a scheduler can set
-            # the same vars directly on a submitted job
-            if args.edge_partitions is not None:
-                os.environ[_EDGE_PARTITIONS_VAR] = str(args.edge_partitions)
-            if args.no_broadcast_survivors:
-                os.environ[_BROADCAST_SURVIVORS_VAR] = "0"
-            from .plans import all_queries
-
-            df = all_queries()[args.query].fn(spark, args.sf_dir)
-            # node-sized result: persist so show() + count() run the
-            # iterative job ONCE, not twice (code-review r9 — at the
-            # 60M-edge regime the rerun doubles minutes of wall clock)
-            df.persist()
-            try:
-                df.show(args.n, truncate=False)
-                print(f"{args.query} rows: {df.count()}")
-            finally:
-                df.unpersist()
         return 0
     finally:
         if existing is None:

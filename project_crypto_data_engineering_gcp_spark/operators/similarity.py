@@ -241,8 +241,8 @@ def _collect_queries(emb: DataFrame, query_filter: Column):
     never the index) and normalize driver-side with the same fold.
     Raises beyond ``MAX_QUERY_SET_ROWS``: a filter that matches
     corpus-sized row counts is a misuse (the caller wanted the
-    corpus-vs-corpus join — dedup_semantic_blocked_capped /
-    tools/semantic_bucketed.py — not a per-query probe set).
+    corpus-vs-corpus join — dedup_semantic_blocked_capped — not a
+    per-query probe set).
 
     The collect itself is LIMIT-bounded to MAX+1 rows (r11 ADVICE): the
     guard must fire before materializing an unbounded set, not after

@@ -167,11 +167,11 @@ def _latest(spark: SparkSession) -> DataFrame:
     return cp.latest_assets(silver, cache=False)
 
 
-def _register(name: str, builder, extra_kwargs=None):
+def _register(name: str, builder):
     oracle = _LATEST_CTE + _GOLD_SQL[name]
 
-    def q(spark: SparkSession, sf_dir: str, _b=builder, _kw=extra_kwargs) -> DataFrame:
-        return _b(_latest(spark), analysis_at=ANALYSIS_AT, **(_kw or {}))
+    def q(spark: SparkSession, sf_dir: str, _b=builder) -> DataFrame:
+        return _b(_latest(spark), analysis_at=ANALYSIS_AT)
 
     q.__name__ = f"crypto_{name}"
     q.__doc__ = (

@@ -23,19 +23,20 @@ Two design decisions make the oracle possible:
   non-negative). Truncation error is bounded by 1/PR_SCALE = 1e-12 per
   division — invisible at ranking granularity.
 
-Scale mechanics (the components.py doctrine): each round is one
-key-partitioned join (ranks x edges on src) + one aggregate on dst, the
+Scale mechanics (the components.py doctrine): each round is one join
+of the ranks against the edges on src (the rank vector broadcast while
+the node count is under ``operators/graph.py::BROADCAST_MAX_NODES``, a
+key-partitioned shuffle join above it) + one aggregate on dst, the
 dangling-mass term is a 1-row aggregate broadcast back (no driver
-collect), and every round ends in an eager ``localCheckpoint`` cutting
-lineage — on a cluster, swap for ``checkpoint`` to an HDFS dir for fault
-tolerance. State per round: one BIGINT per node.
+collect), and every round ends in a lazy ``localCheckpoint(eager=False)``
+cutting lineage — on a cluster, swap for ``checkpoint`` to an HDFS dir
+for fault tolerance. State per round: one BIGINT per node.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import graph_broadcast_survivors, graph_edge_partitions
 from ..sources.tables import load_table
 from .corpus import corpus_query
 
@@ -135,9 +136,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         scale=PR_SCALE,
         damp_num=PR_DAMP_NUM,
         damp_den=PR_DAMP_DEN,
-        # at-scale switch (config.py / `graph` CLI): co-partitioned mode,
-        # bit-identical output; default None is the graded-scale winner
-        edge_partitions=graph_edge_partitions(),
     )
     return ranks.select(
         "node",
@@ -530,14 +528,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore_peel
 
     edges = _basket_edges(spark, sf_dir).select("u", "v")
-    return kcore_peel(
-        edges,
-        k=KCORE_K,
-        rounds=KCORE_ROUNDS,
-        # at-scale switch (config.py / `graph` CLI): shuffle semi-joins
-        # for survivor domains too large to broadcast; identical results
-        broadcast_survivors=graph_broadcast_survivors(),
-    ).select(F.col("node").alias("p_partkey"), "core_degree")
+    return kcore_peel(edges, k=KCORE_K, rounds=KCORE_ROUNDS).select(
+        F.col("node").alias("p_partkey"), "core_degree"
+    )
 
 
 # ----------------------------------------- label propagation (fixed-round)
@@ -602,9 +595,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import label_propagation
 
     edges = _basket_edges(spark, sf_dir).select("u", "v")
-    return label_propagation(
-        edges, rounds=LPA_ROUNDS, edge_partitions=graph_edge_partitions()
-    ).select(F.col("node").alias("p_partkey"), "community")
+    return label_propagation(edges, rounds=LPA_ROUNDS).select(
+        F.col("node").alias("p_partkey"), "community"
+    )
 
 
 # ------------------------------------------------ bounded BFS distances
@@ -652,12 +645,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bfs_distances
 
     edges = _basket_edges(spark, sf_dir).select("u", "v")
-    dist = bfs_distances(
-        edges,
-        seed_mod=BFS_SEED_MOD,
-        rounds=BFS_ROUNDS,
-        edge_partitions=graph_edge_partitions(),
-    )
+    dist = bfs_distances(edges, seed_mod=BFS_SEED_MOD, rounds=BFS_ROUNDS)
     return dist.select(
         F.col("node").cast("bigint").alias("p_partkey"),
         F.col("d").cast("bigint").alias("distance"),

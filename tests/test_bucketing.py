@@ -7,8 +7,6 @@ and reading co-located buckets."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -72,238 +70,3 @@ def test_bucketed_join_matches_unbucketed(spark, bucketed_tables):
     orders = load_table(spark, SF_SMOKE, "orders")
     plain = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
     assert bucketed == plain
-
-
-def test_pagerank_over_bucketed_edges_identity_and_no_edge_exchange(
-    spark, tmp_path
-):
-    """Storage-partitioned iterative mode (r8 verdict task 5): pagerank
-    reading a bucketed edge table cold must (a) produce bit-identical
-    ranks to the default mode, and (b) build its loop-invariant
-    edges⋈degrees frame with ZERO exchanges — the co-partitioning
-    shuffle happened once at write time and the bucketed scan's
-    distribution elides it ever after."""
-    from pyspark.sql import functions as F
-
-    from project_crypto_data_engineering_gcp_spark.operators.graph import (
-        pagerank_fixed_point,
-    )
-    from project_crypto_data_engineering_gcp_spark.sources.bucketing import (
-        drop_bucketed,
-        read_bucketed,
-        write_bucketed,
-    )
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    edges = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()  # the bucketed-mode caller contract
-    )
-    write_bucketed(
-        edges, "pr_edges_b", str(tmp_path / "pr_edges_b"), buckets=8, key="src"
-    )
-    try:
-        eb = read_bucketed(spark, "pr_edges_b")
-        default = sorted(
-            map(tuple, pagerank_fixed_point(edges, n_iters=3, scale=10**12).collect())
-        )
-        bucketed = sorted(
-            map(
-                tuple,
-                pagerank_fixed_point(
-                    eb, n_iters=3, scale=10**12, edges_pre_bucketed=True
-                ).collect(),
-            )
-        )
-        assert bucketed == default and default
-
-        # plan pin: the loop-invariant e⋈deg build is exchange-free
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            e = eb.select("src", "dst")
-            deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-            plan = plan_of(e.join(deg, "src"))
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        assert "Exchange" not in plan, f"bucketed e-deg join shuffled:\n{plan}"
-
-        # the two placement modes are mutually exclusive
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="pick one"):
-            pagerank_fixed_point(
-                eb, n_iters=1, scale=10**12,
-                edge_partitions=8, edges_pre_bucketed=True,
-            )
-    finally:
-        drop_bucketed(spark, "pr_edges_b")
-
-
-def test_lpa_bfs_kcore_over_bucketed_symmetrized_edges_identity(spark, tmp_path):
-    """LPA/BFS/kcore storage-partitioned mode over ONE shared
-    pre-symmetrized, src-bucketed edge table: bit-identical communities,
-    distances, and cores vs the default mode (duplicate directed edges
-    exercise LPA's weight-preserving contract; kcore is asserted in
-    both survivor-filter modes — its bucketed benefit is round-1-only
-    since the peel frame shrinks)."""
-    from pyspark.sql import functions as F
-
-    from project_crypto_data_engineering_gcp_spark.operators.graph import (
-        bfs_distances,
-        kcore_peel,
-        label_propagation,
-    )
-    from project_crypto_data_engineering_gcp_spark.sources.bucketing import (
-        drop_bucketed,
-        read_bucketed,
-        write_bucketed,
-    )
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    edges = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        (F.col("o_custkey") * 2).alias("u"),
-        (F.col("l_suppkey") * 2 + 1).alias("v"),
-    )  # NOT distinct: duplicates carry LPA vote weight
-    sym = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    write_bucketed(
-        sym, "gb_sym_b", str(tmp_path / "gb_sym_b"), buckets=8, key="u"
-    )
-    try:
-        symb = read_bucketed(spark, "gb_sym_b")
-        lpa_default = sorted(
-            map(tuple, label_propagation(edges, rounds=2).collect())
-        )
-        lpa_bucketed = sorted(
-            map(
-                tuple,
-                label_propagation(
-                    symb, rounds=2, edges_pre_bucketed=True
-                ).collect(),
-            )
-        )
-        assert lpa_bucketed == lpa_default and lpa_default
-
-        bfs_default = sorted(
-            map(tuple, bfs_distances(edges, seed_mod=10, rounds=2).collect())
-        )
-        bfs_bucketed = sorted(
-            map(
-                tuple,
-                bfs_distances(
-                    symb, seed_mod=10, rounds=2, edges_pre_bucketed=True
-                ).collect(),
-            )
-        )
-        assert bfs_bucketed == bfs_default and bfs_default
-
-        kc_default = sorted(
-            map(tuple, kcore_peel(edges, k=3, rounds=2).collect())
-        )
-        for bs in (True, False):
-            kc_bucketed = sorted(
-                map(
-                    tuple,
-                    kcore_peel(
-                        symb, k=3, rounds=2,
-                        edges_pre_bucketed=True, broadcast_survivors=bs,
-                    ).collect(),
-                )
-            )
-            assert kc_bucketed == kc_default and kc_default, bs
-    finally:
-        drop_bucketed(spark, "gb_sym_b")
-
-
-def test_register_bucketed_rejects_stale_mismatched_catalog_entry(
-    spark, tmp_path
-):
-    """register_bucketed must verify a PRE-EXISTING catalog entry
-    against the requested spec: CREATE IF NOT EXISTS would silently
-    keep a stale bucket count/location and let Spark trust a
-    distribution the files don't satisfy (code-review r9)."""
-    import pytest as _pytest
-
-    from project_crypto_data_engineering_gcp_spark.sources.bucketing import (
-        drop_bucketed,
-        register_bucketed,
-        write_bucketed,
-    )
-
-    df = load_table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_custkey")
-    p1 = str(tmp_path / "b1")
-    write_bucketed(df, "rb_tbl", p1, buckets=8, key="o_custkey")
-    try:
-        # matching re-registration is fine (idempotent cross-session read)
-        assert register_bucketed(
-            spark, "rb_tbl", p1, buckets=8, key="o_custkey"
-        ).count() == df.count()
-        # mismatched bucket count: refuse
-        with _pytest.raises(ValueError, match="different"):
-            register_bucketed(spark, "rb_tbl", p1, buckets=4, key="o_custkey")
-        # mismatched location: refuse
-        p2 = str(tmp_path / "b2")
-        df.write.parquet(p2)
-        with _pytest.raises(ValueError, match="different"):
-            register_bucketed(spark, "rb_tbl", p2, buckets=8, key="o_custkey")
-    finally:
-        drop_bucketed(spark, "rb_tbl")
-
-
-def test_bucketed_semantic_self_join_elides_exchange(spark, tmp_path):
-    """The corpus-vs-corpus sweep (tools/semantic_bucketed.py — the
-    capped same-cell self-join behind dedup_semantic_blocked_capped)
-    over a cell-bucketed coded corpus must compile with ZERO
-    data-sized Exchange: the per-cell cap window AND both self-join
-    sides ride the bucket distribution. Plain-parquet storage pays a
-    hashpartitioning exchange for the same plan — also pinned, so the
-    delta the SCALE.md table measures is visible in the plan."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from semantic_bucketed import sweep_pairs
-
-    from project_crypto_data_engineering_gcp_spark.operators.similarity import (
-        ivf_assign_frame,
-    )
-    from project_crypto_data_engineering_gcp_spark.sources.bucketing import (
-        drop_bucketed,
-        register_bucketed,
-        write_bucketed,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    coded = (
-        ivf_assign_frame(emb, n_cells=8)
-        .withColumnRenamed("vec_b", "vec_id")
-        .withColumnRenamed("cnv", "nv")
-    )
-    plain_path = str(tmp_path / "coded_plain")
-    coded.write.parquet(plain_path)
-    drop_bucketed(spark, "t_sem_bucketed")
-    write_bucketed(
-        coded, "t_sem_bucketed", str(tmp_path / "coded_b"), buckets=8, key="cell"
-    )
-    try:
-        bucketed = register_bucketed(
-            spark, "t_sem_bucketed_r", str(tmp_path / "coded_b"),
-            buckets=8, key="cell",
-        )
-        plan_b = plan_of(sweep_pairs(bucketed, cap=4, tau=0.0))
-        assert "Exchange hashpartitioning" not in plan_b, plan_b
-        plan_p = plan_of(sweep_pairs(spark.read.parquet(plain_path), cap=4, tau=0.0))
-        assert "Exchange hashpartitioning" in plan_p, plan_p
-        # ... and placement cannot change the answer
-        nb = sweep_pairs(bucketed, cap=4, tau=0.2).count()
-        np_ = sweep_pairs(spark.read.parquet(plain_path), cap=4, tau=0.2).count()
-        assert nb == np_ > 0
-    finally:
-        drop_bucketed(spark, "t_sem_bucketed")
-        drop_bucketed(spark, "t_sem_bucketed_r")

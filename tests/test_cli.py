@@ -138,105 +138,6 @@ def test_cli_tx_compact_and_vacuum(spark, tmp_path, capsys):
         tx.read(spark, t, version=0)
 
 
-def test_cli_graph_at_scale_switches_identity(spark, capsys, monkeypatch):
-    """The 100-TB graph modes are operable from the CLI / env config
-    without code edits (r8 verdict task 3), and flag-set output is
-    IDENTITY-equal to the default: the switches change physical
-    placement (co-partitioned cache / shuffle semi-joins), never
-    values."""
-    from project_crypto_data_engineering_gcp_spark.config import (
-        _BROADCAST_SURVIVORS_VAR,
-        _EDGE_PARTITIONS_VAR,
-        graph_broadcast_survivors,
-        graph_edge_partitions,
-    )
-    from project_crypto_data_engineering_gcp_spark.plans import all_queries
-
-    from .conftest import SF_SMOKE
-
-    # env parsing contract
-    monkeypatch.delenv(_EDGE_PARTITIONS_VAR, raising=False)
-    monkeypatch.delenv(_BROADCAST_SURVIVORS_VAR, raising=False)
-    assert graph_edge_partitions() is None
-    assert graph_broadcast_survivors() is True
-    monkeypatch.setenv(_EDGE_PARTITIONS_VAR, "0")
-    assert graph_edge_partitions() is None  # 0 == default mode
-    monkeypatch.setenv(_EDGE_PARTITIONS_VAR, "-3")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="must be >= 0"):
-        graph_edge_partitions()
-    monkeypatch.setenv(_BROADCAST_SURVIVORS_VAR, "maybe")
-    with _pytest.raises(ValueError, match="must be one of"):
-        graph_broadcast_survivors()
-    monkeypatch.delenv(_EDGE_PARTITIONS_VAR)
-    monkeypatch.delenv(_BROADCAST_SURVIVORS_VAR)
-
-    qs = all_queries()
-
-    def rows(name):
-        return sorted(map(tuple, qs[name].fn(spark, SF_SMOKE).collect()))
-
-    # pagerank: default vs co-partitioned — bit-identical ranks
-    default_pr = rows("graph_pagerank")
-    monkeypatch.setenv(_EDGE_PARTITIONS_VAR, "4")
-    assert rows("graph_pagerank") == default_pr
-    monkeypatch.delenv(_EDGE_PARTITIONS_VAR)
-
-    # kcore: broadcast vs shuffle-semi-join survivors — identical cores
-    default_kc = rows("graph_kcore")
-    monkeypatch.setenv(_BROADCAST_SURVIVORS_VAR, "0")
-    assert rows("graph_kcore") == default_kc
-    monkeypatch.delenv(_BROADCAST_SURVIVORS_VAR)
-
-    # CLI front end: flags reach the query through the same env vars
-    assert main(
-        ["graph", "--query", "graph_bfs_distances", "--sf-dir", SF_SMOKE,
-         "--edge-partitions", "4", "-n", "3"]
-    ) == 0
-    out = capsys.readouterr().out
-    assert "graph_bfs_distances rows:" in out
-    monkeypatch.delenv(_EDGE_PARTITIONS_VAR, raising=False)
-
-
-def test_cli_compact_bucket_by(spark, tmp_path, capsys):
-    """compact --bucket-by converts a plain parquet table into a
-    bucketed layout (row-count-verified, source untouched) whose scan
-    carries the bucket distribution — the CLI front end of the
-    bucketed-storage mode (r9)."""
-    from project_crypto_data_engineering_gcp_spark.sources.bucketing import drop_bucketed
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "edges-b")
-    spark.range(0, 5000).selectExpr(
-        "id % 97 as k", "id as payload"
-    ).repartition(6).write.parquet(src)
-
-    try:
-        assert main(
-            ["compact", "--path", src, "--bucket-by", "k",
-             "--buckets", "8", "--out", out]
-        ) == 0
-        printed = capsys.readouterr().out
-        assert "bucketized 5000 rows into 8 buckets on k" in printed
-        t = spark.table("edges_b")
-        assert t.count() == 5000
-        # source untouched, bucketed scan reports the distribution
-        assert spark.read.parquet(src).count() == 5000
-        plan = t.groupBy("k").count()._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan  # bucketed scan -> no shuffle
-        # --tx composition refused
-        import pytest as _pytest
-
-        with _pytest.raises(SystemExit, match="does not compose"):
-            main(["compact", "--path", src, "--tx", "--bucket-by", "k",
-                  "--out", out + "2"])
-        with _pytest.raises(SystemExit, match="requires --out"):
-            main(["compact", "--path", src, "--bucket-by", "k"])
-    finally:
-        drop_bucketed(spark, "edges_b")
-
-
 def test_cli_build_lsh_index(spark, capsys):
     """The bootstrap split: build-lsh-index persists the band index and
     the serving query then reuses it via the shared memo (no second

@@ -300,87 +300,15 @@ def test_triangle_counts_big_ids_match_python_reference(spark):
         assert got == want, f"trial {trial}: {got} != {want}"
 
 
-def test_kcore_shuffle_survivors_matches_broadcast(spark):
-    """The at-scale shuffle-semi-join survivor path must return exactly
-    the broadcast path's result (the survivor key is unique by
-    construction, so semi-join == inner-join-then-project here)."""
-    from project_crypto_data_engineering_gcp_spark.operators.graph import (
-        kcore_peel,
-    )
-    from project_crypto_data_engineering_gcp_spark.plans.queries_graph import (
-        KCORE_K,
-        KCORE_ROUNDS,
-        _basket_edges,
-    )
-
-    from .conftest import SF_SMOKE
-
-    edges = _basket_edges(spark, SF_SMOKE).select("u", "v")
-    a = {
-        (r["node"], r["core_degree"])
-        for r in kcore_peel(edges, k=KCORE_K, rounds=KCORE_ROUNDS).collect()
-    }
-    b = {
-        (r["node"], r["core_degree"])
-        for r in kcore_peel(
-            edges, k=KCORE_K, rounds=KCORE_ROUNDS, broadcast_survivors=False
-        ).collect()
-    }
-    assert a == b and a, "shuffle and broadcast survivor paths must agree"
-
-
-def test_iterative_pinned_mode_matches_default_after_lazy_cuts(spark):
-    """r12 focused test: the round lineage cuts went lazy
-    (localCheckpoint(eager=False)), and in co-partitioned mode the
-    operators now materialize the FINAL frame before unpersisting the
-    pinned loop-invariant cache. If that materialize-before-unpersist
-    ordering ever regressed, pinned-mode results would be recomputed
-    from an un-cached (and re-shuffled) edge frame — still correct but
-    silently paying the re-exchange every round — or, worse, a future
-    edit could consume the frame after the cache is gone. Pin the
-    bit-identical-output contract across modes for all three pinned
-    operators."""
-    from project_crypto_data_engineering_gcp_spark.operators.graph import (
-        bfs_distances,
-        label_propagation,
-        pagerank_fixed_point,
-    )
-    from project_crypto_data_engineering_gcp_spark.sources.tables import (
-        load_table,
-    )
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    edges = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        (F.col("o_custkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
-    base = pagerank_fixed_point(edges, n_iters=2, scale=10**9)
-    pinned = pagerank_fixed_point(
-        edges, n_iters=2, scale=10**9, edge_partitions=4
-    )
-    assert sorted(base.collect()) == sorted(pinned.collect())
-
-    sym = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    lp_base = label_propagation(sym, rounds=2)
-    lp_pin = label_propagation(sym, rounds=2, edge_partitions=4)
-    assert sorted(lp_base.collect()) == sorted(lp_pin.collect())
-
-    bfs_base = bfs_distances(sym, seed_mod=100, rounds=2)
-    bfs_pin = bfs_distances(sym, seed_mod=100, rounds=2, edge_partitions=4)
-    assert sorted(bfs_base.collect()) == sorted(bfs_pin.collect())
-
-
 def test_pagerank_broadcast_state_matches_shuffle_path(spark, monkeypatch):
-    """r13: below config.graph_broadcast_max_nodes() the default path
-    broadcasts the per-round rank vector (one exchange per round, no
-    edge-side shuffle); forcing the ceiling to 0 restores the r12
-    shuffle placement. Both must be bit-identical on a graph with
-    dangling nodes. The returned frame's plan is truncated at the final
-    lineage cut, so the dispatch itself is pinned at the decision
-    helper (env gate + mode exclusions), and the physical switch is
-    auditable by running tools/r13_pagerank_ab.py, which dumps the UNcut
-    loop body of both placements (regenerated, not kept in the tree)."""
+    """r13: while the node count is at most
+    operators.graph.BROADCAST_MAX_NODES the pagerank path broadcasts
+    the per-round rank vector (one exchange per round, no edge-side
+    shuffle); above it both joins shuffle. Both placements must be
+    bit-identical on a graph with dangling nodes. The returned frame's
+    plan is truncated at the final lineage cut, so the dispatch itself
+    is pinned at the size-gate helper."""
+    from project_crypto_data_engineering_gcp_spark.operators import graph
     from project_crypto_data_engineering_gcp_spark.operators.graph import (
         _broadcast_node_state,
         pagerank_fixed_point,
@@ -389,18 +317,14 @@ def test_pagerank_broadcast_state_matches_shuffle_path(spark, monkeypatch):
         load_table,
     )
 
-    # dispatch: size gate, 0-disable, and mode exclusions
-    assert _broadcast_node_state(1000, None, False)
-    assert not _broadcast_node_state(3_000_000, None, False)
-    assert not _broadcast_node_state(1000, 8, False)
-    assert not _broadcast_node_state(1000, None, True)
-    assert not _broadcast_node_state(0, None, False)
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX_NODES", "0")
-    assert not _broadcast_node_state(1000, None, False)
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX_NODES", "500")
-    assert _broadcast_node_state(500, None, False)
-    assert not _broadcast_node_state(501, None, False)
-    monkeypatch.delenv("SPARK_GRAFT_BROADCAST_MAX_NODES")
+    # dispatch: the size gate at the shipped and at a patched ceiling
+    assert _broadcast_node_state(1000)
+    assert not _broadcast_node_state(3_000_000)
+    assert not _broadcast_node_state(0)
+    monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 500)
+    assert _broadcast_node_state(500)
+    assert not _broadcast_node_state(501)
+    monkeypatch.undo()
 
     orders = load_table(spark, SF_SMOKE, "orders")
     li = load_table(spark, SF_SMOKE, "lineitem")
@@ -409,6 +333,8 @@ def test_pagerank_broadcast_state_matches_shuffle_path(spark, monkeypatch):
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
     bcast = pagerank_fixed_point(edges, n_iters=2, scale=10**9)
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX_NODES", "0")
+    # a ceiling of 0 sends every graph down the shuffle path
+    monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 0)
+    assert not _broadcast_node_state(1000)
     shuf = pagerank_fixed_point(edges, n_iters=2, scale=10**9)
     assert sorted(bcast.collect()) == sorted(shuf.collect())

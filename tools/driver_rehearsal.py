@@ -9,10 +9,11 @@ Run it from a FOREIGN cwd to also prove Python-worker closures don't
 need the repo on PYTHONPATH (mapInPandas closures referencing
 module-level helpers break exactly there):
 
-    cd /tmp && python3 /root/repo/tools/driver_rehearsal.py
+    cd /tmp && python3 /path/to/repo/tools/driver_rehearsal.py
 
 Prints one line per failure and a final summary; exit code 1 on any
-mismatch. ~3-4 min at the default sf0.01.
+mismatch. ~12 min at the default sf0.01 on 4 vCPU (253 queries in
+744 s).
 """
 from __future__ import annotations
 
