@@ -17,15 +17,16 @@ one snapshot (CoinCap by default, deterministic fixture with --fixture)
 into the landing dir.
 
 Maintenance and corpus verbs ride alongside: `curate` (training-data
-shards from a testdata dir), `compact` (plain-parquet small-file
-compaction, or `--tx` single-commit rewrite + vacuum of a txlog table),
-`build-lsh-index` and `dedup-stream` (the persisted-index incremental
-near-dedup).
+shards from a testdata dir), `compact` (a `--path` holding `_txlog/` is a
+txlog table: single-commit rewrite, then an optional vacuum; any other
+path gets plain-parquet small-file compaction), `build-lsh-index` and
+`dedup-stream` (the persisted-index incremental near-dedup).
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
@@ -54,36 +55,38 @@ def _build_parser() -> argparse.ArgumentParser:
     c.add_argument("--sf-dir", required=True, help="testdata dir with documents.parquet")
     c.add_argument("--out", required=True)
 
-    k = sub.add_parser("compact", help="compact a parquet table's small files")
+    k = sub.add_parser(
+        "compact",
+        help="compact a table's small files: a txlog table (--path holds"
+        " _txlog/) gets an OPTIMIZE-style single-commit rewrite"
+        " (tx_table.compact), any other path a plain-parquet rewrite",
+    )
     k.add_argument("--path", required=True)
     k.add_argument(
         "--target-mb",
         type=int,
         default=None,
-        help="target file size (default 256; plain-parquet mode only)",
+        help="target file size (default 256; plain-parquet tables only)",
     )
-    k.add_argument("--sort-by", default=None, help="comma-separated clustering columns")
     k.add_argument(
-        "--tx",
-        action="store_true",
-        help="treat --path as a txlog history table: OPTIMIZE-style"
-        " single-commit rewrite (tx_table.compact), optionally followed"
-        " by --vacuum-keep",
+        "--sort-by",
+        default=None,
+        help="comma-separated clustering columns (plain-parquet tables only)",
     )
     k.add_argument(
         "--vacuum-keep",
         type=int,
         default=None,
         metavar="N",
-        help="with --tx: vacuum manifests/files beyond the newest N versions"
-        " (manifests and data inside the retention window are kept)",
+        help="txlog tables only: vacuum manifests/files beyond the newest N"
+        " versions (manifests and data inside the retention window are kept)",
     )
     k.add_argument(
         "--vacuum-retention-hours",
         type=float,
         default=1.0,
         metavar="H",
-        help="with --tx --vacuum-keep: protect staging dirs, tmp manifests,"
+        help="with --vacuum-keep: protect staging dirs, tmp manifests,"
         " and committed versions younger than H hours (in-flight commits,"
         " recent time travel). Lower only when no"
         " writer can be live.",
@@ -167,13 +170,12 @@ def main(argv: list[str] | None = None) -> int:
             for k, v in manifest.items():
                 print(f"{k}: {v}")
         elif args.cmd == "compact":
-            if args.tx:
+            if os.path.isdir(os.path.join(args.path, "_txlog")):
                 if args.sort_by is not None or args.target_mb is not None:
                     raise SystemExit(
-                        "compact --tx rewrites the txlog snapshot whole;"
-                        " --sort-by/--target-mb apply only to plain-parquet"
-                        " mode (run them via the non-tx compact on the"
-                        " table's files, then compact --tx)"
+                        f"compact: {args.path} is a txlog table, rewritten"
+                        " whole; --sort-by/--target-mb apply only to"
+                        " plain-parquet tables"
                     )
                 from .sources import tx_table
 
@@ -188,6 +190,11 @@ def main(argv: list[str] | None = None) -> int:
                     msg += f"; vacuumed {len(swept)} files"
                 print(msg)
             else:
+                if args.vacuum_keep is not None:
+                    raise SystemExit(
+                        f"compact: {args.path} is not a txlog table (no"
+                        " _txlog/); --vacuum-keep applies only to txlog tables"
+                    )
                 from .sources.maintenance import compact_table
 
                 sort_cols = args.sort_by.split(",") if args.sort_by else None

@@ -9,7 +9,6 @@ from .similarity import (
     cosine_pairs_blockwise,
     cosine_pairs_grid,
     ivf_topk_distributed,
-    topk_neighbors_blockwise,
     topk_neighbors_distributed,
 )
 from .multimodal import as_media_frame, extract_media_meta, sample_frames
@@ -26,7 +25,6 @@ __all__ = [
     "cosine_pairs_blockwise",
     "cosine_pairs_grid",
     "ivf_topk_distributed",
-    "topk_neighbors_blockwise",
     "topk_neighbors_distributed",
     "as_media_frame",
     "extract_media_meta",

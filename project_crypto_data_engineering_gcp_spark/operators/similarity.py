@@ -53,7 +53,6 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 PAIRS_SCHEMA = (
     "vec_a bigint, vec_b bigint, label_a int, label_b int, cos_sim double"
 )
-TOPK_SCHEMA = "vec_a bigint, vec_b bigint, cos_sim double, rk int"
 
 # Closure-path guard: above this the index no longer belongs in a task
 # closure — callers must use the distributed layout instead.
@@ -722,58 +721,3 @@ def cosine_pairs_blockwise(
 
     return _spread(emb.select("vec_id")).mapInPandas(op, schema=PAIRS_SCHEMA)
 
-
-def topk_neighbors_blockwise(
-    emb: DataFrame,
-    *,
-    k: int,
-    query_pred,
-    round_digits: int = 6,
-    bucket_dims: "tuple[int, ...] | None" = None,
-) -> DataFrame:
-    """Top-k neighbors per query vector — closure fast path (guarded).
-    ``bucket_dims`` restricts candidates to the query's sign-bit bucket."""
-    index_rows = _collect_index(emb, ["vec_id", "embedding"])
-    ids = np.array([r["vec_id"] for r in index_rows], dtype=np.int64)
-    mat = np.array(
-        [np.asarray(r["embedding"], dtype=np.float32) for r in index_rows]
-    ).astype(np.float64)
-    nv = _normalize_rows(mat)
-    pos = {int(v): i for i, v in enumerate(ids)}
-    bucket_of = None
-    if bucket_dims is not None:
-        bucket_of = np.zeros(len(ids), dtype=np.int64)
-        for i, d in enumerate(bucket_dims):
-            bucket_of += (mat[:, d - 1] >= 0).astype(np.int64) << i
-    schema = TOPK_SCHEMA if bucket_of is None else TOPK_SCHEMA + ", bucket int"
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            qids = [int(v) for v in pdf["vec_id"] if query_pred(int(v))]
-            if not qids:
-                yield pd.DataFrame(
-                    {c.split()[0]: [] for c in schema.split(", ")}
-                ).astype({"cos_sim": "float64"})
-                continue
-            rows = [pos[v] for v in qids]
-            cos_r = np.round(_block_cos(nv[rows], nv), round_digits)
-            out = {c.split()[0]: [] for c in schema.split(", ")}
-            for qi, (qid, row) in enumerate(zip(qids, rows)):
-                mask = ids != qid
-                if bucket_of is not None:
-                    mask &= bucket_of == bucket_of[row]
-                cand = np.nonzero(mask)[0]
-                # rank by (rounded cos desc, vec_id asc): lexsort is stable
-                order = cand[np.lexsort((ids[cand], -cos_r[qi, cand]))][:k]
-                out["vec_a"].extend([qid] * len(order))
-                out["vec_b"].extend(ids[order])
-                out["cos_sim"].extend(cos_r[qi, order])
-                out["rk"].extend(range(1, len(order) + 1))
-                if bucket_of is not None:
-                    out["bucket"].extend([int(bucket_of[row])] * len(order))
-            yield pd.DataFrame(out)
-
-    return _spread(emb.select("vec_id")).mapInPandas(op, schema=schema)

@@ -16,9 +16,10 @@ deliberate and documented per SURVEY §2.11 quirks:
   CSE the latest-snapshot DataFrame is cached once and reused by all four
       analyses (the reference recomputes the window shuffle up to ~9x).
 
-Scale: Silver is partitioned by snapshot date (``dt``) — the readme
-claims partitioning the code never does (readme:88 vs 2:65) — giving
-dynamic partition pruning on every date-bounded Gold query. The only wide
+Scale: Silver carries the snapshot date as a ``dt`` column and is
+unpartitioned, as the reference writes it (2:65); a filter on ``dt`` is
+pushed to the one parquet scan of a Silver read, where row-group
+statistics skip the groups outside the range. The only wide
 operation in the whole pipeline is the latest-snapshot window shuffle,
 keyed on asset id (high cardinality, no skew).
 """

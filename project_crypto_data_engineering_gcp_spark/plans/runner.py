@@ -9,16 +9,17 @@ copies need a local POSIX filesystem (``os.link``, ``os.walk``); an out
 dir with a URI scheme (``s3a://...``) is refused before anything is
 written:
 
-  out/silver/assets/dt=YYYY-MM-DD/...   append, partitioned by snapshot date
+  out/silver/assets/...                 append; dt (snapshot date) is a column
   out/gold/_latest/                     latest-row-per-asset state (overwrite)
   out/gold/history/<table>/...          append (reference Delta mode, Q4)
   out/gold/serving/<table>/...          overwrite (reference BigQuery mode):
                                         hard links to the files of the
                                         history append + _schema.json
 
-Partitioning Silver by ``dt`` fixes the reference's unpartitioned-table
-gap (readme:88 vs 2:65) and buys dynamic partition pruning for every
-date-bounded downstream query.
+Silver is unpartitioned, as the reference lands it (2:65): ``dt`` is an
+ordinary column, so every read of a snapshot is one parquet scan. A
+date-bounded query's filter on ``dt`` is pushed to that scan, where
+parquet row-group statistics skip the groups outside the range.
 
 An hourly cycle costs the new snapshot, not the history:
 
@@ -150,14 +151,13 @@ def run_silver(
     for f, size in raw.select("_source_file", F.size("data")).collect():
         parsed.add(as_path(f))
         n += max(size or 0, 0)
-    # quirk Q3: data_referencia is a string; dt partition derives from it
+    # quirk Q3: data_referencia is a string; the dt column derives from it
     silver = bronze_to_silver(raw, processed_at).withColumn(
         "dt", F.substring("data_referencia", 1, 10)
     )
     write_history(
         silver.drop("_source_file"),
         spath,
-        partition_by=["dt"],
         metadata=record_ingested(
             prior, parsed, quarantined=[f for f in new if f not in parsed]
         ),

@@ -48,9 +48,8 @@ def read_table(spark, path: str):
 
 def write_serving(df: DataFrame, path: str, files: tuple[str, ...]) -> None:
     """Replace the serving table at ``path`` with ``df``, whose rows the
-    history commit that returned ``files`` (:func:`write_history`, to an
-    unpartitioned table: the files are linked side by side) has just
-    written. The new copy is those files, hard-linked, plus the
+    history commit that returned ``files`` (:func:`write_history`) has
+    just written. The new copy is those files, hard-linked, plus the
     ``_schema.json`` sidecar — no Spark write.
 
     The swap is two renames (``path`` -> ``<path>.old``, ``<path>.tmp``
@@ -90,7 +89,6 @@ def write_history(
     df: DataFrame,
     path: str,
     *,
-    partition_by: list[str] | None = None,
     mode: str = "append",
     metadata: dict | None = None,
     expected_base_version: int | None = None,
@@ -109,7 +107,6 @@ def write_history(
         df,
         path,
         mode,
-        partition_by=partition_by,
         metadata=metadata,
         expected_base_version=expected_base_version,
     ).added

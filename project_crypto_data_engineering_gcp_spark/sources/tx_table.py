@@ -29,6 +29,15 @@ A txlog table is ``_txlog/`` plus ``data/`` and nothing else: the first
 commit refuses a directory that holds anything more (a plain-parquet
 table written without the log, say), rather than hide its rows.
 
+No table is hive-partitioned: each staging directory holds flat parquet
+files, every column lives in the files, and a read of any snapshot
+(full, time travel or the rows added since a version) is ONE parquet
+scan of the manifest's file list with the manifest's schema. A filter
+on a column reaches that scan as a pushed filter, where parquet
+row-group statistics skip the groups it excludes. ``snapshot`` refuses
+a manifest an older release wrote (hive-partitioned, or without a
+schema): one scan would read its partition columns as NULLs.
+
 Local-FS scope: ``os.link`` is atomic on POSIX filesystems; object
 stores need a conditional-put/contended-rename primitive instead (the
 same caveat Delta's LogStore abstracts). A table path with a URI scheme
@@ -45,6 +54,7 @@ import re
 import shutil
 import time
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
@@ -63,7 +73,9 @@ class TxSnapshot:
     version: int
     mode: str
     files: tuple[str, ...]
-    partition_by: tuple[str, ...] = ()
+    # always empty (snapshot() refuses a partitioned manifest); perfbench's
+    # tracer still reads it
+    partition_by: ClassVar[tuple[str, ...]] = ()
     # caller-supplied facts about the commit (Delta's commitInfo
     # userMetadata), e.g. which upstream version a derived table covers
     metadata: dict = field(default_factory=dict, hash=False)
@@ -112,7 +124,9 @@ def _versions(table: str) -> list[int]:
 def snapshot(table: str, version: int | None = None) -> TxSnapshot:
     """Pin a manifest: the latest by default, or ``version`` for time
     travel. The returned file list is immutable — later commits cannot
-    change what this snapshot reads (snapshot isolation)."""
+    change what this snapshot reads (snapshot isolation). A manifest an
+    older release wrote (hive-partitioned, or without a schema) raises
+    ``ValueError``."""
     table = _table_path(table)
     versions = _versions(table)
     if not versions:
@@ -124,29 +138,22 @@ def snapshot(table: str, version: int | None = None) -> TxSnapshot:
         )
     with open(_manifest_file(table, v)) as fh:
         m = json.load(fh)
+    if m.get("partition_by") or not m.get("schema"):
+        raise ValueError(
+            f"version {v} of {table!r} was written by an older release"
+            " (hive-partitioned, or without a schema), and reading it as one"
+            " scan would turn its partition columns into NULLs; move the"
+            " table aside and rebuild it. For a pipeline output, move"
+            " silver/assets and gold/_latest aside and rerun: Silver is"
+            " rebuilt from the landing zone"
+        )
     return TxSnapshot(
         version=v,
         mode=m["mode"],
         files=tuple(m["files"]),
-        partition_by=tuple(m.get("partition_by") or ()),
         metadata=m.get("metadata") or {},
-        schema=m.get("schema"),
+        schema=m["schema"],
     )
-
-
-def _stage_of(table: str, path: str) -> str:
-    """The version-private staging directory a data file belongs to —
-    the first path component under ``data/``. Needed as the Spark
-    ``basePath`` so hive-style ``key=value`` partition directories
-    inside the stage are recovered as columns. Files OUTSIDE ``data/``
-    anchor at the table root, which parses their partition dirs
-    identically: tables an older release adopted in place list them in
-    their manifests until a ``compact`` rewrites the rows into ``data/``."""
-    data_root = os.path.join(table, _DATA_DIR)
-    rel = os.path.relpath(path, data_root)
-    if rel.split(os.sep)[0] == os.pardir:
-        return table
-    return os.path.join(data_root, rel.split(os.sep)[0])
 
 
 def read(
@@ -156,25 +163,17 @@ def read(
     *,
     merge_schema: bool = False,
 ) -> DataFrame:
-    """Read the pinned snapshot's files; a version with no file (an
-    empty first commit) reads as an empty frame of its schema.
+    """Read the pinned snapshot's files as ONE parquet scan, however
+    many commits staged them.
 
-    ``merge_schema=True`` resolves the union schema across commits
-    (reference S7 semantics: Delta merges at write, parquet/txlog at
-    read — older rows surface NULL for columns added later). Otherwise
-    every file is read with the schema the pinned manifest records.
-
-    Partitioned tables read as one scan PER staging directory (each
-    needs its own ``basePath`` to recover the hive-style partition
-    columns), unioned by name. Delta/Iceberg collapse this into one
-    scan via a log-backed FileIndex; this local stand-in instead bounds
-    the group count operationally — ``compact()`` rewrites the live
-    snapshot into a single stage (Delta's OPTIMIZE), and partition
-    pruning still reaches every per-stage scan (PartitionFilters,
-    pinned in tests/test_tx_table.py)."""
-    table = _table_path(table)
+    The scan uses the schema the pinned manifest records, so it starts
+    no schema-inference job. ``merge_schema=True`` resolves the union
+    schema across commits instead (reference S7 semantics: Delta merges
+    at write, parquet/txlog at read — older rows surface NULL for
+    columns added later). A filter on the result reaches the scan as a
+    pushed filter (pinned in tests/test_tx_table.py)."""
     snap = snapshot(table, version)
-    return _read_files(spark, table, snap, snap.files, merge_schema)
+    return _read_files(spark, snap, snap.files, merge_schema)
 
 
 def read_added(
@@ -182,14 +181,13 @@ def read_added(
 ) -> DataFrame | None:
     """The rows committed after version ``since`` up to ``version`` (the
     latest by default): the manifest file-set difference, read as one
-    scan per added stage — an append's cost, whatever the history.
+    scan — an append's cost, whatever the history.
 
     Returns None when the difference does not describe the change: the
     ``since`` manifest is gone (vacuumed, or the table was rebuilt), or
     a later commit dropped files (an overwrite or :func:`compact`). The
     caller then reads the whole snapshot instead. Nothing committed
     since reads as an empty frame of the table's schema."""
-    table = _table_path(table)
     snap = snapshot(table, version)
     try:
         base = set(snapshot(table, since).files)
@@ -197,55 +195,27 @@ def read_added(
         return None
     if not base.issubset(snap.files):
         return None
-    added = [f for f in snap.files if f not in base]
-    if not added:
-        return _read_files(spark, table, snap, snap.files[:1]).limit(0)
-    return _read_files(spark, table, snap, added)
+    return _read_files(spark, snap, [f for f in snap.files if f not in base])
 
 
 def _read_files(
     spark: SparkSession,
-    table: str,
     snap: TxSnapshot,
     files: list[str] | tuple[str, ...],
     merge_schema: bool = False,
 ) -> DataFrame:
-    """Scan ``files`` of ``snap``'s table with its schema and partitioning
-    (the schema is inferred when merging, or for manifests without one)."""
-    if not files:  # an empty append stages no data file; its manifest has the schema
-        return spark.createDataFrame([], T.StructType.fromJson(json.loads(snap.schema)))
-    reader = spark.read
+    """One parquet scan of ``files`` with ``snap``'s schema (inferred
+    across the files instead when merging)."""
+    schema = T.StructType.fromJson(json.loads(snap.schema))
+    if not files:  # nothing added since (read_added): no scan, the manifest's schema
+        return spark.createDataFrame([], schema)
     if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    elif snap.schema is not None:
-        reader = reader.schema(T.StructType.fromJson(json.loads(snap.schema)))
-    if not snap.partition_by:
-        return reader.parquet(*files)
-    groups: dict[str, list[str]] = {}
-    for f in files:
-        groups.setdefault(_stage_of(table, f), []).append(f)
-    out: DataFrame | None = None
-    for stage in sorted(groups):
-        part = reader.option("basePath", stage).parquet(*groups[stage])
-        out = (
-            part
-            if out is None
-            else out.unionByName(part, allowMissingColumns=merge_schema)
-        )
-    return out
-
-
-def _read_schema(schema: T.StructType, pby: tuple[str, ...]) -> str:
-    """``schema`` in the column order a scan of the written files yields:
-    data columns first, then the partition columns (JSON)."""
-    by_name = {f.name: f for f in schema.fields}
-    fields = [f for f in schema.fields if f.name not in pby] + [by_name[c] for c in pby]
-    return T.StructType(fields).json()
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+    return spark.read.schema(schema).parquet(*files)
 
 
 def _parquet_files(directory: str) -> list[str]:
-    """All parquet files under ``directory``, recursively — partitioned
-    writes nest them inside ``key=value`` subdirectories."""
+    """All parquet files under ``directory``, recursively."""
     return sorted(
         os.path.join(dirpath, f)
         for dirpath, _, names in os.walk(directory)
@@ -278,7 +248,6 @@ def commit(
     table: str,
     mode: str = "append",
     *,
-    partition_by: list[str] | tuple[str, ...] | None = None,
     max_retries: int = 5,
     expected_base_version: int | None = None,
     metadata: dict | None = None,
@@ -292,12 +261,6 @@ def commit(
     The first commit refuses (``ValueError``, nothing written) a
     directory holding anything besides ``_txlog/`` and ``data/``: a
     plain-parquet table there would be hidden, not read.
-
-    ``partition_by`` writes hive-style ``key=value`` directories inside
-    the staging dir (recovered as partition columns at read, with
-    PartitionFilters pruning — same contract as Delta's partitioned
-    tables). It must be consistent across every commit to a table; the
-    manifest records it and a mismatch raises ValueError.
 
     ``metadata`` (a JSON-able dict) is stored in the manifest and read
     back as :attr:`TxSnapshot.metadata` of this version.
@@ -319,7 +282,6 @@ def commit(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     table = _table_path(table)
-    pby = tuple(partition_by or ())
 
     last_err: Exception | None = None
     corrupt_err: RuntimeError | None = None
@@ -350,13 +312,6 @@ def commit(
                 f"{expected_base_version} (now at "
                 f"{prior[-1] if prior else 'empty'})"
             )
-        if prior:
-            existing = snapshot(table).partition_by
-            if existing != pby:
-                raise ValueError(
-                    f"partition_by mismatch for {table!r}: table has "
-                    f"{list(existing)}, commit requested {list(pby)}"
-                )
         if corrupt_err is not None and prior:
             # the previous attempt rolled back over a corrupt base and
             # retried to heal the transient retracted-version race —
@@ -380,6 +335,11 @@ def commit(
                 # captured at detection (last_err may since have been
                 # overwritten by an unrelated CommitConflict)
             corrupt_err = None  # healed: back to the normal path
+        # pin the base before staging: reading it also refuses a manifest
+        # an older release wrote, before anything is written
+        base = snapshot(table).files if prior else ()
+        if mode == "overwrite":
+            base = ()
         # staging name carries (pid, per-process seq): unique per WRITER,
         # not just per (version, attempt) — two concurrent writers racing
         # to the same version must never share a staging directory
@@ -388,21 +348,14 @@ def commit(
             _DATA_DIR,
             f"v{version:08d}-{os.getpid()}-{next(_STAGE_SEQ)}",
         )
-        writer = df.write.mode("error")
-        if pby:
-            writer = writer.partitionBy(*pby)
-        writer.parquet(stage)
+        df.write.mode("error").parquet(stage)
         _fsync_tree(stage)  # data durable BEFORE the manifest can be
         files = _parquet_files(stage)
-        base: tuple[str, ...] = ()
-        if mode == "append" and prior:
-            base = snapshot(table).files
         manifest = {
             "version": version,
             "mode": mode,
             "files": [*base, *files],
-            "partition_by": list(pby),
-            "schema": _read_schema(df.schema, pby),
+            "schema": df.schema.json(),
         }
         if metadata:
             manifest["metadata"] = metadata
@@ -529,7 +482,6 @@ def commit(
             version=version,
             mode=mode,
             files=tuple(manifest["files"]),
-            partition_by=pby,
             metadata=dict(metadata or {}),
             schema=manifest["schema"],
             added=tuple(files),
@@ -539,10 +491,9 @@ def commit(
 
 def compact(spark: SparkSession, table: str) -> TxSnapshot:
     """Delta's OPTIMIZE for this stand-in: rewrite the live snapshot as
-    ONE overwrite commit, collapsing the per-commit staging groups (and
+    ONE overwrite commit, collapsing the per-commit staging dirs (and
     their small files) into a single stage. Time travel to pre-compact
-    versions keeps working until ``vacuum`` reclaims them; a reader of
-    a partitioned table goes back to a single scan afterwards.
+    versions keeps working until ``vacuum`` reclaims them.
 
     Read-modify-write safety: the overwrite is pinned to the snapshot
     version it read (``expected_base_version``) — if a concurrent
@@ -556,7 +507,6 @@ def compact(spark: SparkSession, table: str) -> TxSnapshot:
         df,
         table,
         "overwrite",
-        partition_by=list(snap.partition_by) or None,
         expected_base_version=snap.version,
         metadata=snap.metadata,
     )

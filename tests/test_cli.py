@@ -109,9 +109,10 @@ def test_cli_dedup_stream(spark, tmp_path, capsys):
 
 
 def test_cli_tx_compact_and_vacuum(spark, tmp_path, capsys):
-    """`compact --tx` runs the OPTIMIZE-style txlog rewrite + optional
-    vacuum through the CLI — the maintenance loop a deployment would
-    cron against the pipeline's history tables."""
+    """`compact` on a path holding `_txlog/` runs the OPTIMIZE-style
+    txlog rewrite + optional vacuum through the CLI — the maintenance
+    loop a deployment would cron against the pipeline's history tables.
+    `--vacuum-keep` on a plain-parquet path is refused."""
     from project_crypto_data_engineering_gcp_spark.sources import tx_table as tx
 
     t = str(tmp_path / "txtbl")
@@ -120,7 +121,7 @@ def test_cli_tx_compact_and_vacuum(spark, tmp_path, capsys):
     assert (
         main(
             [
-                "compact", "--path", t, "--tx", "--vacuum-keep", "1",
+                "compact", "--path", t, "--vacuum-keep", "1",
                 # retention 0: the test's versions are seconds old and the
                 # point is that they CAN be reclaimed when no writer is live
                 "--vacuum-retention-hours", "0",
@@ -136,6 +137,12 @@ def test_cli_tx_compact_and_vacuum(spark, tmp_path, capsys):
 
     with _pytest.raises(FileNotFoundError):
         tx.read(spark, t, version=0)
+
+    plain = str(tmp_path / "plain")
+    spark.range(10).write.parquet(plain)
+    with _pytest.raises(SystemExit, match="not a txlog table"):
+        main(["compact", "--path", plain, "--vacuum-keep", "1"])
+    assert spark.read.parquet(plain).count() == 10
 
 
 def test_cli_build_lsh_index(spark, capsys):

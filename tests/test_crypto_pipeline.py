@@ -262,16 +262,12 @@ def test_pipeline_e2e_and_ledger_idempotency(
     assert appended == 0
     assert read_silver(spark, out).count() == silver_rows
 
-    # silver is partitioned by snapshot date inside the txlog staging
-    # dirs (scale: partition pruning through the manifest read)
+    # silver is unpartitioned: the snapshot date is a column, and no
+    # dt= directory sits inside the txlog staging dirs
     data_root = os.path.join(out, "silver", "assets", "data")
-    parts = {
-        p
-        for stage in os.listdir(data_root)
-        for p in os.listdir(os.path.join(data_root, stage))
-        if p.startswith("dt=")
-    }
-    assert parts, "expected dt= hive partitions inside staging dirs"
+    dirs = [d for _, subdirs, _ in os.walk(data_root) for d in subdirs]
+    assert dirs and not [d for d in dirs if d.startswith("dt=")]
+    assert read_silver(spark, out).columns[-1] == "dt"
     # ... and the append-history sinks are transactional (S5): a commit
     # log exists for silver, NOT for the overwrite serving copies
     assert os.path.isdir(os.path.join(out, "silver", "assets", "_txlog"))
@@ -912,7 +908,6 @@ def test_run_silver_refuses_a_table_without_record(spark, tmp_path):
     write_history(
         old.drop("_source_file").withColumn("dt", F.substring("data_referencia", 1, 10)),
         spath,
-        partition_by=["dt"],
     )
 
     with pytest.raises(ValueError, match="no ingest record"):

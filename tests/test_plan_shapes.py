@@ -77,8 +77,9 @@ def test_dedup_exact_partial_aggregation(spark):
 
 
 def test_silver_scan_prunes_partitions(spark, tmp_path):
-    """Date-partitioned Silver + a dt filter -> partition pruning (the
-    capability the reference's readme claims but its code never builds)."""
+    """A dt filter on Silver reaches its one parquet scan as a pushed
+    filter, where row-group statistics skip the other dates (Silver is
+    unpartitioned, as the reference writes it)."""
     from project_crypto_data_engineering_gcp_spark.plans.runner import (
         read_silver,
         run_silver,
@@ -87,11 +88,13 @@ def test_silver_scan_prunes_partitions(spark, tmp_path):
 
     landing = str(tmp_path / "landing")
     out = str(tmp_path / "out")
-    write_fixture_landing(landing)
-    run_silver(spark, f"{landing}/coincap_data_*.json", out)
+    for n_snapshots in (2, 3):  # two commits, two staging dirs
+        write_fixture_landing(landing, n_snapshots=n_snapshots)
+        run_silver(spark, f"{landing}/coincap_data_*.json", out)
     df = read_silver(spark, out).filter("dt = '2025-05-24'")
     plan = plan_of(df)
-    assert "PartitionFilters" in plan and "dt" in plan.split("PartitionFilters", 1)[1]
+    assert plan.count("FileScan parquet") == 1
+    assert "EqualTo(dt,2025-05-24)" in plan.split("PushedFilters", 1)[1][:200]
 
 
 def test_q3_broadcasts_filtered_dim(spark):

@@ -1,7 +1,8 @@
 """Guard the scripts under tools/ and the package's settings surface:
 each tools script imports cleanly; every tools script or test module
 the package, the tests, README.md or the verify skill cites exists;
-and the package reads exactly the known environment variables.
+the package reads exactly the known environment variables; and each
+CLI verb takes exactly the known options.
 
 Most of these scripts (the driver rehearsal, the sf0.1 parity sweep,
 the fuzzers, the catalog generator) are run by hand and imported by no
@@ -11,6 +12,7 @@ unnoticed until someone ran them.
 
 from __future__ import annotations
 
+import argparse
 import ast
 import importlib.util
 import re
@@ -27,6 +29,24 @@ _CITED = re.compile(r"\b(tools|tests)/(\w+)\.py")
 # the deployment settings read in session.py; a new env knob must be
 # added here on purpose
 ENV_READS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+# the options of each CLI verb (besides -h/--help); a new flag must be
+# added here on purpose
+CLI_OPTIONS = {
+    "ingest": {"--landing", "--fixture", "--api-key"},
+    "run": {"--landing", "--out"},
+    "stream": {"--landing", "--out"},
+    "dashboard": {"--out", "-n"},
+    "curate": {"--sf-dir", "--out"},
+    "compact": {
+        "--path",
+        "--target-mb",
+        "--sort-by",
+        "--vacuum-keep",
+        "--vacuum-retention-hours",
+    },
+    "build-lsh-index": {"--sf-dir", "--out"},
+    "dedup-stream": {"--landing", "--state", "--max-files-per-trigger"},
+}
 
 
 @pytest.mark.parametrize("name", SCRIPTS)
@@ -104,3 +124,16 @@ def test_package_env_reads_are_the_known_settings():
     assert reads == ENV_READS, (
         f"package env reads {sorted(reads)} != {sorted(ENV_READS)}"
     )
+
+
+def test_cli_options_are_the_known_flags():
+    from project_crypto_data_engineering_gcp_spark.__main__ import _build_parser
+
+    (verbs,) = (
+        a for a in _build_parser()._actions if isinstance(a, argparse._SubParsersAction)
+    )
+    options = {
+        verb: {s for a in p._actions for s in a.option_strings} - {"-h", "--help"}
+        for verb, p in verbs.choices.items()
+    }
+    assert options == CLI_OPTIONS

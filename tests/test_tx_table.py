@@ -9,8 +9,6 @@ import os
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from project_crypto_data_engineering_gcp_spark.sources import tx_table as tx
 
 from .conftest import dir_tree
@@ -153,39 +151,31 @@ def test_model_based_history(spark, tmp_path):
         assert _ids(tx.read(spark, t, version=v)) == sorted(expected), v
 
 
-def test_partitioned_commit_prunes_and_time_travels(spark, tmp_path):
-    """Partitioned txlog table: hive-style key=value staging layout is
-    recovered as a partition column at read, a filter on it reaches the
-    scan as a PartitionFilter (the scale contract Delta gives
-    partitioned tables), and partition_by is pinned per table."""
+def test_full_read_is_one_scan_with_pushed_filter(spark, tmp_path):
+    """Several appends read back as ONE parquet scan, not one per
+    commit; ``dt`` is an ordinary column, a filter on it reaches that
+    scan as a pushed filter, and every version still time-travels."""
     t = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(1, "2025-05-24"), (2, "2025-05-24"), (3, "2025-05-25")],
-        "id int, dt string",
-    )
-    tx.commit(df, t, "append", partition_by=["dt"])
     tx.commit(
-        spark.createDataFrame([(4, "2025-05-26")], "id int, dt string"),
+        spark.createDataFrame(
+            [(1, "2025-05-24"), (2, "2025-05-24"), (3, "2025-05-25")],
+            "id int, dt string",
+        ),
         t,
         "append",
-        partition_by=["dt"],
     )
+    for i, day in ((4, "2025-05-26"), (5, "2025-05-24")):
+        tx.commit(spark.createDataFrame([(i, day)], "id int, dt string"), t, "append")
     back = tx.read(spark, t)
-    assert set(back.columns) == {"id", "dt"}
-    assert _ids(back) == [1, 2, 3, 4]
+    assert back.columns == ["id", "dt"]
+    assert _ids(back) == [1, 2, 3, 4, 5]
     assert _ids(tx.read(spark, t, version=0)) == [1, 2, 3]
 
-    plan = (
-        back.filter("dt = '2025-05-24'")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan
-    assert "dt" in plan.split("PartitionFilters", 1)[1][:200]
-
-    with pytest.raises(ValueError, match="partition_by mismatch"):
-        tx.commit(spark.range(5), t, "append")
+    day = back.filter("dt = '2025-05-24'")
+    plan = day._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
+    assert "EqualTo(dt,2025-05-24)" in plan.split("PushedFilters", 1)[1][:200]
+    assert _ids(day) == [1, 2, 5]
 
 
 def test_merge_schema_read_across_commits(spark, tmp_path):
@@ -207,7 +197,7 @@ def test_merge_schema_read_across_commits(spark, tmp_path):
 
 def test_compact_collapses_stage_groups(spark, tmp_path):
     """compact() (Delta's OPTIMIZE) rewrites the live snapshot into one
-    staging group; contents unchanged, pre-compact versions still
+    staging dir; contents unchanged, pre-compact versions still
     time-travel until vacuumed."""
     t = str(tmp_path / "tbl")
     for lo in range(0, 6, 2):
@@ -218,13 +208,15 @@ def test_compact_collapses_stage_groups(spark, tmp_path):
             ),
             t,
             "append",
-            partition_by=["dt"],
         )
     before = tx.snapshot(t)
     snap = tx.compact(spark, t)
-    assert snap.mode == "overwrite" and snap.partition_by == ("dt",)
-    stages = {tx._stage_of(t, f) for f in snap.files}
-    assert len(stages) == 1 < len({tx._stage_of(t, f) for f in before.files})
+    assert snap.mode == "overwrite"
+    stages = {os.path.dirname(f) for f in snap.files}
+    assert len(stages) == 1 < len({os.path.dirname(f) for f in before.files})
+    (stage,) = stages
+    assert os.path.dirname(stage) == os.path.join(os.path.realpath(t), "data")
+    assert os.path.basename(stage).startswith(f"v{snap.version:08d}-")
     assert _ids(tx.read(spark, t)) == list(range(6))
     assert _ids(tx.read(spark, t, version=before.version)) == list(range(6))
 
@@ -278,41 +270,6 @@ def test_pipeline_e2e_on_txlog_version_as_of(spark, tmp_path):
     assert spark.read.parquet(serving).count() == N_ASSETS
 
 
-def test_model_based_history_partitioned(spark, tmp_path):
-    """The model-based cumulative-correctness property, partitioned
-    variant: random append/overwrite commits AGAINST A PARTITIONED
-    table must leave every version's snapshot equal to the in-memory
-    model, with the partition column surviving the per-stage basePath
-    reconstruction at every version."""
-    import random
-
-    rng = random.Random(20260815)
-    t = str(tmp_path / "tbl")
-    model: list[list[int]] = []
-    nxt = 0
-    for _ in range(6):
-        k = rng.randint(1, 4)
-        ids = list(range(nxt, nxt + k))
-        nxt += k
-        mode = rng.choice(["append", "overwrite"])
-        df = spark.createDataFrame(
-            [(i, f"2025-06-{(i % 3) + 1:02d}") for i in ids], "id int, dt string"
-        )
-        snap = tx.commit(df, t, mode, partition_by=["dt"])
-        prev = model[-1] if (model and mode == "append") else []
-        model.append([*prev, *ids])
-        assert snap.version == len(model) - 1
-        assert snap.partition_by == ("dt",)
-    for v, expected in enumerate(model):
-        back = tx.read(spark, t, version=v)
-        assert _ids(back) == sorted(expected), v
-        # partition column reconstructed correctly for every row
-        bad = back.filter(
-            back.dt != F.concat(F.lit("2025-06-0"), (back.id % 3) + 1)
-        ).count()
-        assert bad == 0, v
-
-
 def test_vacuum_retention_protects_fresh_staging(spark, tmp_path):
     """An unreferenced-but-FRESH staging dir may be an in-flight commit
     that has not linked its manifest yet — vacuum must leave it alone
@@ -350,18 +307,21 @@ def test_pin_to_an_empty_table(spark, tmp_path):
 
 
 def test_empty_first_commit_reads_as_empty_frame_of_its_schema(spark, tmp_path):
-    """A partitioned append of zero rows writes no data file; its
-    version still reads — as an empty frame of the manifest's schema —
-    and later appends build on it."""
+    """An append of zero rows still commits a version (Spark stages one
+    row-less file); it reads as an empty frame of the manifest's schema,
+    and later appends build on it. A diff with nothing added reads as
+    an empty frame of the schema too."""
     t = str(tmp_path / "tbl")
     df = spark.createDataFrame([(1, "2025-06-01")], "id int, dt string")
-    snap = tx.commit(df.limit(0), t, partition_by=["dt"], metadata={"k": 1})
-    assert snap.files == () and tx.snapshot(t).metadata == {"k": 1}
+    tx.commit(df.limit(0), t, metadata={"k": 1})
+    assert tx.snapshot(t).metadata == {"k": 1}
     empty = tx.read(spark, t)
     assert empty.count() == 0 and empty.schema == df.schema
-    tx.commit(df, t, partition_by=["dt"])
+    tx.commit(df, t)
     assert _ids(tx.read(spark, t)) == [1]
     assert tx.read_added(spark, t, 0).count() == 1
+    nothing = tx.read_added(spark, t, 1)
+    assert nothing.count() == 0 and nothing.schema == df.schema
 
 
 def test_compact_refuses_lost_update(spark, tmp_path):
@@ -397,7 +357,6 @@ def test_first_commit_refuses_a_plain_parquet_dir(spark, tmp_path):
             spark.createDataFrame([(3, "2025-06-03")], "id int, dt string"),
             t,
             "append",
-            partition_by=["dt"],
         )
     assert dir_tree(t) == before  # no _txlog/, no data/, no ledger
     assert tx._versions(t) == []
@@ -406,44 +365,31 @@ def test_first_commit_refuses_a_plain_parquet_dir(spark, tmp_path):
     assert set(back.columns) == {"id", "dt"}
 
 
-def test_table_adopted_by_an_older_release_reads_and_compacts(spark, tmp_path):
-    """An older release adopted plain-parquet tables in place: a
-    version-0 ``adopt`` manifest listing files OUTSIDE data/. Such a
-    table still reads (partition columns recovered at the table root),
-    appends, and ``compact`` moves its live rows into data/; vacuum then
-    leaves the files outside data/ on disk (a leak of files, never of
-    rows)."""
+def test_older_release_manifest_is_refused(spark, tmp_path):
+    """A manifest an older release wrote (hive-partitioned on ``dt``, or
+    without a schema) would read as one scan with ``dt`` all NULL: read
+    and commit raise instead, name the fix, and write nothing."""
     t = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "2025-06-01"), (2, "2025-06-02")], "id int, dt string"
-    ).write.partitionBy("dt").parquet(t)
-    outside = tx._parquet_files(t)
+    stage = os.path.join(t, "data", "v00000000-old")
+    df = spark.createDataFrame([(1, "2025-06-01"), (2, "2025-06-02")], "id int, dt string")
+    df.write.partitionBy("dt").parquet(stage)
+    files = tx._parquet_files(stage)
     os.makedirs(os.path.join(t, "_txlog"))
-    with open(os.path.join(t, "_txlog", "00000000.json"), "w") as fh:
-        json.dump(
-            {"version": 0, "mode": "adopt", "files": outside, "partition_by": ["dt"]},
-            fh,
-        )
-
-    back = tx.read(spark, t)
-    assert _ids(back) == [1, 2]
-    assert set(back.columns) == {"id", "dt"}
-    tx.commit(
-        spark.createDataFrame([(3, "2025-06-03")], "id int, dt string"),
-        t,
-        "append",
-        partition_by=["dt"],
-    )
-    assert _ids(tx.read(spark, t)) == [1, 2, 3]
-
-    snap = tx.compact(spark, t)
-    data_root = os.path.join(t, "data") + os.sep
-    assert snap.files and all(f.startswith(data_root) for f in snap.files)
-    deleted = tx.vacuum(t, keep_last=1, retention_seconds=0)
-    assert all(f.startswith(data_root) for f in deleted)
-    assert all(os.path.exists(f) for f in outside)
-    assert _ids(tx.read(spark, t)) == [1, 2, 3]
-    assert tx._versions(t) == [2]
+    manifest = os.path.join(t, "_txlog", "00000000.json")
+    for old in (
+        {"partition_by": ["dt"], "schema": df.schema.json()},
+        {"partition_by": []},
+    ):
+        with open(manifest, "w") as fh:
+            json.dump({"version": 0, "mode": "append", "files": files, **old}, fh)
+        before = dir_tree(t)
+        fix = "older release.*silver/assets and gold/_latest"
+        with pytest.raises(ValueError, match=fix):
+            tx.read(spark, t)
+        for mode in ("append", "overwrite"):
+            with pytest.raises(ValueError, match="older release"):
+                tx.commit(df, t, mode)
+        assert dir_tree(t) == before
 
 
 def test_read_history_never_surfaces_uncommitted_staging(spark, tmp_path):
@@ -466,8 +412,8 @@ def test_read_history_never_surfaces_uncommitted_staging(spark, tmp_path):
 
 
 def test_concurrent_commit_storm(spark, tmp_path):
-    """Commit storm: 4 threads x 3 appends each race on one partitioned
-    table. Invariants: versions come out contiguous 0..11, every commit
+    """Commit storm: 4 threads x 3 appends each race on one table.
+    Invariants: versions come out contiguous 0..11, every commit
     wins exactly one version, and the final snapshot holds every
     writer's rows exactly once (the optimistic-concurrency composition
     the protocol promises, exercised end-to-end rather than via the
@@ -487,9 +433,7 @@ def test_concurrent_commit_storm(spark, tmp_path):
                     [(i, f"2025-07-{(i % 2) + 1:02d}") for i in range(lo, lo + 5)],
                     "id int, dt string",
                 )
-                snap = tx.commit(
-                    df, t, "append", partition_by=["dt"], max_retries=20
-                )
+                snap = tx.commit(df, t, "append", max_retries=20)
                 with lock:
                     results.append(snap.version)
         except Exception as exc:  # pragma: no cover - failure reporting
@@ -654,16 +598,14 @@ def test_commit_retries_when_pinned_base_was_retracted(spark, tmp_path, monkeypa
     def poisoned(table, version=None):
         snap = real_snapshot(table, version)
         calls["n"] += 1
-        # call #1 is the partition-spec check, call #2 pins the base:
-        # poison exactly the base pin with a retracted version's view —
-        # one extra (now-nonexistent) data file
-        if calls["n"] == 2:
+        # call #1 pins the base: poison exactly that pin with a retracted
+        # version's view — one extra (now-nonexistent) data file
+        if calls["n"] == 1:
             return tx.TxSnapshot(
                 version=snap.version + 1,
                 mode="append",
                 files=snap.files
                 + (os.path.join(table, "data", "vRETRACTED", "gone.parquet"),),
-                partition_by=snap.partition_by,
             )
         return snap
 
